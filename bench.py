@@ -631,7 +631,7 @@ def _streaming_metrics(spark) -> dict:
     config (200 ms trigger / 3 source partitions —
     /root/reference/tests/basic_tests.rs:32-42)."""
     from datafusion_streams_spark.sources.kafka import kafka_like_stream
-    from datafusion_streams_spark.streaming.microbatch import run_drain_to_memory
+    from datafusion_streams_spark.streaming.microbatch import drain
 
     # (b) throughput: full micro-batch replay of events through the
     # reference pipeline (cast + length), drain-then-stop.
@@ -654,14 +654,11 @@ def _streaming_metrics(spark) -> dict:
             F.length(F.col("value").cast("string")).alias("len_value"),
         )
         t0 = time.perf_counter()
-        sink_name, _ = run_drain_to_memory(pipe, output_mode="append")
+        sink_name = drain(pipe)
         replay_runs.append(round(time.perf_counter() - t0, 3))
         # each rep's memory sink holds the full replayed table in the
         # driver: drop it so up-to-6 reps don't retain 6 copies
-        try:
-            spark.catalog.dropTempView(sink_name)
-        except Exception:
-            pass
+        spark.catalog.dropTempView(sink_name)
 
     for _ in range(3):
         _one_replay()

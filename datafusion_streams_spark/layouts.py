@@ -12,16 +12,17 @@ every rep.
 process and hands back the path on every subsequent call. Layouts are
 plain directories on local disk, so the memo is process-wide (not
 session-bound) and safe across SparkSession restarts within a process.
-The tempdirs live until process exit, like every other dfs_* fixture
-dir in this repo.
+The layout dirs live under the process scratch root (scratch.py) and
+are removed with it at process exit.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 import threading
 from collections.abc import Callable
+
+from datafusion_streams_spark.scratch import scratch_dir
 
 _LAYOUT_MEMO: dict[tuple[str, str], str] = {}
 _MEMO_LOCK = threading.Lock()
@@ -41,7 +42,7 @@ def memoized_layout(sf_dir: str, name: str, build: Callable[[str], None]) -> str
         path = _LAYOUT_MEMO.get(key)
         if path is not None and os.path.isdir(path):
             return path
-        path = tempfile.mkdtemp(prefix=f"dfs_{name}_")
+        path = scratch_dir(f"{name}_")
         build(path)
         _LAYOUT_MEMO[key] = path
         return path

@@ -168,764 +168,11 @@ def _populate() -> None:
 
 # The verification driver sweeps the registry in iteration order and hard
 # verifies (row count + schema + value hash vs the DuckDB oracle) only a
-# bounded prefix — observed cap: the first 50 entries.  Registration order
-# is import order, which groups by module and would leave whole operator
-# families outside the verified window.  VERIFIED_FIRST pins the prefix
-# explicitly and ROTATES each round.  Rounds 1-3 drove 111 of the 131
-# then-registered queries hash-green; round 4's window = every query with
-# no driver CORRECTNESS row yet (the 17 round-3 additions + the 6 round-4
-# additions), the 6 repaired/re-oracled queries (the five streaming
-# event-time queries broken by the micros fixture drift + the BLAS ANN
-# path's new ranking-only oracle), then keystones biased toward code that
-# CHANGED this round (the repartition/AQE fix touched the dedup,
-# similarity, clustering, and text pipelines) plus minimum tag-coverage
-# fillers so every operator family keeps one hash-checked representative.
-# Demoted queries stay registered — they count toward coverage and are
-# oracle-checked by the local pytest parity suite
-# (tests/test_oracle_parity.py), which sweeps EVERY registered oracle,
-# not just this prefix.
-ROTATED_IN_R4: tuple[str, ...] = (
-    # round-3 additions, never driver-checked
-    "ref_kafka_datasource_pipeline",
-    "join_full_outer",
-    "agg_unpivot",
-    "agg_approx_percentile",  # rows-only by design (GK sketch; 1%-bounded vs exact in pytest)
-    "join_fuzzy_match",
-    "scalar_bitwise_pack",
-    "events_path_analysis",
-    "events_active_users",
-    "dedup_source_overlap",
-    "embedding_int8_quantize",
-    "ann_ivf_pq",
-    "text_gopher_rules",
-    "text_domain_mix",
-    "sample_weighted",
-    "files_csv_roundtrip",
-    "files_json_roundtrip",
-    "streaming_static_join",
-    # round-4 additions
-    "udtf_token_windows",
-    "text_bm25_search",
-    "files_orc_roundtrip",
-    "dedup_rewrite_map",
-    "pipeline_token_packing",
-    "sample_quality_tiers",
-    "events_sessionize",
-    "streaming_stateful_totals",
-    "join_salted_skew",
-    "sql_recursive_date_spine",
-    "events_attribution",
-    "files_partitioned_pruning",
-    "streaming_parquet_sink",
-    "agg_histogram",
-    "streaming_checkpoint_recovery",
-    "text_seq_dedup",
-)
-
-# R5 window: 50 slots filled ENTIRELY from the never-driver-checked
-# backlog (109 after r4) plus the one new r5 registration
-# (multimodal_bmp_decode — the real-codec query the r4 verdict asked
-# for). Streaming/stateful first, then the composition suites,
-# sampling, file layouts, runtime filters, dedup, multimodal, then
-# changed-code queries (text_classifier_score / pipeline_drift_psi /
-# streaming_drift_psi / text_bpe_* were re-oracled or type-fixed this
-# round and MUST be driver-checked now). No keystones — every family
-# already has a driver-green representative from r1-r4 — and no
-# rows-only queries (agg_hll_mergeable / agg_approx_top_k stay out so
-# CORRECTNESS_r05 carries zero err rows; their accuracy is
-# pytest-bounded). Registry growth this round: exactly +1.
-ROTATED_IN_R5: tuple[str, ...] = (
-    # streaming / stateful
-    "streaming_sessionize_state",
-    "streaming_append_watermark",
-    "streaming_foreachbatch_merge",
-    "streaming_stream_left_join",
-    "streaming_stream_full_join",
-    "streaming_dedup_watermark",
-    "streaming_csv_source",
-    "streaming_avro_source",
-    "streaming_bitmap_distinct",
-    "streaming_multi_source_union",
-    "streaming_drift_psi",
-    "streaming_pysink_manifest",
-    # composition suites
-    "pipeline_curation_v3",
-    "pipeline_curation_v4",
-    "pipeline_incremental_curation",
-    "pipeline_drift_psi",
-    "pipeline_shard_shuffle",
-    "pipeline_snapshot_diff",
-    # sampling
-    "sample_group_split",
-    "sample_temperature_rebalance",
-    "sample_poisson_bootstrap",
-    "sample_importance_dsir",
-    # file layouts
-    "join_bucketed",
-    "files_merge_on_read",
-    "files_time_travel",
-    "files_avro_roundtrip",
-    "files_schema_evolution",
-    "files_compaction",
-    "files_csv_malformed",
-    "files_json_nested",
-    "layout_zorder_audit",
-    "files_pysink_manifest",
-    # runtime filters
-    "join_bloom_prefilter",
-    "join_dpp_prune",
-    # dedup
-    "dedup_bloom_prescreen",
-    "dedup_sorted_neighborhood",
-    "dedup_novelty_curve",
-    "dedup_minhash_estimate_error",
-    # multimodal (incl. the new real-codec query)
-    "multimodal_image_tiles",
-    "multimodal_dedup_bytes",
-    "multimodal_simhash_neardup",
-    "multimodal_bmp_decode",
-    # changed-code + remaining families
-    "text_classifier_score",
-    "text_bpe_merges",
-    "text_bpe_fertility",
-    "agg_heavy_hitters",
-    "audit_constraints",
-    "agg_bitmap_distinct",
-    "agg_bitmap_retention",
-    "window_gaps_islands",
-)
-
-# R6 window (r5 verdict item #1): 50 of the 60 still-never-checked
-# queries — the near-final burn-down. The two r6 scale-fixed queries
-# lead (events_peak_concurrency's two-pass distributed prefix sum and
-# events_pattern_match's month-chunked encode land driver-checked, per
-# verdict items #2/#3), then the lifecycle family, timeseries, AS-OF
-# variants, the r4 agg battery, embedding audits, and text governance.
-# Registry growth: +5 this round (files_avro_deflate,
-# files_avro_snappy, multimodal_png_decode, multimodal_wav_decode,
-# multimodal_jpeg_decode — closing the r5 verdict's avro-codec gap
-# COMPLETELY (both spec codecs, snappy via the clean-room
-# codecs/snappy.py block-format implementation) and the ENTIRE
-# image-codec gap (PNG + baseline JPEG, formerly "needs a real
-# library"), plus the audio analogue in the same clean-room
-# discipline). Every slot carries a DuckDB oracle — zero expected
-# err rows.
-ROTATED_IN_R6: tuple[str, ...] = (
-    # scale-fixed this round — must land driver-checked
-    "events_peak_concurrency",
-    "events_pattern_match",
-    # lifecycle family
-    "events_scd2_compress",
-    "events_rfm_segmentation",
-    "events_markov_transitions",
-    "events_cumulative_uniques",
-    "events_new_vs_returning",
-    "events_cohort_ltv",
-    "events_time_to_convert",
-    "events_audience_overlap",
-    "events_value_trend",
-    "events_error_rate",
-    "events_inter_arrival",
-    "events_seasonality",
-    "events_anomaly_mad",
-    "events_ewma_control",
-    "events_hysteresis_alerts",
-    "events_forecast_backtest",
-    "graph_pagerank_transitions",
-    "join_interval_overlap",
-    # timeseries
-    "timeseries_gap_fill",
-    "timeseries_ohlc_bars",
-    "timeseries_resample_interpolate",
-    # temporal AS-OF variants
-    "join_asof_forward",
-    "join_asof_nearest",
-    "join_asof_tolerance",
-    "join_point_in_time",
-    "join_market_basket",
-    # r4 agg battery
-    "agg_correlation",
-    "agg_linear_fit",
-    "agg_weighted_median",
-    "agg_skew_kurtosis",
-    "agg_min_max_by",
-    # embedding audits
-    "embedding_dim_stats",
-    "embedding_norm_audit",
-    "embedding_mrl_recall",
-    # text governance / analysis
-    "text_dataset_card",
-    "text_lang_confusion",
-    "text_source_contrast",
-    "text_readability",
-    "text_code_detect",
-    "text_perplexity_buckets",
-    "text_collocations_pmi",
-    "text_zipf_fit",
-    "text_feature_hashing",
-    "text_bigram_logprob",
-    "text_line_dedup",
-    # windows + sql surface
-    "window_moving_avg",
-    "window_equidepth_buckets",
-    "sql_lateral_topk",
-)
-
-# R7 window (r6 verdict item #1): terminal burn-down. The 13
-# never-driver-checked oracle-backed queries lead (the 5 r6 codec
-# additions + 8 older leftovers) — after this round every oracle-backed
-# query in the registry has a driver hash row (the only exceptions are
-# the 2 rows-only sketches agg_hll_mergeable / agg_approx_top_k, which
-# are uncheckable by design and pytest accuracy-bounded; they never
-# burn a slot). The next 23 slots are changed-since-last-green
-# re-verification: queries whose code or oracle changed in r6 (or is
-# touched by the r7 hardening) AFTER their latest driver-green row —
-# the canonical-greedy BPE pair first (r5-green, semantics changed r6),
-# then the boolean→BIGINT sweep (text_contamination /
-# text_repetition_filter / text_gopher_rules / join_full_outer /
-# events_sessionize and the curation suites built on them), the
-# minhash-label-memo consumers (memo hardened r7), the parallelized
-# avro/pysink trips, and the r6 multimodal cache refactor. The final
-# 14 slots refresh the OLDEST evidence: r1/r2-green keystones one per
-# family, so no green row in the registry is more than ~5 rounds
-# stale. Registry growth this round: 0 (freeze, verdict item #4).
-ROTATED_IN_R7: tuple[str, ...] = (
-    # never driver-checked, oracle-backed (13) — closes the backlog
-    "files_avro_deflate",
-    "files_avro_snappy",
-    "multimodal_png_decode",
-    "multimodal_wav_decode",
-    "multimodal_jpeg_decode",
-    "agg_mode_tiebreak",
-    "agg_string_concat_ordered",
-    "agg_grouping_id",
-    "agg_boolean_battery",
-    "join_null_safe",
-    "scalar_map_pack",
-    "scalar_regexp_pack",
-    "set_ops_all",
-    # changed after their last driver-green row (23)
-    "text_bpe_merges",          # r5-green; canonical-greedy rewrite r6
-    "text_bpe_fertility",       # r5-green; rides the same merge table
-    "text_contamination",       # r3-green; boolean→BIGINT r6
-    "text_gopher_rules",        # r4-green; boolean→BIGINT r6
-    "text_repetition_filter",   # r3-green; boolean→BIGINT r6
-    "text_unigram_logprob",     # r3-green; oracle touch-up r6
-    "text_domain_mix",          # r4-green; touch-up r6
-    "text_bm25_search",         # r3-green; lazy-broadcast totals r6
-    "dedup_rewrite_map",        # r4-green; labels join rewritten r6
-    "dedup_components",         # r2-green; minhash_labels memo r6+r7
-    "dedup_component_stats",    # r3-green; minhash_labels memo r6+r7
-    "dedup_minhash_lsh",        # r4-green; shared signature pipeline
-    "pipeline_curation",        # r2-green; curation oracle sweep r6
-    "pipeline_curation_v2",     # r3-green; boolean predicates r6
-    "pipeline_curation_v3",     # r5-green; gopher_pass predicate r6
-    "sample_importance_dsir",   # r5-green; collect()→broadcast r6
-    "join_full_outer",          # r4-green; boolean→BIGINT r6
-    "events_sessionize",        # r4-green; boolean→BIGINT r6
-    "files_avro_roundtrip",     # r5-green; 8-partition parallel r6 + avro int fix r7
-    "files_pysink_manifest",    # r5-green; parallel manifest write r6
-    "streaming_avro_source",    # r5-green; avro_py reader changed r6+r7
-    "multimodal_bmp_decode",    # r5-green; bmp bounds fix r6
-    "multimodal_simhash_neardup",  # r5-green; shared-cache refactor r6+r7
-    # oldest-green freshness keystones, one per family (14)
-    "ref_kafka_pipeline",       # r3 — Tier B reference pipeline
-    "streaming_ref_pipeline",   # r2 — Tier A streaming envelope
-    "q1_pricing_summary",       # r2 — TPC-H agg
-    "q6_revenue_forecast",      # r1 — filter/pushdown
-    "q9_product_profit",        # r2 — multi-join
-    "sql_entry_point",          # r2 — SQL surface
-    "dedup_exact",              # r2 — hash dedup
-    "dedup_simhash",            # r2 — simhash band join
-    "dedup_ngram_jaccard",      # r2 — prefix-filtered AllPairs
-    "similarity_pairs_vectorized",  # r2 — Arrow pairwise
-    "ann_topk_bruteforce",      # r2 — ANN baseline
-    "text_quality_score",       # r2 — text scoring
-    "multimodal_frame_sample",  # r2 — binary mapInPandas
-    "sample_stratified",        # r2 — sampling
-)
-
-# Broken-then-fixed (streaming ts normalization) or re-oracled this
-# round — each needs a fresh driver row; streaming_cdc_upsert has never
-# been hash-green in any round and MUST come back green now.
-REPAIRED_IN_R4: tuple[str, ...] = (
-    "streaming_tumbling_hour",
-    "streaming_session_window",
-    "streaming_sliding_window",
-    "streaming_stream_join",
-    "streaming_cdc_upsert",
-    "ann_topk_vectorized",  # ranking-only oracle since r4
-)
-
-KEYSTONES_R4: tuple[str, ...] = (
-    # code changed this round (events_stream probe / repartition fix /
-    # shared shingle cache + pair memo) — re-verify the families it
-    # touched; reference coverage rides on streaming_ref_pipeline +
-    # the rotated ref_kafka_datasource_pipeline, the components
-    # fixpoint is re-proved through the rotated dedup_rewrite_map
-    "dedup_minhash_lsh",
-    "cluster_kmeans_embeddings",
-    # minimum tag-coverage fillers (all driver-green in r1-r3)
-    "sql_in_subquery",          # sql + subquery + semi
-    "q22_sales_opportunity",    # anti + subquery
-    "join_asof",                # asof + temporal
-    "rollup_multiresolution",   # rollup
-    "multimodal_binary_meta",   # multimodal
-    "window_rank_battery",      # rank
-    "window_range_frame",       # range
-    "sort_topk_global",         # sort
-    "scalar_string_pack",       # string
-)
-
-# Kept for the historical record / older tests' imports.
-ROTATED_IN_R3: tuple[str, ...] = (
-    "sql_window_functions", "window_topk_per_group", "window_running_total",
-    "window_lag_delta", "window_range_frame", "window_distribution",
-    "events_tumbling_hour", "events_sliding_window", "events_session_window",
-    "events_retention", "events_anomaly_zscore", "dedup_component_stats",
-    "dedup_containment", "dedup_semantic_clusters", "similarity_pairs",
-    "ann_topk_vectorized", "ann_ivf_probe", "ann_pq_adc",
-    "similarity_recall_lsh", "lateral_explode_tokens", "text_pii_scrub",
-    "text_chunking", "text_dup_span_stats", "text_repetition_filter",
-    "text_contamination", "text_ngram_stats", "text_unigram_logprob",
-    "multimodal_audio_windows", "sample_deterministic", "sample_uniform_topk",
-    "sample_topk_per_stratum", "pipeline_curation_v2", "streaming_cdc_upsert",
-    "streaming_topk_users",
-)
-
-KEYSTONES_R3: tuple[str, ...] = (
-    "ref_kafka_pipeline", "filter_project_pushdown", "agg_salted_skew",
-    "join_left_semi", "join_left_anti", "join_left_outer_agg",
-    "sort_topk_global", "set_union", "scalar_string_pack",
-    "scalar_json_extract", "sql_correlated_subquery", "join_asof",
-    "rollup_multiresolution", "window_rank_battery", "events_funnel",
-    "cluster_kmeans_embeddings",
-)
-
-# R8 window (r7 verdict item #1): the stale-first rotation. 6 slots
-# lead with the queries whose code changed this round (avro decode
-# hardening + Arrow stream reads; kafka_emu Arrow batches; the
-# source-overlap chunked masks). 2 slots pin the only never-windowed
-# queries left — the rows-only sketches agg_approx_top_k /
-# agg_hll_mergeable (no oracle BY DESIGN; the driver records their row
-# counts, accuracy stays pytest-bounded — these are the window's only
-# expected non-hash rows). The remaining 42 slots are the entire
-# r1/r2-green tail (40 queries: the TPC-H pack, scalar packs,
-# agg_rollup/cube/pivot/percentiles, ann_lsh_bucketed,
-# dedup_embedding_cosine, streaming_dedup_keys, the text keystones)
-# plus the 2 oldest r3 headline keystones. After this round no driver
-# row in the registry is older than r3 — two full rotations complete.
-# Registry growth this round: 0 (freeze, verdict item #4).
-ROTATED_IN_R8: tuple[str, ...] = (
-    # changed this round (6)
-    "files_avro_roundtrip",          # avro schema-name whitelist + bounded deflate
-    "files_avro_deflate",            # bounded decompressobj inflate path
-    "files_avro_snappy",             # shared schema-parse changes
-    "streaming_avro_source",         # stream read now yields Arrow batches
-    "ref_kafka_datasource_pipeline", # kafka_emu reads now Arrow batches
-    "dedup_source_overlap",          # 63-bit chunked source masks
-    # never-windowed rows-only sketches (2) — row counts pinned
-    "agg_approx_top_k",
-    "agg_hll_mergeable",
-    # the full r1/r2-green tail (40)
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q10_returned_items",
-    "q11_important_stock",
-    "q12_priority_classes",
-    "q13_customer_distribution",
-    "q14_promo_share",
-    "q15_top_supplier",
-    "q16_parts_supplier_count",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_filter",
-    "q20_promotion_suppliers",
-    "q21_waiting_suppliers",
-    "agg_count_distinct",
-    "agg_cube",
-    "agg_percentiles",
-    "agg_pivot",
-    "agg_rollup",
-    "ann_lsh_bucketed",
-    "ann_topk_filtered",
-    "dedup_embedding_cosine",
-    "join_broadcast_dim",
-    "join_range_bands",
-    "scalar_array_pack",
-    "scalar_conditional_pack",
-    "scalar_date_pack",
-    "scalar_math_pack",
-    "set_except",
-    "set_intersect",
-    "sql_grouping_sets",
-    "streaming_dedup_keys",
-    "text_fingerprint",
-    "text_langid",
-    "text_tfidf_topterms",
-    "text_token_stats",
-    # oldest r3 headline keystones (2)
-    "window_topk_per_group",
-    "events_tumbling_hour",
-)
-
-# R9 window (r8 verdict items #1 + #2): semantics-changed-first. The 4
-# approximate sketches lead — rewritten this round from rows-only to
-# BOUND-AS-DATA oracles (exact values + within-bound flags the oracle
-# pins to literal 1), so for the first time every registered query is
-# hash-checkable and these 4 never-green rows MUST come back green.
-# Next the 20 ROUNDING_HALF_SENSITIVE conversions from r8 (exact
-# wide-integer 6-dp rounding; several additionally got {W} overflow
-# widening this round) plus q11's broadcast-total rewrite, the chunked
-# source-overlap masks, and the 4 avro queries (r8 write-path +
-# decode-fast-path) — all sweep-green but their last driver rows
-# predate the change. The remaining 20 slots drain the r3-stale tail
-# (similarity_recall_lsh first: its 1-row crossJoins got explicit
-# broadcasts this round), leaving 13 r3-stale rows for the r10 window.
-# Registry growth this round: 0 (freeze, verdict item #4).
-ROTATED_IN_R9: tuple[str, ...] = (
-    # never-green sketches, now bound-as-data oracle-backed (4)
-    "agg_approx_distinct",
-    "agg_approx_percentile",
-    "agg_approx_top_k",
-    "agg_hll_mergeable",
-    # r8 rounding conversions (20; 7 also {W}-widened this round)
-    "text_classifier_score",
-    "window_gaps_islands",
-    "events_anomaly_mad",
-    "text_unigram_logprob",
-    "text_bigram_logprob",
-    "text_lang_confusion",
-    "text_perplexity_buckets",
-    "text_domain_mix",
-    "text_bpe_fertility",
-    "dedup_novelty_curve",
-    "dedup_minhash_estimate_error",
-    "agg_heavy_hitters",
-    "agg_skew_kurtosis",
-    "events_forecast_backtest",
-    "events_audience_overlap",
-    "embedding_norm_audit",
-    "embedding_dim_stats",
-    "pipeline_token_packing",
-    "sample_temperature_rebalance",
-    "sample_importance_dsir",
-    # r8-changed plans whose driver rows predate the change (6)
-    "q11_important_stock",
-    "dedup_source_overlap",
-    "files_avro_roundtrip",
-    "files_avro_deflate",
-    "files_avro_snappy",
-    "streaming_avro_source",
-    # r3-stale drain (20; recall_lsh changed this round)
-    "similarity_recall_lsh",
-    "agg_salted_skew",
-    "ann_ivf_probe",
-    "ann_pq_adc",
-    "dedup_containment",
-    "dedup_semantic_clusters",
-    "events_anomaly_zscore",
-    "events_funnel",
-    "events_session_window",
-    "events_sliding_window",
-    "filter_project_pushdown",
-    "join_left_anti",
-    "join_left_outer_agg",
-    "join_left_semi",
-    "lateral_explode_tokens",
-    "multimodal_audio_windows",
-    "sample_deterministic",
-    "scalar_json_extract",
-    "set_union",
-    "sql_window_functions",
-)
-
-# R10 window (r9 verdict item #1, executing the plan written in r9):
-# changed-first, then the drain, then oldest-green fill. Leads with the
-# 2 queries r10 rewrote (q15/q22 now mirror q11's broadcast-total idiom
-# — the last eager 1-row .first() pulls in registered queries are
-# gone). Next the LAST 13 r3-stale driver rows; once they land green in
-# CORRECTNESS_r10 no driver row anywhere predates r4 — the drain the r9
-# verdict prescribed is complete. The remaining 35 slots are the
-# alphabetical head of the 39 r4 rows (oldest-green fill; q22 is one of
-# the 39 and leads as changed, so exactly 3 r4 stragglers —
-# udtf_token_windows, window_range_frame, window_rank_battery — rotate
-# in r11).
-# Registry growth this round: 0 (freeze, round 6 of the discipline).
-ROTATED_IN_R10: tuple[str, ...] = (
-    # changed this round (2): broadcast-total rewrite
-    "q15_top_supplier",
-    "q22_sales_opportunity",
-    # r3-stale drain, final 13
-    "events_retention",
-    "sample_topk_per_stratum",
-    "sample_uniform_topk",
-    "similarity_pairs",
-    "sql_correlated_subquery",
-    "streaming_topk_users",
-    "text_chunking",
-    "text_dup_span_stats",
-    "text_ngram_stats",
-    "text_pii_scrub",
-    "window_distribution",
-    "window_lag_delta",
-    "window_running_total",
-    # oldest-green fill (35 of the 39 r4 rows)
-    "agg_histogram",
-    "agg_unpivot",
-    "ann_ivf_pq",
-    "ann_topk_vectorized",
-    "cluster_kmeans_embeddings",
-    "embedding_int8_quantize",
-    "events_active_users",
-    "events_attribution",
-    "events_path_analysis",
-    "files_csv_roundtrip",
-    "files_json_roundtrip",
-    "files_orc_roundtrip",
-    "files_partitioned_pruning",
-    "join_asof",
-    "join_fuzzy_match",
-    "join_salted_skew",
-    "multimodal_binary_meta",
-    "rollup_multiresolution",
-    "sample_quality_tiers",
-    "sample_weighted",
-    "scalar_bitwise_pack",
-    "scalar_string_pack",
-    "sort_topk_global",
-    "sql_in_subquery",
-    "sql_recursive_date_spine",
-    "streaming_cdc_upsert",
-    "streaming_checkpoint_recovery",
-    "streaming_parquet_sink",
-    "streaming_session_window",
-    "streaming_sliding_window",
-    "streaming_stateful_totals",
-    "streaming_static_join",
-    "streaming_stream_join",
-    "streaming_tumbling_hour",
-    "text_seq_dedup",
-)
-
-# R11 window (executing the plan written above + r10 verdict item 1):
-# changed-first, then the 3 remaining r4 rows, then ALL 35 r5 rows,
-# then oldest-green fill from the alphabetical head of the 41 r6 rows.
-# Changed this round (2): events_forecast_backtest and
-# embedding_dim_stats — their round6_micro Spark exprs and oracle SQL
-# both gained the structural domain guard (functions._micro_sql), so
-# the driver re-hashes the guarded idiom first. After this window
-# lands green, no driver row anywhere predates r6 and the steady-state
-# refresh period (~6 rounds, see COVERAGE.md) holds.
-# Registry growth this round: 0 (freeze, round 7 of the discipline).
-ROTATED_IN_R11: tuple[str, ...] = (
-    # changed this round (2): structural round6 domain guard
-    "events_forecast_backtest",
-    "embedding_dim_stats",
-    # the last 3 r4 rows
-    "udtf_token_windows",
-    "window_range_frame",
-    "window_rank_battery",
-    # all 35 r5 rows (alphabetical)
-    "agg_bitmap_distinct",
-    "agg_bitmap_retention",
-    "audit_constraints",
-    "dedup_bloom_prescreen",
-    "dedup_sorted_neighborhood",
-    "files_compaction",
-    "files_csv_malformed",
-    "files_json_nested",
-    "files_merge_on_read",
-    "files_schema_evolution",
-    "files_time_travel",
-    "join_bloom_prefilter",
-    "join_bucketed",
-    "join_dpp_prune",
-    "layout_zorder_audit",
-    "multimodal_dedup_bytes",
-    "multimodal_image_tiles",
-    "pipeline_curation_v4",
-    "pipeline_drift_psi",
-    "pipeline_incremental_curation",
-    "pipeline_shard_shuffle",
-    "pipeline_snapshot_diff",
-    "sample_group_split",
-    "sample_poisson_bootstrap",
-    "streaming_append_watermark",
-    "streaming_bitmap_distinct",
-    "streaming_csv_source",
-    "streaming_dedup_watermark",
-    "streaming_drift_psi",
-    "streaming_foreachbatch_merge",
-    "streaming_multi_source_union",
-    "streaming_pysink_manifest",
-    "streaming_sessionize_state",
-    "streaming_stream_full_join",
-    "streaming_stream_left_join",
-    # oldest-green fill: alphabetical head of the 41 r6 rows
-    "agg_correlation",
-    "agg_linear_fit",
-    "agg_min_max_by",
-    "agg_weighted_median",
-    "embedding_mrl_recall",
-    "events_cohort_ltv",
-    "events_cumulative_uniques",
-    "events_error_rate",
-    "events_ewma_control",
-    "events_hysteresis_alerts",
-)
-
-# r13 window (executes the plan written above + r12 verdict item 2):
-# lead with the 5 queries r13 changes — the components fixpoint's
-# pointer-doubling round now caches the propagation relation so both
-# doubling legs read one execution (dedup.min_label_components, r12
-# ADVICE; same fixpoint, but the driver re-hashes every label consumer
-# first) and streaming_sessionize_state's pipeline construction moved
-# into the shared sessionize_updates helper (byte-identical plan; the
-# sink-isolated scale probe now drains the same builder) — then ALL 24
-# remaining r7 rows, then oldest-green fill from the alphabetical head
-# of the 40 r8 rows. After this window lands green, no driver row
-# anywhere predates r8 and the 6-round refresh period (COVERAGE.md)
-# holds exactly.
-# Registry growth this round: 0 (freeze, round 9 of the discipline).
-ROTATED_IN_R13: tuple[str, ...] = (
-    # changed this round (5)
-    "dedup_components",
-    "dedup_component_stats",
-    "dedup_rewrite_map",
-    "dedup_embedding_cosine",
-    "streaming_sessionize_state",
-    # all 24 remaining r7 rows (alphabetical)
-    "multimodal_jpeg_decode",
-    "multimodal_png_decode",
-    "multimodal_simhash_neardup",
-    "multimodal_wav_decode",
-    "pipeline_curation",
-    "pipeline_curation_v2",
-    "pipeline_curation_v3",
-    "q1_pricing_summary",
-    "q6_revenue_forecast",
-    "q9_product_profit",
-    "ref_kafka_pipeline",
-    "sample_stratified",
-    "scalar_map_pack",
-    "scalar_regexp_pack",
-    "set_ops_all",
-    "similarity_pairs_vectorized",
-    "sql_entry_point",
-    "streaming_ref_pipeline",
-    "text_bm25_search",
-    "text_bpe_merges",
-    "text_contamination",
-    "text_gopher_rules",
-    "text_quality_score",
-    "text_repetition_filter",
-    # oldest-green fill: alphabetical head of the 40 r8 rows (21)
-    "agg_count_distinct",
-    "agg_cube",
-    "agg_percentiles",
-    "agg_pivot",
-    "agg_rollup",
-    "ann_lsh_bucketed",
-    "ann_topk_filtered",
-    "events_tumbling_hour",
-    "join_broadcast_dim",
-    "join_range_bands",
-    "q10_returned_items",
-    "q12_priority_classes",
-    "q13_customer_distribution",
-    "q14_promo_share",
-    "q16_parts_supplier_count",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_filter",
-    "q20_promotion_suppliers",
-    "q21_waiting_suppliers",
-    "q2_min_cost_supplier",
-)
-
-# r14 window (executes the plan written above, verbatim): r14 changed
-# NO query code (the round's edits are bench/tooling — quiet-bench gate
-# hygiene, the scale-probe calibration sextet, and the HEADLINE print
-# priority — none touch a plan or a result), so the changed-first slot
-# count is 0 and the window is pure rotation: all 19 remaining r8 rows
-# (q3_shipping_priority onward — the r8 drain completes), then
-# oldest-green fill from the alphabetical head of the 48 r9 rows (31).
-# After this window lands green, no driver row anywhere predates r9 and
-# the 6-round refresh period (COVERAGE.md) holds exactly.
-# Registry growth this round: 0 (freeze, round 10 of the discipline).
-ROTATED_IN_R14: tuple[str, ...] = (
-    # all 19 remaining r8 rows (alphabetical)
-    "q3_shipping_priority",
-    "q4_order_priority",
-    "q5_local_supplier_volume",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "ref_kafka_datasource_pipeline",
-    "scalar_array_pack",
-    "scalar_conditional_pack",
-    "scalar_date_pack",
-    "scalar_math_pack",
-    "set_except",
-    "set_intersect",
-    "sql_grouping_sets",
-    "streaming_dedup_keys",
-    "text_fingerprint",
-    "text_langid",
-    "text_tfidf_topterms",
-    "text_token_stats",
-    "window_topk_per_group",
-    # oldest-green fill: alphabetical head of the 48 r9 rows (31)
-    "agg_approx_distinct",
-    "agg_approx_percentile",
-    "agg_approx_top_k",
-    "agg_heavy_hitters",
-    "agg_hll_mergeable",
-    "agg_salted_skew",
-    "agg_skew_kurtosis",
-    "ann_ivf_probe",
-    "ann_pq_adc",
-    "dedup_containment",
-    "dedup_minhash_estimate_error",
-    "dedup_novelty_curve",
-    "dedup_semantic_clusters",
-    "dedup_source_overlap",
-    "embedding_norm_audit",
-    "events_anomaly_mad",
-    "events_anomaly_zscore",
-    "events_audience_overlap",
-    "events_funnel",
-    "events_session_window",
-    "events_sliding_window",
-    "files_avro_deflate",
-    "files_avro_roundtrip",
-    "files_avro_snappy",
-    "filter_project_pushdown",
-    "join_left_anti",
-    "join_left_outer_agg",
-    "join_left_semi",
-    "lateral_explode_tokens",
-    "multimodal_audio_windows",
-    "pipeline_token_packing",
-)
-
-# r15 window (steady state, executing the plan recorded above at the
-# r14 close): r15 again changed NO query code (the round's edits are
-# the quiet-bench ADVICE hardening, tools/bench_diff.py, and PLANS.md
-# capture-order determinism — none touch a plan or a result), so the
-# changed-first slot count is 0 and the window is pure rotation: all
-# 17 remaining r9 rows (q11_important_stock onward — the r9 drain
-# completes), then oldest-green fill from the alphabetical head of the
-# 50 r10 rows (33). After this window lands green, no driver row
-# anywhere predates r10 and the 6-round refresh period (COVERAGE.md)
-# holds exactly.
-# Registry growth this round: 0 (freeze, round 11 of the discipline).
-ROTATED_IN_R15: tuple[str, ...] = (
-    # all 17 remaining r9 rows (alphabetical)
+# bounded prefix: the first 50 entries. Registration order is import order,
+# which groups by module, so VERIFIED_FIRST pins the prefix explicitly.
+# Queries outside it stay oracle-checked by tests/test_oracle_parity.py,
+# which sweeps every registered oracle.
+VERIFIED_FIRST: tuple[str, ...] = (
     "q11_important_stock",
     "sample_deterministic",
     "sample_importance_dsir",
@@ -943,7 +190,6 @@ ROTATED_IN_R15: tuple[str, ...] = (
     "text_perplexity_buckets",
     "text_unigram_logprob",
     "window_gaps_islands",
-    # oldest-green fill: alphabetical head of the 50 r10 rows (33)
     "agg_histogram",
     "agg_unpivot",
     "ann_ivf_pq",
@@ -978,11 +224,6 @@ ROTATED_IN_R15: tuple[str, ...] = (
     "sql_recursive_date_spine",
     "streaming_cdc_upsert",
 )
-
-# r16 window plan (steady state): lead with anything r16 changes, then
-# the remaining 17 r10 rows (streaming_checkpoint_recovery onward),
-# then oldest-green fill from the alphabetical head of the r11 rows.
-VERIFIED_FIRST: tuple[str, ...] = ROTATED_IN_R15
 
 
 def _prioritize() -> None:

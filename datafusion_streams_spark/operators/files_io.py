@@ -11,18 +11,18 @@ nothing (quoting, date formatting, float text round-trip).
 
 Scale posture: format conversion is map-only (one task per file split,
 no shuffle); the verification aggregate's single exchange carries the
-group keys only. Temp dirs are per-call (safe to re-run in a session).
+group keys only. Output dirs are per-call under the process scratch
+root (safe to re-run in a session).
 """
 
 from __future__ import annotations
-
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datafusion_streams_spark.functions import dec, dsum
 from datafusion_streams_spark.operators import query
+from datafusion_streams_spark.scratch import scratch_dir
 
 # o_note is synthesized WITH embedded commas and double quotes to force
 # the CSV writer through its quoting/escaping path; o_orderdate
@@ -79,7 +79,7 @@ def files_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """parquet -> CSV sink -> CSV source (explicit schema, header,
     default quoting) -> verification aggregate. Checks the full CSV
     dialect path: comma-field quoting, date formatting, float text."""
-    out = tempfile.mkdtemp(prefix="dfs_csv_")
+    out = scratch_dir("csv_")
     _orders_subset(spark, sf_dir).write.mode("overwrite").option("header", "true").csv(out)
     back = spark.read.schema(_ORDERS_COLS).option("header", "true").csv(out)
     return _verify_agg(back)
@@ -90,7 +90,7 @@ def files_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """parquet -> JSON-lines sink -> JSON source (explicit schema) ->
     verification aggregate. Checks string escaping, ISO date text, and
     double round-trip through JSON number literals."""
-    out = tempfile.mkdtemp(prefix="dfs_json_")
+    out = scratch_dir("json_")
     _orders_subset(spark, sf_dir).write.mode("overwrite").json(out)
     back = spark.read.schema(_ORDERS_COLS).json(out)
     return _verify_agg(back)
@@ -109,7 +109,7 @@ def files_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORC reader otherwise surfaces DATE as TIMESTAMP under some
     reader/writer config combinations, and the explicit schema pins
     the round-trip contract to the column types under test."""
-    out = tempfile.mkdtemp(prefix="dfs_orc_")
+    out = scratch_dir("orc_")
     _orders_subset(spark, sf_dir).write.mode("overwrite").orc(out)
     back = spark.read.schema(_ORDERS_COLS).orc(out)
     return _verify_agg(back)
@@ -190,7 +190,7 @@ def files_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer-only work at planning time; the scan itself stays map-only.
     """
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = tempfile.mkdtemp(prefix="dfs_evo_")
+    out = scratch_dir("evo_")
     docs.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", "source", "n_chars"
     ).write.mode("overwrite").parquet(f"{out}/gen=1")
@@ -251,7 +251,7 @@ def files_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).repartition(64).write.mode("overwrite").parquet(path)
 
     out_small = memoized_layout(sf_dir, "small_orders", _build)
-    out_compact = tempfile.mkdtemp(prefix="dfs_compact_")
+    out_compact = scratch_dir("compact_")
     small = spark.read.parquet(out_small)
     total_bytes = sum(
         os.path.getsize(os.path.join(out_small, f))
@@ -310,7 +310,7 @@ def files_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_totalprice").cast("string"),
         )
     )
-    out = tempfile.mkdtemp(prefix="dfs_malformed_")
+    out = scratch_dir("malformed_")
     o.select(line.alias("value")).write.mode("overwrite").text(out)
     # CSV column pruning must be OFF for corrupt-record detection to see
     # under-length rows when a downstream aggregate prunes the parse to a
@@ -378,7 +378,7 @@ def files_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(F.col("o_totalprice")).alias("amounts"),
         )
     )
-    out = tempfile.mkdtemp(prefix="dfs_json_nested_")
+    out = scratch_dir("json_nested_")
     o.select(doc.alias("value")).write.mode("overwrite").text(out)
     back = spark.read.schema(
         "o_orderkey LONG, meta STRUCT<status: STRING, priority: STRING>, amounts ARRAY<DOUBLE>"
@@ -503,7 +503,7 @@ def files_pysink_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_manifest_sink(spark)
-    out = tempfile.mkdtemp(prefix="dfs_pysink_")
+    out = scratch_dir("pysink_")
     # repartition: same single-partition fixture effect as the avro
     # round trips — 8 ways keeps the per-task part writes (and the
     # read of the resulting part files) parallel
@@ -541,29 +541,17 @@ def streaming_pysink_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match the batch oracle over the full fixture: no duplicated,
     no lost, no uncommitted rows — whatever the micro-batch split was.
     """
-    import tempfile as _tf
-
     from datafusion_streams_spark.sources.kafka import events_stream
     from datafusion_streams_spark.sources.pysink import (
         manifest_files,
         register_manifest_sink,
     )
+    from datafusion_streams_spark.streaming.microbatch import drain
 
     register_manifest_sink(spark)
-    out = _tf.mkdtemp(prefix="dfs_pysink_s_")
-    ckpt = _tf.mkdtemp(prefix="dfs_pysink_ckpt_")
+    out = scratch_dir("pysink_s_")
     ev = events_stream(spark, sf_dir).select("event_id", "user_id", "event_type")
-    q = (
-        ev.writeStream.format("manifest_sink")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    from datafusion_streams_spark.streaming.microbatch import log_executed_plan
-
-    log_executed_plan(q)
+    drain(ev, ("manifest_sink", out), timeout_sec=300)
     back = spark.read.parquet(*manifest_files(out))
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -598,7 +586,7 @@ def files_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_streams_spark.sources.avro_py import register_avro_py
 
     register_avro_py(spark)
-    out = tempfile.mkdtemp(prefix="dfs_avro_")
+    out = scratch_dir("avro_")
     # repartition: the single-file fixture scan is ONE partition, which
     # would serialize the pure-Python encode into one task and produce
     # one container file (one read partition). A real table arrives
@@ -628,7 +616,7 @@ def files_avro_deflate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_streams_spark.sources.avro_py import register_avro_py
 
     register_avro_py(spark)
-    out = tempfile.mkdtemp(prefix="dfs_avro_defl_")
+    out = scratch_dir("avro_defl_")
     _orders_subset(spark, sf_dir).repartition(8).write.format("avro_py").option(
         "path", out
     ).option("codec", "deflate").mode("append").save()
@@ -659,7 +647,7 @@ def files_avro_snappy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_streams_spark.sources.avro_py import register_avro_py
 
     register_avro_py(spark)
-    out = tempfile.mkdtemp(prefix="dfs_avro_snap_")
+    out = scratch_dir("avro_snap_")
     _orders_subset(spark, sf_dir).repartition(8).write.format("avro_py").option(
         "path", out
     ).option("codec", "snappy").mode("append").save()

@@ -1,2 +1,2 @@
-"""Structured-Streaming layer: micro-batch runners mirroring the
+"""Structured-Streaming layer: the micro-batch drain runner mirroring the
 reference's execution semantics, plus streaming query registrations."""

@@ -1,4 +1,4 @@
-"""Micro-batch runners mirroring the reference's execution semantics.
+"""The micro-batch drain runner, mirroring the reference's execution semantics.
 
 Reference semantics -> Spark mapping (SURVEY.md §4.2):
   1. batch closes on min(time_window, batch_size rows)
@@ -19,28 +19,40 @@ implement.
 
 from __future__ import annotations
 
-import tempfile
+import shutil
+import time
 import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from datafusion_streams_spark.scratch import scratch_dir
+
 # Opt-in executed-plan capture for the duplicated-shuffle audit
 # (tools/reuse_audit.py). Batch queries expose their executed plan via
 # queryExecution(); a streaming query's per-trigger physical plan is
 # only reachable from the StreamingQuery handle, which the registered
-# query functions do not return — so the shared runners (and the three
-# inline writeStream sites in streaming/queries.py) log it here when a
+# query functions do not return — so drain() logs it here when a
 # caller installs a list. None (the default) keeps the hot path free:
 # no JVM round trip per run.
 PLAN_LOG: list[str] | None = None
 
-# Opt-in per-trigger progress capture (r10 verdict item 3: the
-# stateful-streaming scale probe needs batchDuration / numInputRows per
-# micro-batch). Same contract as PLAN_LOG: None keeps the hot path
-# free; a probe installs a list and reads StreamingQueryProgress dicts.
+# Opt-in per-trigger progress capture (the stateful-streaming scale
+# probe needs batchDuration / numInputRows per micro-batch). Same
+# contract as PLAN_LOG: None keeps the hot path free; a probe installs
+# a list and reads StreamingQueryProgress dicts.
 PROGRESS_LOG: list[dict] | None = None
+
+# Stateful operators' shuffle width (= state store instance count,
+# fixed for the query's lifetime at first start). State volume scales
+# with distinct groups, not input rows, and each state store instance
+# costs per-trigger setup/commit, which dominates small triggers
+# (measured ~0.5 s/trigger at 32 stores vs 8 locally).
+STATE_PARTITIONS = "8"
+
+# Trigger cadence when a caller predicate decides completion.
+UNTIL_TRIGGER = "100 milliseconds"
 
 
 def log_executed_plan(q: StreamingQuery) -> None:
@@ -58,7 +70,7 @@ def log_executed_plan(q: StreamingQuery) -> None:
             # "No physical plan. Waiting for data." paths raise on some
             # accessors. Log a SENTINEL instead of silently passing so
             # the reuse audit can count capture gaps per query rather
-            # than under-covering while reporting clean (r10 ADVICE).
+            # than under-covering while reporting clean.
             PLAN_LOG.append(f"PLAN_UNAVAILABLE: {type(e).__name__}: {e}")
     if PROGRESS_LOG is not None:
         try:
@@ -69,148 +81,95 @@ def log_executed_plan(q: StreamingQuery) -> None:
             )
 
 
-def run_drain_to_memory(
-    df: DataFrame,
-    output_mode: str = "append",
-    timeout_sec: int = 120,
-    state_partitions: int | None = None,
-) -> tuple[str, StreamingQuery]:
-    """Drain-then-stop (reference EOF mode, A4): process everything
-    available, write to an in-memory table, stop. Returns the memory
-    table name; read results with ``spark.table(name)``.
+def _finished(
+    spark: SparkSession,
+    q: StreamingQuery,
+    until: Callable[[SparkSession, str], bool] | None,
+    timeout_sec: float,
+) -> bool:
+    """Wait for the drain; False when the deadline passes first."""
+    if until is None:
+        return q.awaitTermination(timeout_sec)  # raises if the query failed
+    deadline = time.monotonic() + timeout_sec
+    while q.isActive and time.monotonic() < deadline:
+        if until(spark, q.name):
+            return True
+        time.sleep(0.2)
+    if q.exception() is not None:
+        raise q.exception()
+    return False
 
-    ``state_partitions`` sizes the stateful operators' shuffle (= state
-    store instance count, fixed for the query's lifetime at first
-    start). State volume scales with DISTINCT GROUPS, not input rows —
-    a windowed agg over 100 TB with a few thousand active windows still
-    carries tiny state — so callers size this to their keyspace instead
-    of inheriting the input-sized session default; each state store
-    instance costs per-trigger setup/commit, which dominates small
-    triggers (measured ~0.5 s/trigger at 32 stores vs 8 locally).
+
+def drain(
+    df: DataFrame,
+    sink: Callable[[DataFrame, int], None] | tuple[str, str] | None = None,
+    output_mode: str = "append",
+    timeout_sec: float = 120,
+    until: Callable[[SparkSession, str], bool] | None = None,
+) -> str:
+    """Drain-then-stop (reference EOF mode, A4): run ``df`` to
+    completion into ``sink`` and return the query name, which for the
+    default memory sink is the table to read with ``spark.table``.
+
+    ``sink`` is None (an in-memory table), a ``foreachBatch`` callable
+    — the programmatic sink the reference's test loop emulates by
+    iterating ``execute_stream`` batches (its
+    `tests/basic_tests.rs:63-72`) — or a ``(format, path)`` pair.
+    ``output_mode`` is validated against the plan's stateful operators
+    for every sink, foreachBatch included.
+
+    Without ``until`` the query runs under Trigger.AvailableNow and
+    stops on its own. ``until(spark, name)`` instead drives a real
+    processing-time trigger loop until the predicate holds, for
+    sources that do not support AvailableNow (a Python
+    DataSourceStreamReader falls back to one batch under it, ignoring
+    its per-trigger limits).
+
+    Fails loudly: raises on timeout, on a predicate that never holds
+    and on a failed query, and never hands back a partial memory
+    table. On every exit path the query is stopped and its checkpoint
+    deleted; a memory table outlives a successful drain until the
+    caller drops it, because the lazy result reads it.
     """
     spark = df.sparkSession
-    prev = None
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        name = f"mb_{uuid.uuid4().hex[:12]}"
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dfs_ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        # the conf is captured at query start; restore immediately
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination(timeout_sec)
-    log_executed_plan(q)
-    return name, q
-
-
-def run_microbatch(
-    df: DataFrame,
-    batch_fn: Callable[[DataFrame, int], None],
-    trigger_interval: str | None = None,
-    available_now: bool = True,
-    timeout_sec: int = 120,
-    output_mode: str | None = None,
-    state_partitions: int | None = None,
-) -> StreamingQuery:
-    """foreachBatch runner — the programmatic sink the reference's test
-    loop emulates by iterating ``execute_stream`` batches
-    (`/root/reference/tests/basic_tests.rs:63-72`).
-
-    ``output_mode`` must be set (to "update") when the plan contains an
-    update-mode stateful operator — the UnsupportedOperationChecker
-    validates the operator against the SINK's mode, and foreachBatch
-    defaults to append. ``state_partitions`` sizes the state-store
-    shuffle exactly as in run_drain_to_memory (captured at query start,
-    restored immediately)."""
-    spark = df.sparkSession
-    prev = None
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        writer = df.writeStream.foreachBatch(batch_fn).option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="dfs_ckpt_")
-        )
-        if output_mode is not None:
-            writer = writer.outputMode(output_mode)
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif trigger_interval:
-            writer = writer.trigger(processingTime=trigger_interval)
-        q = writer.start()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination(timeout_sec)
-    log_executed_plan(q)
-    return q
-
-
-def rate_micro_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Unbounded test stream (rate source) for trigger/backpressure tests
-    — stands in for a live Kafka topic in broker-free environments."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-        .load()
+    name = f"mb_{uuid.uuid4().hex[:12]}"
+    ckpt = scratch_dir("ckpt_")
+    writer = (
+        df.writeStream.queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
     )
+    if sink is None:
+        writer = writer.format("memory")
+    elif callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        fmt, path = sink
+        writer = writer.format(fmt).option("path", path)
+    if until is None:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=UNTIL_TRIGGER)
 
-
-def run_drain_until(
-    df: DataFrame,
-    done: Callable[[SparkSession, str], bool],
-    output_mode: str = "complete",
-    trigger_interval: str = "100 milliseconds",
-    timeout_sec: int = 120,
-    state_partitions: int | None = None,
-) -> tuple[str, StreamingQuery]:
-    """Drain with a REAL processing-time trigger loop until a caller
-    predicate observes completion, then stop — for sources that do not
-    support Trigger.AvailableNow (Python DataSourceStreamReader falls
-    back to single-batch under it, silently ignoring per-trigger
-    limits). This is the closest Spark mapping of the reference's
-    drain-then-stop EOF loop for a genuinely rate-limited source: the
-    engine replans micro-batches at the trigger cadence and the
-    caller decides when the stream has caught up (e.g. all input rows
-    visible in the sink)."""
-    import time as _time
-
-    spark = df.sparkSession
-    prev = None
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    q = None
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        name = f"mb_{uuid.uuid4().hex[:12]}"
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="dfs_ckpt_"))
-            .trigger(processingTime=trigger_interval)
-            .start()
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    deadline = _time.monotonic() + timeout_sec
-    while _time.monotonic() < deadline:
+        # the conf is captured at query start; restore immediately
+        spark.conf.set("spark.sql.shuffle.partitions", STATE_PARTITIONS)
         try:
-            if done(spark, name):
-                break
-        except Exception:
-            pass  # sink table not materialized yet
-        _time.sleep(0.2)
-    q.stop()
-    q.awaitTermination(timeout_sec)
+            q = writer.start()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if not _finished(spark, q, until, timeout_sec):
+            what = "until predicate did not hold" if until else "drain did not finish"
+            raise TimeoutError(f"streaming query {name}: {what} within {timeout_sec} s")
+    except BaseException:
+        if sink is None:
+            spark.catalog.dropTempView(name)  # never hand back a partial table
+        raise
+    finally:
+        if q is not None:
+            q.stop()
+        shutil.rmtree(ckpt, ignore_errors=True)
     log_executed_plan(q)
-    return name, q
+    return name

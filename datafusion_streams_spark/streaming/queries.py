@@ -17,7 +17,8 @@ from datafusion_streams_spark.operators import query
 from datafusion_streams_spark.operators.reference import _REF_PIPELINE_ORACLE
 from datafusion_streams_spark.operators.windows import _SESSION_ORACLE, _SLIDING_ORACLE, _TUMBLING_ORACLE
 from datafusion_streams_spark.sources.kafka import events_stream, kafka_like_stream
-from datafusion_streams_spark.streaming.microbatch import log_executed_plan, run_drain_to_memory
+from datafusion_streams_spark.scratch import scratch_dir
+from datafusion_streams_spark.streaming.microbatch import drain
 
 
 @query(
@@ -37,8 +38,7 @@ def streaming_ref_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").cast("string").alias("value"),
         F.length(F.col("value").cast("string")).cast("long").alias("len_value"),
     )
-    name, _ = run_drain_to_memory(out, output_mode="append")
-    return spark.table(name)
+    return spark.table(drain(out, output_mode="append"))
 
 
 @query(
@@ -66,8 +66,7 @@ def streaming_tumbling_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    name, _ = run_drain_to_memory(agg, output_mode="complete", state_partitions=8)
-    return spark.table(name)
+    return spark.table(drain(agg, output_mode="complete"))
 
 
 @query(
@@ -102,8 +101,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    name, _ = run_drain_to_memory(agg, output_mode="complete", state_partitions=8)
-    return spark.table(name)
+    return spark.table(drain(agg, output_mode="complete"))
 
 
 @query(
@@ -132,8 +130,7 @@ def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    name, _ = run_drain_to_memory(agg, output_mode="complete", state_partitions=8)
-    return spark.table(name)
+    return spark.table(drain(agg, output_mode="complete"))
 
 
 _STREAM_JOIN_ORACLE = """
@@ -194,8 +191,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v_ts").alias("view_ts"),
         F.col("p_ts").alias("purchase_ts"),
     )
-    name, _ = run_drain_to_memory(joined, output_mode="append", state_partitions=8)
-    return spark.table(name)
+    return spark.table(drain(joined, output_mode="append"))
 
 
 _STREAM_DEDUP_ORACLE = """
@@ -222,8 +218,7 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = events_stream(spark, sf_dir)
     dd = ev.select("user_id", "event_type").dropDuplicates(["user_id", "event_type"])
-    name, _ = run_drain_to_memory(dd, output_mode="append", state_partitions=8)
-    return spark.table(name)
+    return spark.table(drain(dd, output_mode="append"))
 
 
 _CDC_UPSERT_ORACLE = """
@@ -264,8 +259,7 @@ def streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max_by(F.col("value"), ordkey).alias("last_value"),
         F.count(F.lit(1)).alias("n_changes"),
     )
-    name, _ = run_drain_to_memory(latest, output_mode="complete", state_partitions=8)
-    return spark.table(name)
+    return spark.table(drain(latest, output_mode="complete"))
 
 
 _STREAM_TOPK_ORACLE = """
@@ -298,8 +292,7 @@ def streaming_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsum("value").alias("total_value"),
     )
     top = agg.orderBy(F.desc("total_value"), "user_id").limit(10)
-    name, _ = run_drain_to_memory(top, output_mode="complete", state_partitions=8)
-    return spark.table(name)
+    return spark.table(drain(top, output_mode="complete"))
 
 
 _STREAM_STATIC_ORACLE = """
@@ -340,8 +333,7 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.groupBy("event_type", "c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_events"), dsum("value").alias("total_value")
     )
-    name, _ = run_drain_to_memory(agg, output_mode="complete", state_partitions=8)
-    return spark.table(name)
+    return spark.table(drain(agg, output_mode="complete"))
 
 
 _STATEFUL_TOTALS_ORACLE = """
@@ -396,8 +388,7 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf="NoTimeout",
     )
-    name, _ = run_drain_to_memory(updates, output_mode="update", state_partitions=8)
-    emitted = spark.table(name)
+    emitted = spark.table(drain(updates, output_mode="update"))
     final = F.max_by(F.struct("n_events", "total_cents"), F.col("n_events")).alias("f")
     return (
         emitted.groupBy("user_id")
@@ -433,21 +424,9 @@ def streaming_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     readers see only committed batches. State: none (append mode,
     stateless projection).
     """
-    import tempfile
-
     ev = events_stream(spark, sf_dir).select("event_type", "value")
-    out = tempfile.mkdtemp(prefix="dfs_stream_pq_")
-    ckpt = tempfile.mkdtemp(prefix="dfs_stream_pq_ckpt_")
-    q = (
-        ev.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    log_executed_plan(q)
+    out = scratch_dir("stream_pq_")
+    drain(ev, ("parquet", out))
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -476,12 +455,11 @@ def streaming_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame
     the exactly-once upgrade documented in SURVEY §4.2 — here the
     driver verifies it, not just pytest.
     """
-    import tempfile
     import time as _time
 
-    src = tempfile.mkdtemp(prefix="dfs_ckpt_src_")
-    out = tempfile.mkdtemp(prefix="dfs_ckpt_out_")
-    ckpt = tempfile.mkdtemp(prefix="dfs_ckpt_log_")
+    src = scratch_dir("ckpt_src_")
+    out = scratch_dir("ckpt_out_")
+    ckpt = scratch_dir("ckpt_log_")
     # split the fixture into 4 files -> 4 micro-batches at 1 file/trigger
     from datafusion_streams_spark.catalog import load_events
 
@@ -512,8 +490,11 @@ def streaming_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame
         _time.sleep(0.05)
     q1.stop()
     q2 = start()
-    q2.awaitTermination(120)
-    log_executed_plan(q2)
+    try:
+        if not q2.awaitTermination(120):
+            raise TimeoutError("checkpoint recovery: resumed drain did not finish within 120 s")
+    finally:
+        q2.stop()
 
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(
@@ -671,8 +652,7 @@ def streaming_sessionize_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     million interpreted iterations.
     """
     updates = sessionize_updates(spark, sf_dir)
-    name, _ = run_drain_to_memory(updates, output_mode="update", state_partitions=8)
-    emitted = spark.table(name)
+    emitted = spark.table(drain(updates, output_mode="update"))
     final = F.max_by(
         F.struct("n_events", "s_start_us", "s_end_us"), F.col("n_events")
     ).alias("f")
@@ -735,8 +715,7 @@ def streaming_append_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_events",
     )
-    name, _ = run_drain_to_memory(out, output_mode="append")
-    return spark.table(name)
+    return spark.table(drain(out, output_mode="append"))
 
 
 @query(
@@ -763,9 +742,7 @@ def streaming_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     one full-outer join (with a real MERGE + clustered table this
     prunes to matching files); nothing is ever collected.
     """
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="dfs_merge_")
+    base = scratch_dir("merge_")
     state = {"dir": None}
     ordkey = F.struct(F.col("ts"), F.col("event_id"))
 
@@ -817,14 +794,7 @@ def streaming_foreachbatch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir).select(
         "user_id", "ts", "event_id", "event_type", "value"
     )
-    q = (
-        ev.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="dfs_merge_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    log_executed_plan(q)
+    drain(ev, apply_batch)
     final = spark.read.parquet(state["dir"])
     return final.select(
         "user_id", "last_event_type", "last_ts", "last_value", "n_changes"
@@ -906,8 +876,7 @@ def streaming_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v_id").alias("view_id"),
         F.col("p_id").alias("purchase_id"),
     )
-    name, _ = run_drain_to_memory(joined, output_mode="append", state_partitions=8)
-    return spark.table(name)
+    return spark.table(drain(joined, output_mode="append"))
 
 
 # ---------------------------------------------------------------------------
@@ -998,8 +967,7 @@ def streaming_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v_id").alias("view_id"),
         F.col("p_id").alias("purchase_id"),
     )
-    name, _ = run_drain_to_memory(joined, output_mode="append", state_partitions=8)
-    return spark.table(name)
+    return spark.table(drain(joined, output_mode="append"))
 
 
 _DEDUP_WM_ORACLE = """
@@ -1038,7 +1006,7 @@ def streaming_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "365 days")
         .dropDuplicatesWithinWatermark(["event_type", "user_id"])
     )
-    name, _ = run_drain_to_memory(dd, output_mode="append", state_partitions=8)
+    name = drain(dd, output_mode="append")
     return (
         spark.table(name)
         .groupBy("event_type")
@@ -1074,11 +1042,9 @@ def streaming_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     forces multiple genuine micro-batches), and the header line is
     dropped exactly once per file.
     """
-    import tempfile as _tf
-
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    land = _tf.mkdtemp(prefix="dfs_csv_land_")
+    land = scratch_dir("csv_land_")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "user_id", "event_type"
     )
@@ -1100,8 +1066,7 @@ def streaming_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.sum("event_id").cast("long").alias("sum_event_id"),
     )
-    name, _ = run_drain_to_memory(agg, output_mode="complete", state_partitions=8)
-    return spark.table(name)
+    return spark.table(drain(agg, output_mode="complete"))
 
 
 _AVRO_STREAM_ORACLE = """
@@ -1132,12 +1097,10 @@ def streaming_avro_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     original parquet: binary decode, file-offset planning, and replay
     bookkeeping lose and duplicate nothing.
     """
-    import tempfile as _tf
-
     from datafusion_streams_spark.sources.avro_py import register_avro_py
 
     register_avro_py(spark)
-    land = _tf.mkdtemp(prefix="dfs_avro_land_")
+    land = scratch_dir("avro_land_")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_orderpriority"
     )
@@ -1158,14 +1121,12 @@ def streaming_avro_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AvailableNow (ignoring the per-trigger cap), so drain with a real
     # processing-time trigger loop until every input row is visible
     total = orders.count()
-    from datafusion_streams_spark.streaming.microbatch import run_drain_until
 
     def caught_up(sp, tbl):
         rows = sp.table(tbl).agg(F.sum("n_orders")).first()[0]
         return rows is not None and rows >= total
 
-    name, _ = run_drain_until(agg, caught_up, output_mode="complete", state_partitions=8)
-    return spark.table(name)
+    return spark.table(drain(agg, output_mode="complete", until=caught_up))
 
 
 _STREAM_BITMAP_DISTINCT_ORACLE = """
@@ -1232,8 +1193,7 @@ def streaming_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf="NoTimeout",
     )
-    name, _ = run_drain_to_memory(updates, output_mode="update", state_partitions=8)
-    emitted = spark.table(name)
+    emitted = spark.table(drain(updates, output_mode="update"))
     final = F.max_by(F.struct("n_users", "n_containers"), F.col("n_users")).alias("f")
     return (
         emitted.groupBy("day")
@@ -1273,11 +1233,9 @@ def streaming_multi_source_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated, or double-counted across the seam, whichever source's
     micro-batches land first.
     """
-    import tempfile as _tf
-
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    land = _tf.mkdtemp(prefix="dfs_union_land_")
+    land = scratch_dir("union_land_")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id", "user_id", "event_type"
     )
@@ -1307,8 +1265,7 @@ def streaming_multi_source_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.sum("event_id").cast("long").alias("sum_event_id"),
     )
-    name, _ = run_drain_to_memory(agg, output_mode="complete", state_partitions=8)
-    return spark.table(name)
+    return spark.table(drain(agg, output_mode="complete"))
 
 
 # ---------------------------------------------------------------------------
@@ -1369,8 +1326,7 @@ def streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "band")
         .agg(F.count(F.lit(1)).cast("long").alias("c_cur"))
     )
-    name, _ = run_drain_to_memory(cur_agg, output_mode="complete", state_partitions=8)
-    cur = spark.table(name)
+    cur = spark.table(drain(cur_agg, output_mode="complete"))
 
     from datafusion_streams_spark.catalog import load_events
 

@@ -6,8 +6,6 @@ once across separate query restarts."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 
@@ -22,17 +20,20 @@ def _run_once(spark, src_glob: str, ckpt: str, out_dir: str) -> None:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120), "drain did not finish"
+    finally:
+        q.stop()
 
 
-def test_checkpoint_no_reprocessing_across_restarts(spark):
+def test_checkpoint_no_reprocessing_across_restarts(spark, tmp_path):
     """Run -> add data -> run again with the SAME checkpoint (parquet
     sink supports recovery; memory does not): total output must be
     10 + 5 rows with no duplicates — each input file processed exactly
     once across restarts."""
-    src = tempfile.mkdtemp(prefix="dfs_ckptsrc_")
-    ckpt = tempfile.mkdtemp(prefix="dfs_ckptdir_")
-    out = tempfile.mkdtemp(prefix="dfs_ckptout_")
+    src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
     spark.createDataFrame([(i,) for i in range(10)], "id long").coalesce(1).write.mode(
         "overwrite"
     ).parquet(f"{src}/f1")

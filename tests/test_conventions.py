@@ -11,6 +11,8 @@ cannot silently regress:
   count).
 - r8/r9: zero row-at-a-time ``F.udf`` anywhere — Python touches data
   only through Arrow (pandas_udf / mapInPandas / applyInPandas).
+- Streaming queries start only through ``streaming.microbatch.drain``,
+  and every directory the engine writes comes from ``scratch.py``.
 """
 
 import io
@@ -62,6 +64,41 @@ def test_no_eager_first_outside_convergence_predicates():
         "broadcast 1-row scalar aggregates back into the DAG "
         "(see q11_important_stock) — if a NEW convergence predicate is "
         "genuinely driver-side, add it to ALLOWED_FIRST with a comment"
+    )
+
+
+def _name_counts(name: str) -> dict[str, int]:
+    """Per-file count of NAME tokens ``name``: attribute, call or import
+    — docstrings and comments that merely mention it never count."""
+    counts = {}
+    for f in _source_files():
+        toks = tokenize.generate_tokens(io.StringIO(f.read_text()).readline)
+        n = sum(1 for t in toks if t.type == tokenize.NAME and t.string == name)
+        if n:
+            counts[str(f.relative_to(PKG))] = n
+    return counts
+
+
+# file -> exact allowed ``writeStream`` count. streaming_checkpoint_recovery
+# kills and resumes a query on a shared checkpoint, which the runner's
+# own checkpoint cannot express, so it keeps its one start() helper.
+ALLOWED_WRITESTREAM = {
+    "streaming/microbatch.py": 1,  # drain(), the runner
+    "streaming/queries.py": 1,     # streaming_checkpoint_recovery
+}
+
+
+def test_write_stream_only_in_the_runner():
+    assert _name_counts("writeStream") == ALLOWED_WRITESTREAM, (
+        "start streaming queries through streaming.microbatch.drain, which "
+        "raises on timeout and stops the query and removes its checkpoint"
+    )
+
+
+def test_mkdtemp_only_in_the_scratch_helper():
+    assert _name_counts("mkdtemp") == {"scratch.py": 2}, (
+        "take engine dirs from scratch.scratch_dir: one root per process, "
+        "removed at exit"
     )
 
 

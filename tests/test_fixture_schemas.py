@@ -84,7 +84,7 @@ def test_streaming_and_batch_events_ts_agree(spark):
 
     from datafusion_streams_spark.catalog import load_events
     from datafusion_streams_spark.sources.kafka import events_stream
-    from datafusion_streams_spark.streaming.microbatch import run_drain_to_memory
+    from datafusion_streams_spark.streaming.microbatch import drain
 
     def fingerprint(df):
         return (
@@ -99,10 +99,7 @@ def test_streaming_and_batch_events_ts_agree(spark):
         )
 
     batch = fingerprint(load_events(spark, SF_DIR))
-    name, _ = run_drain_to_memory(
-        events_stream(spark, SF_DIR).select("ts"), output_mode="append"
-    )
-    stream = fingerprint(spark.table(name))
+    stream = fingerprint(spark.table(drain(events_stream(spark, SF_DIR).select("ts"))))
     assert (batch.mn, batch.mx, batch.s) == (stream.mn, stream.mx, stream.s), (
         f"streaming ts diverges from batch: batch=({batch.mn}, {batch.mx}) "
         f"stream=({stream.mn}, {stream.mx}) — micros/nanos normalization drift"

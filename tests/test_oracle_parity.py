@@ -58,11 +58,11 @@ def test_verified_prefix_is_the_r15_rotation():
     import json
     import os
 
-    from datafusion_streams_spark.operators import ROTATED_IN_R15, VERIFIED_FIRST
+    from datafusion_streams_spark.operators import VERIFIED_FIRST
 
     names = list(REGISTRY)
     assert len(VERIFIED_FIRST) == 50
-    assert names[:50] == list(VERIFIED_FIRST) == list(ROTATED_IN_R15)
+    assert names[:50] == list(VERIFIED_FIRST)
 
     window = names[:50]
     # r9 milestone, held: NOTHING in the registry is rows-only —

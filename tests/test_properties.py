@@ -261,11 +261,10 @@ def test_stateful_totals_batch_split_invariance(spark, tmp_path):
                 timeoutConf="NoTimeout",
             )
         )
-        from datafusion_streams_spark.streaming.microbatch import run_drain_to_memory
+        from datafusion_streams_spark.streaming.microbatch import drain
 
-        name, _ = run_drain_to_memory(stream, output_mode="update")
         out = {}
-        for r in spark.table(name).collect():
+        for r in spark.table(drain(stream, output_mode="update")).collect():
             prev = out.get(r.user_id)
             if prev is None or r.n > prev[0]:
                 out[r.user_id] = (r.n, r.cents)
@@ -345,11 +344,10 @@ def test_sessionize_state_batch_split_invariance(spark, tmp_path):
                 timeoutConf="NoTimeout",
             )
         )
-        from datafusion_streams_spark.streaming.microbatch import run_drain_to_memory
+        from datafusion_streams_spark.streaming.microbatch import drain
 
-        name, _ = run_drain_to_memory(stream, output_mode="update")
         out = {}
-        for r in spark.table(name).collect():
+        for r in spark.table(drain(stream, output_mode="update")).collect():
             k = (r.user_id, r.session_seq)
             prev = out.get(k)
             if prev is None or r.n_events > prev[0]:

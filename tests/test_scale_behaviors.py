@@ -3,13 +3,12 @@ plumbing, and engine error adaptation (SURVEY.md §2 A8)."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from pyspark.sql import functions as F
 
 from datafusion_streams_spark.sources.kafka import kafka_like_stream
+from datafusion_streams_spark.streaming.microbatch import drain
 from tests.conftest import SF_DIR, SF_DIR_SMALL
 
 
@@ -50,7 +49,7 @@ def test_aqe_splits_skewed_join(spark):
             spark.conf.set(k, v)
 
 
-def test_console_sink_runs(spark, capfd):
+def test_console_sink_runs(spark, capfd, tmp_path):
     """Console sink — the reference's only sink (print_batches,
     /root/reference/tests/basic_tests.rs:67) — drains without error."""
     msgs = kafka_like_stream(spark, SF_DIR_SMALL).select(
@@ -59,12 +58,14 @@ def test_console_sink_runs(spark, capfd):
     q = (
         msgs.writeStream.format("console")
         .option("numRows", "5")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="dfs_ckpt_"))
+        .option("checkpointLocation", str(tmp_path))
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    assert not q.isActive
+    try:
+        assert q.awaitTermination(120), "console drain did not finish"
+    finally:
+        q.stop()
 
 
 def test_stream_error_adaptation(spark):
@@ -81,17 +82,9 @@ def test_stream_error_adaptation(spark):
         .parquet(f"{SF_DIR_SMALL}/events*.parquet")
         .select((F.col("event_type") * 2).alias("x"))
     )
-    q = (
-        bad.writeStream.format("memory")
-        .queryName("err_test")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="dfs_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
     with pytest.raises(StreamingQueryException):
-        q.awaitTermination(120)
-        if q.exception() is not None:
-            raise q.exception()
+        drain(bad)
+    assert spark.streams.active == []
 
 
 def test_quadratic_baseline_is_fenced(spark, monkeypatch):

@@ -3,12 +3,11 @@ formats, sinks)."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from datafusion_streams_spark.sources.files import read_csv, read_json, read_parquet
 from datafusion_streams_spark.sources.kafka import kafka_like_stream
+from datafusion_streams_spark.streaming.microbatch import drain
 from tests.conftest import SF_DIR_SMALL
 
 
@@ -20,9 +19,9 @@ def _events_sample(spark):
     )
 
 
-def test_csv_roundtrip(spark):
+def test_csv_roundtrip(spark, tmp_path):
     src = _events_sample(spark)
-    d = tempfile.mkdtemp(prefix="dfs_csv_")
+    d = str(tmp_path)
     src.write.mode("overwrite").option("header", "true").csv(d)
     back = read_csv(
         spark, d, schema="event_id long, user_id long, event_type string, value double"
@@ -31,9 +30,9 @@ def test_csv_roundtrip(spark):
     assert back.agg(F.sum("event_id")).first()[0] == src.agg(F.sum("event_id")).first()[0]
 
 
-def test_json_roundtrip(spark):
+def test_json_roundtrip(spark, tmp_path):
     src = _events_sample(spark)
-    d = tempfile.mkdtemp(prefix="dfs_json_")
+    d = str(tmp_path)
     src.write.mode("overwrite").json(d)
     back = read_json(
         spark, d, schema="event_id long, user_id long, event_type string, value double"
@@ -42,11 +41,11 @@ def test_json_roundtrip(spark):
     assert back.agg(F.sum("event_id")).first()[0] == src.agg(F.sum("event_id")).first()[0]
 
 
-def test_parquet_roundtrip_partitioned(spark):
+def test_parquet_roundtrip_partitioned(spark, tmp_path):
     """Partitioned parquet write + partition-pruned read: the layout a
     100 TB table would actually use."""
     src = _events_sample(spark)
-    d = tempfile.mkdtemp(prefix="dfs_part_")
+    d = str(tmp_path)
     src.write.mode("overwrite").partitionBy("event_type").parquet(d)
     back = read_parquet(spark, d).filter(F.col("event_type") == "purchase")
     expected = src.filter(F.col("event_type") == "purchase").count()
@@ -55,23 +54,15 @@ def test_parquet_roundtrip_partitioned(spark):
     assert "PartitionFilters" in plan
 
 
-def test_streaming_parquet_sink(spark):
+def test_streaming_parquet_sink(spark, tmp_path):
     """writeStream -> parquet files (exactly-once file sink with the
     offset/commit log the reference lacks entirely)."""
-    out = tempfile.mkdtemp(prefix="dfs_sink_")
-    ckpt = tempfile.mkdtemp(prefix="dfs_sinkckpt_")
+    out = str(tmp_path)
     msgs = kafka_like_stream(spark, SF_DIR_SMALL).select(
         F.col("key").cast("string").alias("key"),
         F.length(F.col("value").cast("string")).alias("len_value"),
     )
-    q = (
-        msgs.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    drain(msgs, ("parquet", out))
     written = spark.read.parquet(out)
     assert written.count() == spark.read.parquet(f"{SF_DIR_SMALL}/events.parquet").count()
     assert set(written.columns) == {"key", "len_value"}
@@ -107,8 +98,6 @@ def test_pydatasource_stream_row_cap_bounds_batches(spark):
     """The stream reader's maxRowsPerBatch must bound each micro-batch's
     admitted rows (the reference's batch_size at execution.rs:87),
     observable as multiple batches over the 1000-row fixture."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from datafusion_streams_spark.sources.pydatasource import register_kafka_emu
@@ -127,21 +116,12 @@ def test_pydatasource_stream_row_cap_bounds_batches(spark):
         if n:
             batch_sizes.append(n)
 
-    q = (
-        s.select(F.length(F.col("value").cast("string")).alias("len_value"))
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="dfs_pyds_"))
-        .trigger(processingTime="1 second")
-        .start()
+    drain(
+        s.select(F.length(F.col("value").cast("string")).alias("len_value")),
+        sink,
+        timeout_sec=60,
+        until=lambda *_: sum(batch_sizes) >= 1000,
     )
-    try:
-        import time
-
-        deadline = time.time() + 60
-        while sum(batch_sizes) < 1000 and time.time() < deadline:
-            time.sleep(0.5)
-    finally:
-        q.stop()
     assert sum(batch_sizes) == 1000, batch_sizes
     # the 300-row cap splits 3 ways -> 100/partition/trigger; every
     # batch obeys the cap and >= 4 triggers were needed
@@ -167,12 +147,11 @@ def test_compaction_reduces_file_count(spark, tmp_path):
     assert spark.read.parquet(dst).count() == 10_000
 
 
-def test_pysink_manifest_atomicity_on_failure(spark):
+def test_pysink_manifest_atomicity_on_failure(spark, tmp_path):
     """A failed write job must leave NO manifest — readers going through
     manifest_files() observe nothing (two-phase commit contract). The
     part files of failed/aborted tasks are garbage, not data."""
     import os
-    import tempfile
 
     import pytest
     from pyspark.sql import functions as F
@@ -183,7 +162,7 @@ def test_pysink_manifest_atomicity_on_failure(spark):
     )
 
     register_manifest_sink(spark)
-    out = tempfile.mkdtemp(prefix="dfs_pysink_fail_")
+    out = str(tmp_path)
 
     @F.udf("long")
     def boom(v):
@@ -198,13 +177,12 @@ def test_pysink_manifest_atomicity_on_failure(spark):
     assert manifest_files(out) == []
 
 
-def test_avro_py_spec_byte_vectors():
+def test_avro_py_spec_byte_vectors(tmp_path):
     """Pin the clean-room Avro binary encoding to the spec's published
     examples: zigzag varint longs (1 -> 0x02, -64 -> 0x7f, 64 -> 0x80
     0x01), container magic, and the null-codec metadata keys."""
     import io
     import os
-    import tempfile
 
     from datafusion_streams_spark.sources.avro_py import (
         MAGIC,
@@ -228,7 +206,7 @@ def test_avro_py_spec_byte_vectors():
     for n in (0, 1, -1, 63, -64, 64, 2**40, -(2**40), 2**62):
         assert _read_long(io.BufferedReader(io.BytesIO(enc(n)))) == n
 
-    td = tempfile.mkdtemp()
+    td = str(tmp_path)
     p = os.path.join(td, "v.avro")
     write_avro_file(p, [("k", "long")], [{"k": 1}])
     raw = open(p, "rb").read()

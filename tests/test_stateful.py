@@ -4,8 +4,6 @@ capability tier where Spark exceeds the reference (SURVEY.md §2.3
 
 from __future__ import annotations
 
-import tempfile
-
 import pandas as pd
 
 from pyspark.sql import functions as F
@@ -18,14 +16,15 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from datafusion_streams_spark.streaming.microbatch import drain
 from tests.conftest import SF_DIR_SMALL
 
 
-def test_apply_in_pandas_with_state_running_count(spark):
+def test_apply_in_pandas_with_state_running_count(spark, tmp_path):
     """Custom stateful operator via applyInPandasWithState: a running
     per-user event counter carried across micro-batches — the pattern
     for operators Structured Streaming lacks natively."""
-    src_dir = tempfile.mkdtemp(prefix="dfs_state_")
+    src_dir = str(tmp_path)
     rows1 = [(i, i % 3) for i in range(9)]
     rows2 = [(i, i % 3) for i in range(9, 15)]
     spark.createDataFrame(rows1, "event_id long, user_id long").coalesce(1).write.mode(
@@ -56,27 +55,17 @@ def test_apply_in_pandas_with_state_running_count(spark):
             count_events, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
         )
     )
-    name = "state_counts"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="dfs_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    result = spark.table(name).toPandas()
+    result = spark.table(drain(stream, output_mode="update")).toPandas()
     # last emission per user must equal the full count (5 per user: 15 rows / 3 users)
     final = result.groupby("user_id")["total_events"].max()
     assert dict(final) == {0: 5, 1: 5, 2: 5}, result
 
 
-def test_stream_stream_join_with_watermarks(spark):
+def test_stream_stream_join_with_watermarks(spark, tmp_path):
     """Stream-stream inner join bounded by watermarks: impressions x
     clicks within a 30-minute interval condition."""
-    imp_dir = tempfile.mkdtemp(prefix="dfs_imp_")
-    clk_dir = tempfile.mkdtemp(prefix="dfs_clk_")
+    imp_dir = str(tmp_path / "imp")
+    clk_dir = str(tmp_path / "clk")
     imp = [(i, f"2024-01-01 10:{i:02d}:00") for i in range(10)]
     clk = [(i, f"2024-01-01 10:{i + 5:02d}:00") for i in range(0, 10, 2)]
     spark.createDataFrame(imp, "ad_id long, ts_str string").select(
@@ -102,21 +91,11 @@ def test_stream_stream_join_with_watermarks(spark):
             "ad_id = click_ad_id AND click_ts BETWEEN imp_ts AND imp_ts + INTERVAL 30 MINUTES"
         ),
     )
-    name = "ss_join"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="dfs_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r.ad_id for r in spark.table(name).collect()}
+    got = {r.ad_id for r in spark.table(drain(joined)).collect()}
     assert got == {0, 2, 4, 6, 8}, got
 
 
-def test_transform_with_state_in_pandas(spark):
+def test_transform_with_state_in_pandas(spark, tmp_path):
     """transformWithStateInPandas (Spark 4.0 arbitrary-state API):
     running per-user counts with a RocksDB-backed ValueState.
 
@@ -150,7 +129,7 @@ def test_transform_with_state_in_pandas(spark):
         def close(self):
             pass
 
-    src = tempfile.mkdtemp(prefix="dfs_tws_")
+    src = str(tmp_path)
     spark.createDataFrame(
         [(i, i % 3) for i in range(12)], "event_id long, user_id long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{src}/b1")
@@ -164,16 +143,8 @@ def test_transform_with_state_in_pandas(spark):
         .groupBy("user_id")
         .transformWithStateInPandas(Counter(), "user_id long, n long", "Update", "None")
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_test")
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="dfs_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted((r.user_id, r.n) for r in spark.table("tws_test").collect())
+    name = drain(out, output_mode="update")
+    got = sorted((r.user_id, r.n) for r in spark.table(name).collect())
     assert got == [(0, 4), (1, 4), (2, 4)]
 
 
@@ -187,15 +158,13 @@ def test_sessionize_sink_independence(spark, tmp_path):
     the registered query's result exactly — the sink changes where
     emissions land, never what they say."""
     from datafusion_streams_spark.operators import REGISTRY
-    from datafusion_streams_spark.streaming.microbatch import run_microbatch
     from datafusion_streams_spark.streaming.queries import sessionize_updates
 
     sink_dir = str(tmp_path / "sessionize_parquet")
-    run_microbatch(
+    drain(
         sessionize_updates(spark, SF_DIR_SMALL),
         lambda df, _eid: df.write.mode("append").parquet(sink_dir),
         output_mode="update",
-        state_partitions=8,
         timeout_sec=240,
     )
     emitted = spark.read.parquet(sink_dir)

@@ -6,12 +6,18 @@ SURVEY.md §2 Tier A and §4.2.
 
 from __future__ import annotations
 
-import pandas as pd
+import os
+import time
 
+import pandas as pd
+import pytest
+
+from pyspark.errors.exceptions.captured import StreamingQueryException
 from pyspark.sql import functions as F
 
 from datafusion_streams_spark.sources.kafka import kafka_like_stream, to_reference_schema
-from datafusion_streams_spark.streaming.microbatch import run_drain_to_memory, run_microbatch
+from datafusion_streams_spark.streaming import microbatch as mb
+from datafusion_streams_spark.streaming.microbatch import drain
 from tests.conftest import SF_DIR_SMALL
 
 
@@ -19,8 +25,7 @@ def test_drain_then_stop_processes_everything(spark):
     """A4: PartitionEOF drain mode == Trigger.AvailableNow — the stream
     consumes all available input, then terminates on its own."""
     msgs = kafka_like_stream(spark, SF_DIR_SMALL)
-    name, q = run_drain_to_memory(msgs, output_mode="append")
-    assert not q.isActive, "AvailableNow query must self-terminate"
+    name = drain(msgs)  # raises unless the query stops on its own in time
     got = spark.table(name).count()
     expected = spark.read.parquet(f"{SF_DIR_SMALL}/events.parquet").count()
     assert got == expected
@@ -44,19 +49,7 @@ def test_microbatch_boundaries_foreachbatch(spark):
     def collect(batch_df, batch_id: int) -> None:
         seen.append((batch_id, batch_df.count()))
 
-    q = (
-        src.writeStream.foreachBatch(collect)
-        .trigger(processingTime="200 milliseconds")
-        .start()
-    )
-    try:
-        import time
-
-        deadline = time.time() + 20
-        while time.time() < deadline and len([c for _, c in seen if c > 0]) < 2:
-            time.sleep(0.25)
-    finally:
-        q.stop()
+    drain(src, collect, timeout_sec=20, until=lambda *_: len([c for _, c in seen if c > 0]) >= 2)
     nonempty = [c for _, c in seen if c > 0]
     assert len(nonempty) >= 2, f"expected multiple micro-batches, saw {seen}"
 
@@ -81,7 +74,7 @@ def test_streaming_batch_equivalence_stateless(spark):
         F.col("key").cast("string").alias("key"),
         F.length(F.col("value").cast("string")).alias("len_value"),
     )
-    name, _ = run_drain_to_memory(msgs, output_mode="append")
+    name = drain(msgs)
     streamed = spark.table(name).toPandas().sort_values("key").reset_index(drop=True)
 
     from datafusion_streams_spark.sources.kafka import kafka_like_from_events
@@ -99,16 +92,13 @@ def test_streaming_batch_equivalence_stateless(spark):
     pd.testing.assert_frame_equal(streamed, batch)
 
 
-def test_watermark_drops_late_rows(spark):
+def test_watermark_drops_late_rows(spark, tmp_path):
     """Watermarked append-mode window agg: rows later than the watermark
     delay are dropped — the late-data semantics the reference lacks
     entirely (SURVEY.md §2.3 'Spark exceeds the reference here')."""
     import glob
-    import os
-    import tempfile
-    import time
 
-    src_dir = tempfile.mkdtemp(prefix="dfs_late_")
+    src_dir = str(tmp_path)
 
     def write_batch(subdir: str, rows: list[tuple[int, str]], mtime: float) -> None:
         df = spark.createDataFrame(rows, "id long, ts_str string").select(
@@ -138,7 +128,7 @@ def test_watermark_drops_late_rows(spark):
         .groupBy(F.window("ts", "1 hour"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name, _ = run_drain_to_memory(stream, output_mode="append")
+    name = drain(stream)
     result = spark.table(name).select(F.col("window.start").alias("ws"), "n").toPandas()
     hours = {ts.hour for ts in result["ws"]}
     assert 10 in hours, f"on-time window missing from {result}"
@@ -146,12 +136,10 @@ def test_watermark_drops_late_rows(spark):
     assert int(result[result["ws"].dt.hour == 10]["n"].iloc[0]) == 11
 
 
-def test_drop_duplicates_within_watermark(spark):
+def test_drop_duplicates_within_watermark(spark, tmp_path):
     """Stateful streaming dedup: duplicate event ids collapse within the
     watermark window (the streaming counterpart of dedup_exact)."""
-    import tempfile
-
-    src_dir = tempfile.mkdtemp(prefix="dfs_dupe_")
+    src_dir = str(tmp_path)
     rows = [(i % 5, "2024-01-01 10:00:00") for i in range(20)]
     df = spark.createDataFrame(rows, "id long, ts_str string").select(
         "id", F.col("ts_str").cast("timestamp").alias("ts")
@@ -164,8 +152,7 @@ def test_drop_duplicates_within_watermark(spark):
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["id"])
     )
-    name, _ = run_drain_to_memory(stream, output_mode="append")
-    assert spark.table(name).count() == 5
+    assert spark.table(drain(stream)).count() == 5
 
 
 def test_reference_fixture_pipeline_exact(spark):
@@ -255,7 +242,6 @@ def test_kafka_live_broker_round_trip(spark):
     from pyspark.sql import functions as F
 
     from datafusion_streams_spark.sources.kafka import kafka_source, to_reference_schema
-    from datafusion_streams_spark.streaming.microbatch import run_drain_to_memory
 
     topic = f"__test_{uuid.uuid4().hex[:10]}"  # utils.rs rand_topic idiom
     rows = [(f"Key {i % 15}", f"Message {i % 15}") for i in range(45)]
@@ -274,8 +260,7 @@ def test_kafka_live_broker_round_trip(spark):
         F.col("value").cast("string").alias("value"),
         F.length(F.col("value").cast("string")).alias("len_value"),
     )
-    name, _ = run_drain_to_memory(pipe, output_mode="append")
-    rows_out = spark.table(name).collect()
+    rows_out = spark.table(drain(pipe)).collect()
     assert len(rows_out) == 45
     assert {r.key for r in rows_out} == {f"Key {i}" for i in range(15)}
     assert all(r.len_value == len(r.value) for r in rows_out)
@@ -285,13 +270,11 @@ def test_kafka_live_broker_round_trip(spark):
 def test_plan_log_captures_streaming_executed_plan(spark):
     """The duplicated-shuffle audit (tools/reuse_audit.py) reaches
     streaming queries through microbatch.PLAN_LOG: when an audit
-    installs a list, the shared runners append each query's last
+    installs a list, the drain runner appends each query's last
     micro-batch physical plan; when it is None (the default), the hot
     path does nothing. A stateful agg must surface its shuffle in the
     captured plan — that Exchange line is exactly what the audit
     fingerprints."""
-    from datafusion_streams_spark.streaming import microbatch as mb
-
     agg = (
         kafka_like_stream(spark, SF_DIR_SMALL)
         .groupBy(F.length("key").alias("key_len"))
@@ -299,7 +282,7 @@ def test_plan_log_captures_streaming_executed_plan(spark):
     )
     mb.PLAN_LOG = []
     try:
-        run_drain_to_memory(agg, output_mode="complete", state_partitions=8)
+        drain(agg, output_mode="complete")
         captured = list(mb.PLAN_LOG)
     finally:
         mb.PLAN_LOG = None
@@ -308,7 +291,122 @@ def test_plan_log_captures_streaming_executed_plan(spark):
     assert "StateStore" in captured[0], captured[0][:400]
 
     # default path stays silent: no list installed -> nothing recorded
-    run_drain_to_memory(
-        kafka_like_stream(spark, SF_DIR_SMALL), output_mode="append"
-    )
+    drain(kafka_like_stream(spark, SF_DIR_SMALL))
     assert mb.PLAN_LOG is None
+
+
+@pytest.fixture
+def checkpoints(monkeypatch):
+    """Every checkpoint dir drain() makes, recorded for cleanup checks."""
+    made: list[str] = []
+    make = mb.scratch_dir
+
+    def record(prefix):
+        made.append(make(prefix))
+        return made[-1]
+
+    monkeypatch.setattr(mb, "scratch_dir", record)
+    return made
+
+
+def test_drain_timeout_raises_and_releases(spark, checkpoints):
+    """Fault injection: a memory drain that cannot finish within its
+    timeout must raise, not return the partial sink; afterwards no
+    query is left running, the checkpoint is gone and the session's
+    shuffle width is back to its prior value."""
+
+    def stuck_map(it):  # a closure, so workers get it by value
+        time.sleep(600)
+        yield from it
+
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        stuck = kafka_like_stream(spark, SF_DIR_SMALL).mapInPandas(
+            stuck_map, "key binary, value binary"
+        )
+        t0 = time.monotonic()
+        with pytest.raises(TimeoutError):
+            drain(stuck, timeout_sec=2)
+        assert time.monotonic() - t0 < 60
+        assert spark.streams.active == []
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
+    assert checkpoints and not any(os.path.exists(d) for d in checkpoints)
+
+
+def test_raising_foreachbatch_fails_the_drain(spark, checkpoints):
+    """Fault injection: a foreachBatch sink that raises fails the
+    drain loudly, with no query left active and no checkpoint left."""
+
+    def boom(batch_df, batch_id):
+        raise RuntimeError("injected sink failure")
+
+    with pytest.raises(StreamingQueryException, match="injected sink failure"):
+        drain(kafka_like_stream(spark, SF_DIR_SMALL), boom)
+    assert spark.streams.active == []
+    assert checkpoints and not any(os.path.exists(d) for d in checkpoints)
+
+
+def test_until_deadline_raises_without_partial_sink(spark):
+    """Fault injection: an ``until`` predicate that never holds over an
+    unbounded rate stream raises at its deadline, and the partially
+    filled memory sink is dropped rather than handed back."""
+    names: list[str] = []
+
+    def never(sp, name):
+        names.append(name)
+        return False
+
+    rate = spark.readStream.format("rate").option("rowsPerSecond", "50").load()
+    with pytest.raises(TimeoutError):
+        drain(rate, timeout_sec=2, until=never)
+    assert names, "the predicate was never polled"
+    assert not spark.catalog.tableExists(names[0])
+    assert spark.streams.active == []
+
+
+def test_until_fails_fast_on_a_failed_query(spark):
+    """An ``until`` drain whose query has already failed raises that
+    failure at once instead of polling until its deadline."""
+
+    def boom(batch_df, batch_id):
+        raise RuntimeError("injected batch failure")
+
+    rate = spark.readStream.format("rate").option("rowsPerSecond", "50").load()
+    t0 = time.monotonic()
+    with pytest.raises(StreamingQueryException, match="injected batch failure"):
+        drain(rate, boom, timeout_sec=300, until=lambda *_: False)
+    assert time.monotonic() - t0 < 60
+    assert spark.streams.active == []
+
+
+_LEAK_SCRIPT = """
+import sys
+sys.path.insert(0, {repo!r})
+from datafusion_streams_spark import REGISTRY, get_session, scratch
+spark = get_session(cpus="2")
+for name in ("files_csv_roundtrip", "streaming_parquet_sink", "streaming_tumbling_hour"):
+    REGISTRY[name].fn(spark, {sf!r}).collect()
+print(scratch._ROOT)
+"""
+
+
+def test_registered_queries_leave_no_scratch_dirs(tmp_path):
+    """A process that runs file-writing and streaming queries leaves no
+    ``dfs_*`` directory in its TMPDIR once it exits: every engine dir
+    lives under the one scratch root, removed at exit."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "TMPDIR": str(tmp_path), "SPARK_DRIVER_MEMORY": "1g"}
+    done = subprocess.run(
+        [sys.executable, "-c", _LEAK_SCRIPT.format(repo=repo, sf=SF_DIR_SMALL)],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    root = done.stdout.strip().splitlines()[-1]
+    assert os.path.dirname(root) == str(tmp_path), root
+    assert [e for e in os.listdir(tmp_path) if e.startswith("dfs_")] == []

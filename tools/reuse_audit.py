@@ -14,7 +14,7 @@ This audit runs EVERY registered query at sf0.001 and fingerprints
 each shuffle exchange (normalized argument + normalized subtree) in:
 (a) the final adaptive plan of the returned batch DataFrame, and
 (b) every micro-batch physical plan the query executed along the way
-— the shared streaming runners log them via
+— the drain runner logs them via
 ``streaming.microbatch.PLAN_LOG`` when this audit installs a list, so
 streaming-tagged queries and batch queries that drain an internal
 stream are covered too (a duplicated shuffle in a streaming plan
@@ -135,7 +135,7 @@ def main() -> int:
         finally:
             stream_plans, mb.PLAN_LOG = mb.PLAN_LOG, None
         n_batch += 1
-        # the runners log a PLAN_UNAVAILABLE sentinel when a plan
+        # drain() logs a PLAN_UNAVAILABLE sentinel when a plan
         # accessor raises — count those as per-query capture gaps so
         # under-coverage is reported, never silent (r10 ADVICE)
         gaps = [p for p in stream_plans if p.startswith("PLAN_UNAVAILABLE")]

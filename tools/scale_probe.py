@@ -129,7 +129,7 @@ def probe_events_replay(spark, sf_dir: str, reps: int) -> dict:
     from pyspark.sql import functions as F
 
     from datafusion_streams_spark.sources.kafka import kafka_like_stream
-    from datafusion_streams_spark.streaming.microbatch import run_drain_to_memory
+    from datafusion_streams_spark.streaming.microbatch import drain
 
     src_file = os.path.join(sf_dir, "events.parquet")
     out = {}
@@ -140,18 +140,14 @@ def probe_events_replay(spark, sf_dir: str, reps: int) -> dict:
                 shutil.copy(src_file, os.path.join(land, f"events_{i:02d}.parquet"))
             n_rows = spark.read.parquet(os.path.join(land, "events_*.parquet")).count()
 
-            def drain():
+            def replay():
                 pipe = kafka_like_stream(spark, land).select(
                     F.col("key").cast("string").alias("key"),
                     F.length(F.col("value").cast("string")).alias("len_value"),
                 )
-                sink, _ = run_drain_to_memory(pipe, output_mode="append")
-                try:
-                    spark.catalog.dropTempView(sink)
-                except Exception:
-                    pass
+                spark.catalog.dropTempView(drain(pipe))
 
-            wall = _min_of(reps, drain)
+            wall = _min_of(reps, replay)
             out[copies] = {"rows": n_rows, "wall_sec": round(wall, 3),
                            "rows_per_sec": round(n_rows / wall, 1)}
         finally:
@@ -475,9 +471,7 @@ def probe_stateful_streaming(spark, sf_dir: str, reps: int) -> dict:
                     # registered query (streaming.queries.
                     # sessionize_updates), so the probed plan IS the
                     # registered plan.
-                    from datafusion_streams_spark.streaming.microbatch import (
-                        run_microbatch,
-                    )
+                    from datafusion_streams_spark.streaming.microbatch import drain
                     from datafusion_streams_spark.streaming.queries import (
                         sessionize_updates,
                     )
@@ -488,12 +482,11 @@ def probe_stateful_streaming(spark, sf_dir: str, reps: int) -> dict:
                     try:
                         mb.PROGRESS_LOG = []
                         t0 = time.perf_counter()
-                        run_microbatch(
+                        drain(
                             sessionize_updates(spark, land),
                             lambda df, _eid: df.write.mode("append")
                             .parquet(sink_dir),
                             output_mode="update",
-                            state_partitions=8,
                             timeout_sec=900,
                         )
                         wall = time.perf_counter() - t0
