@@ -87,9 +87,9 @@ def release_shared_caches(spark: SparkSession) -> None:
     localCheckpointed minhash component labels. Spark's CacheManager
     dedupes the plan-keyed ones, so a single session's storage stays
     bounded — but a long-lived session running repeated registry
-    sweeps should call this between sweeps (bench.py does) so executor
-    storage returns to zero instead of holding the last sweep's
-    working set.
+    sweeps should call this between queries (``perfbench/run.py`` and
+    ``tools/attribute.py`` do, right after ``release_model_memos``) so
+    executor storage returns to zero.
 
     Three layers, in order: drop the label memo handles (so consumers
     rebuild rather than probe dead handles), clear the CacheManager
@@ -118,20 +118,16 @@ def release_model_memos(spark: SparkSession | None = None) -> None:
     re-pays the model fit.
 
     The memos are a legitimate session-reuse pattern (a long-lived
-    service fits once and serves many lookups), but min-of-reps
-    benchmarking plus a warm memo reports per-query numbers that
-    EXCLUDE the fit (r15 verdict: bench-inflating). ``bench.py`` calls
-    this before every timed rep so every reported number includes the
-    model fit end-to-end; nothing outside the bench path calls it, so
-    ordinary sessions keep the reuse.
+    service fits once and serves many lookups), but a timing taken over
+    a warm memo excludes the fit. ``perfbench/run.py`` and
+    ``tools/attribute.py`` call this before every timed query so every
+    number includes the model fit; ordinary sessions keep the reuse.
 
     With ``spark`` given, only that session's minhash label handles are
     evicted (the model dicts hold plain floats, not session state, and
-    are always cleared). Evicted label handles are NOT unpersisted here
-    — their localCheckpoint blocks are freed by the
-    ``release_shared_caches`` JVM sweep at the end of the bench run;
-    within a run the leak is bounded by the rep count of the one
-    consumer query and the labels relation is cluster-member-sized.
+    are always cleared). Evicted label handles are NOT unpersisted here:
+    every caller runs ``release_shared_caches`` right after this, and
+    its JVM sweep frees their localCheckpoint blocks.
     """
     from datafusion_streams_spark.operators import clustering, dedup
 

@@ -289,7 +289,8 @@ def _corpus_fingerprint(sf_dir: str) -> tuple:
         )
     else:
         files = [p]
-    return tuple((f, _os.stat(f).st_size, _os.stat(f).st_mtime_ns) for f in files)
+    stats = [(f, _os.stat(f)) for f in files]
+    return tuple((f, st.st_size, st.st_mtime_ns) for f, st in stats)
 
 
 # Fitted-model memo: the Lloyd fit is deterministic in (corpus, n), so

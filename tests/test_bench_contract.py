@@ -1,9 +1,6 @@
-"""The driver records only the LAST 2000 bytes of bench stdout and
-parses the one JSON line from it. Rounds 2 and 3 lost their payloads to
-this; the compact-line builder now carries a hard budget. These tests
-pin that contract without starting Spark."""
+"""The host calibrations in ``bench.py`` and the model-memo release that
+every timing harness runs before a timed query. No Spark needed."""
 
-import json
 import sys
 from pathlib import Path
 
@@ -12,107 +9,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import bench  # noqa: E402
 
 
-LOAD = [0.61, 0.82, 1.04, 7.9, 4.21, 2.15]
-SPREAD = {"q": "q1_pricing_summary", "min": 0.384, "max": 1.792}
-
-
-def _line(total, timings, streaming):
-    return bench.build_compact_line(
-        total, timings, 2, streaming, 0.1, load=LOAD, spread=SPREAD
-    )
-
-
-def test_compact_line_fits_budget_with_all_headline_queries():
-    timings = {n: 1.234 for n in bench.HEADLINE}
-    line = _line(round(sum(timings.values()), 3), timings, {
-        "events_replay_rows_per_sec": 245444.1,
-        "microbatch_avg_trigger_ms": 95.6,
-        "microbatch_batches": 12,
-    })
-    assert len(line) <= bench.BUDGET
-    obj = json.loads(line)
-    assert obj["metric"] == "headline_queries_total_wall_clock"
-    assert obj["n_queries"] == len(bench.HEADLINE)
-    # whatever was omitted is accounted for
-    assert len(obj["queries"]) + obj.get("queries_omitted", 0) == len(bench.HEADLINE)
-    # r9 verdict item 2: the persisted line must be ambient-load
-    # adjudicable on its own — load triples and worst rep spread are
-    # part of the never-shed base.
-    assert obj["load"] == LOAD
-    assert obj["spread"] == SPREAD
-
-
-def test_load_field_survives_every_shed_tier():
-    """The load field is the whole point of r10's bench change: it must
-    survive even the pathological metric-triple-only fallback."""
-    timings = {n: 123456.789 for n in bench.HEADLINE}
-    monster = {"events_replay_rows_per_sec": float("1" * 15 + ".5")}
-    monster.update({f"pad_{i}": "x" * 50 for i in range(100)})
-    line = _line(999999.999, timings, monster)
-    assert len(line) <= bench.BUDGET
-    obj = json.loads(line)
-    assert obj["load"] == LOAD
-
-
-def test_compact_line_survives_bloated_streaming_metrics():
-    """If the streaming detail dict grows, the base object alone could
-    blow the budget with zero queries included — the builder must shed
-    detail instead of printing an unparseable line."""
-    timings = {n: 1.234 for n in bench.HEADLINE}
-    bloated = {"events_replay_rows_per_sec": 245444.1}
-    bloated.update({f"extra_metric_{i}": float(i) * 1.111 for i in range(200)})
-    line = _line(123.456, timings, bloated)
-    assert len(line) <= bench.BUDGET
-    obj = json.loads(line)
-    assert obj["streaming"] == {"events_replay_rows_per_sec": 245444.1}
-    assert obj["value"] == 123.456
-
-
-def test_headline_names_are_registered():
-    from datafusion_streams_spark.operators import REGISTRY
-
-    missing = [n for n in bench.HEADLINE if n not in REGISTRY]
-    assert missing == []
-
-
-def test_compact_line_clamps_instead_of_crashing():
-    """r5 ADVICE: the final length check must be a hard clamp, not an
-    assert — a short query name after the shed loop (or an oversized
-    slim base) could previously leave the line over budget and crash,
-    printing NO JSON at all. Worst-case inputs must still yield a
-    parseable line within budget."""
-    timings = {n: 123456.789 for n in bench.HEADLINE}
-    # streaming dict whose single mandatory key is itself enormous
-    monster = {"events_replay_rows_per_sec": float("1" * 15 + ".5")}
-    monster.update({f"pad_{i}": "x" * 50 for i in range(100)})
-    line = _line(999999.999, timings, monster)
-    assert len(line) <= bench.BUDGET
-    obj = json.loads(line)
-    assert obj["value"] == 999999.999
-
-
-def test_high_variance_queries_get_three_base_reps():
-    """r7 verdict item 3: the 10 queries with >=2.4x same-plan rep
-    spread take at least 3 base reps so min-of-N outlasts ambient box
-    load; everything else keeps the configured rep count. The tagged
-    set must stay inside HEADLINE or the tag is dead weight."""
-    assert bench.HIGH_VARIANCE <= set(bench.HEADLINE)
-    assert len(bench.HIGH_VARIANCE) == 10
-    for n in bench.HIGH_VARIANCE:
-        assert bench.base_reps_for(n, 2) == 3
-        assert bench.base_reps_for(n, 5) == 5  # explicit higher wins
-    assert bench.base_reps_for("q1_pricing_summary", 2) == 2
-    # the adaptive-extras rule is bounded: at most 2 beyond base
-    assert bench.ADAPTIVE_EXTRA_REPS == 2
-    # 1.30 -> 1.15 in r12: sub-30% per-query bounces (r11's 1.23x
-    # dedup_source_overlap) sat below the old trigger
-    assert bench.ADAPTIVE_SPREAD == 1.15
-
-
 def test_release_model_memos_clears_fit_state():
-    """r15 verdict item 1: the driver-side fitted-model memos must be
-    clearable so bench reps pay the model fit. No Spark needed — the
-    memos are plain driver dicts."""
+    """The driver-side fitted-model memos must be clearable so a timed
+    query pays its model fit. No Spark needed — the memos are plain
+    driver dicts."""
     from datafusion_streams_spark.operators import (
         clustering,
         dedup,
@@ -132,8 +32,8 @@ def test_release_model_memos_clears_fit_state():
         assert clustering._PQ_MODEL_MEMO == {}
         assert "t1" not in dedup._MINHASH_LABELS_MEMO
         assert "t2" in dedup._MINHASH_LABELS_MEMO
-        # None = clear everything (bench passes the live session; None
-        # is the defensive default)
+        # None = clear everything (the harnesses pass the live session;
+        # None is the defensive default)
         release_model_memos(None)
         assert dedup._MINHASH_LABELS_MEMO == {}
     finally:
@@ -142,60 +42,14 @@ def test_release_model_memos_clears_fit_state():
         dedup._MINHASH_LABELS_MEMO.clear()
 
 
-def test_bench_rep_loop_clears_model_memos():
-    """The measurement fix only holds if the TIMED rep path clears the
-    memos — pin the call inside main()'s per-rep runner so a refactor
-    cannot silently restore warm-memo minima."""
-    import inspect
-
-    src = inspect.getsource(bench.main)
-    assert "release_model_memos(spark)" in src
-    # and it must run before the timer starts, inside _one_run
-    one_run = src.split("def _one_run", 1)[1].split("for _ in range", 1)[0]
-    assert "release_model_memos(spark)" in one_run
-    assert one_run.index("release_model_memos") < one_run.index("perf_counter")
-
-
-def test_calib_sextet_survives_every_shed_tier(monkeypatch):
-    """r13 (r12 verdict item 1 + its first data points): the six host
-    denominators — calib/pcalib (CPU, 1-wide and N-wide),
-    mcalib/pmcalib (resident DRAM bandwidth, same pair), and
-    fcalib/pfcalib (page-allocation first-touch, same pair) — ride in
-    the printed line and are never shed. The quiet series is only
-    cross-host comparable next to them: r12 proved single-core calib
-    blind to the drift; r13's first pcalib point proved the CPU pair
-    blind too (1.27x wall shift at flat calib AND pcalib); and the
-    same afternoon measured first-touch collapsing ~400x while
-    resident copies and both CPU calibs sat at idle values."""
-    timings = {n: 1.234 for n in bench.HEADLINE}
-    kw = dict(load=LOAD, spread=SPREAD, calib=0.1077, pcalib=0.2512,
-              mcalib=0.021, pmcalib=0.38, fcalib=0.31, pfcalib=9.5)
-    expect = (0.1077, 0.2512, 0.021, 0.38, 0.31, 9.5)
-    keys = ("calib", "pcalib", "mcalib", "pmcalib", "fcalib", "pfcalib")
-    # normal budget: all six present alongside full queries
-    line = bench.build_compact_line(
-        99.9, timings, 2, {"events_replay_rows_per_sec": 1.0}, 0.1, **kw)
-    obj = json.loads(line)
-    assert tuple(obj[k] for k in keys) == expect
-    # pathological metric-triple tier: still all six present
-    monkeypatch.setattr(bench, "BUDGET", 360)
-    line = bench.build_compact_line(
-        99.9, timings, 2, {"events_replay_rows_per_sec": 1.0}, 0.1, **kw)
-    assert len(line) <= 360
-    obj = json.loads(line)
-    assert tuple(obj[k] for k in keys) == expect
-    assert "queries" not in obj
-
-
 def test_calibrations_run_and_are_plausible():
     """The six denominators must execute, return strictly positive
-    bounded numbers, and not leak the 256 MiB buffer. NO cross-pair
-    ordering assertions (r13 ADVICE): calib/pcalib and mcalib/pmcalib
-    are sampled at different instants, so a co-tenant burst during the
-    single-core reps — the exact drift r12/r13 document — can inflate
-    calib past pcalib and flake the suite. The denominators exist to
-    MEASURE that noise, not to be stable under it; only positivity and
-    generous upper bounds are contract."""
+    bounded numbers, and not leak the 256 MiB buffer. No cross-pair
+    ordering assertions: calib/pcalib and mcalib/pmcalib are sampled at
+    different instants, so a co-tenant burst during the single-core reps
+    can inflate calib past pcalib. The denominators exist to measure
+    that noise, not to be stable under it; only positivity and generous
+    upper bounds are contract."""
     pcalib = bench.parallel_cpu_calibration()
     calib = bench.cpu_calibration()
     assert 0 < calib < 60
@@ -208,21 +62,3 @@ def test_calibrations_run_and_are_plausible():
     assert 0 < pfcalib < 600
     # the buffer global must not leak a 256 MiB array into the process
     assert bench._MEMBW_BUF is None
-
-
-def test_pathological_fallback_tier_keeps_load_and_spread(monkeypatch):
-    """r10 review: the earlier 'survives every shed tier' test never
-    actually reached the metric-triple-only fallback (the streaming
-    shed alone brought the line under budget). Force the tier with a
-    tiny budget and assert the fallback still carries load AND spread
-    — r10 ADVICE: the docstring promises both are never shed, so the
-    slim tier must keep both (spread is ~50 bytes)."""
-    monkeypatch.setattr(bench, "BUDGET", 230)
-    timings = {n: 1.234 for n in bench.HEADLINE}
-    line = _line(99.9, timings, {"events_replay_rows_per_sec": 1.0})
-    assert len(line) <= 230
-    obj = json.loads(line)
-    assert obj["value"] == 99.9
-    assert obj["load"] == LOAD
-    assert obj["spread"] == SPREAD
-    assert "queries" not in obj  # the triple tier sheds everything else

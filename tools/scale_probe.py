@@ -66,9 +66,8 @@ def host_calibrations() -> dict:
     and the same afternoon first-touch page allocation collapsed ~400x
     (fcalib 0.5 s -> 39.7 s) at flat CPU calibs, the host page-supply
     pathology no CPU-bound denominator can see. Probe walls are only
-    cross-round comparable next to ALL SIX (r13 verdict item 3: bench
-    lines already carry the sextet; probe artifacts get the same
-    annotation so a pathological host is attributable in-artifact)."""
+    cross-round comparable next to ALL SIX, so probe artifacts carry
+    them and a pathological host is attributable in-artifact."""
     import bench
 
     calib = bench.cpu_calibration()
@@ -838,7 +837,7 @@ def main() -> int:
 
     spark = get_session(app_name="scale-probe", cpus=args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    # warm the session the way bench.py does (workers, codegen)
+    # warm the session's Python workers and codegen before any probe
     spark.range(0, 64, 1, 8).count()
     spark.range(0, 8, 1, 8).mapInPandas(lambda it: it, "id long").count()
 
