@@ -39,6 +39,9 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+# The events files' names; a stream reads them from their directory.
+EVENTS_GLOB = "events*.parquet"
+
 
 def _events_ts_is_nanos(sf_dir: str) -> bool:
     """True iff the events fixture stores ``ts`` as TIMESTAMP(NANOS) (or a
@@ -52,9 +55,9 @@ def _events_ts_is_nanos(sf_dir: str) -> bool:
     infer, and a wrong declared type silently reinterprets the column;
     a micros fixture read as long then divided lands in 1970).
     """
-    paths = sorted(_glob.glob(f"{sf_dir}/events*.parquet"))
+    paths = sorted(_glob.glob(f"{sf_dir}/{EVENTS_GLOB}"))
     if not paths:
-        raise FileNotFoundError(f"no events*.parquet under {sf_dir}")
+        raise FileNotFoundError(f"no {EVENTS_GLOB} under {sf_dir}")
     t = _pq.read_schema(paths[0]).field("ts").type
     if pa.types.is_timestamp(t):
         return t.unit == "ns"
@@ -76,21 +79,6 @@ def events_raw_schema(sf_dir: str) -> StructType:
             StructField("props", StringType()),
         ]
     )
-
-
-# Back-compat alias: the nanos-as-long shape. Streaming readers should
-# use events_stream()/events_raw_schema(sf_dir) instead, which probe the
-# fixture's real physical type.
-EVENTS_RAW_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", LongType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -122,14 +110,21 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     microsecond TIMESTAMP_NTZ — the streaming twin of
     ``catalog.load_events``, sharing its dtype-guard semantics. Every
     event-time streaming query goes through here so the micros/nanos
-    decision lives in exactly one place."""
-    reader = spark.readStream.schema(events_raw_schema(sf_dir))
+    decision lives in exactly one place.
+
+    One root, ``sf_dir``, filtered by name: the driver lists it inline
+    on every trigger, where a glob makes each file a root and above 32
+    roots (``parallelPartitionDiscovery.threshold``) every trigger runs
+    a listing job. The listing is recursive, so the filter is what
+    keeps other tables and ``batch/events.parquet/part-*`` out."""
+    reader = spark.readStream.schema(events_raw_schema(sf_dir)).option(
+        "pathGlobFilter", EVENTS_GLOB
+    )
     if EVENTS_MAX_FILES_PER_TRIGGER is not None:
         reader = reader.option(
             "maxFilesPerTrigger", str(EVENTS_MAX_FILES_PER_TRIGGER)
         )
-    ev = reader.parquet(f"{sf_dir}/events*.parquet")
-    return normalize_event_ts(ev)
+    return normalize_event_ts(reader.parquet(sf_dir))
 
 
 def kafka_source_options(
@@ -193,33 +188,29 @@ def to_reference_schema(df: DataFrame) -> DataFrame:
     )
 
 
-def kafka_like_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic Kafka-shaped batch table from the events fixture.
-
-    Message generators copy the reference's test fixture format
-    (`/root/reference/tests/utils.rs:214-220`): key "Key {id}",
-    value "Message {id}", UTF-8 encoded to binary.
-    """
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+def _kafka_shape(ev: DataFrame) -> DataFrame:
+    """The reference's test fixture format
+    (`/root/reference/tests/utils.rs:214-220`): key "Key {id}", value
+    "Message {id}", UTF-8 encoded to binary."""
+    ident = F.col("event_id").cast("string")
     return ev.select(
-        F.encode(F.concat(F.lit("Key "), F.col("event_id").cast("string")), "UTF-8").alias("key"),
-        F.encode(F.concat(F.lit("Message "), F.col("event_id").cast("string")), "UTF-8").alias("value"),
+        F.encode(F.concat(F.lit("Key "), ident), "UTF-8").alias("key"),
+        F.encode(F.concat(F.lit("Message "), ident), "UTF-8").alias("value"),
     )
+
+
+def kafka_like_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic Kafka-shaped batch table from the events fixture."""
+    return _kafka_shape(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
 
 def kafka_like_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming (micro-batch) variant of ``kafka_like_from_events``.
-
-    A parquet file-stream source stands in for the broker; Structured
-    Streaming's MicroBatchExecution supplies the reference's
-    per-micro-batch replan loop (`…/execution.rs:119-132`) natively.
-    """
-    # glob form: the file streaming source requires a directory basePath
-    ev = spark.readStream.schema(events_raw_schema(sf_dir)).parquet(f"{sf_dir}/events*.parquet")
-    return ev.select(
-        F.encode(F.concat(F.lit("Key "), F.col("event_id").cast("string")), "UTF-8").alias("key"),
-        F.encode(F.concat(F.lit("Message "), F.col("event_id").cast("string")), "UTF-8").alias("value"),
-    )
+    """Streaming (micro-batch) variant of ``kafka_like_from_events``: the
+    Kafka shape over ``events_stream``, whose file source stands in for
+    the broker. Structured Streaming's MicroBatchExecution supplies the
+    reference's per-micro-batch replan loop (`…/execution.rs:119-132`)
+    natively."""
+    return _kafka_shape(events_stream(spark, sf_dir))
 
 
 def reference_test_messages(spark: SparkSession) -> DataFrame:

@@ -3,12 +3,25 @@ formats, sinks)."""
 
 from __future__ import annotations
 
+import shutil
+import sys
+from pathlib import Path
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
+from datafusion_streams_spark.sources import kafka as ksrc
 from datafusion_streams_spark.sources.files import read_csv, read_json, read_parquet
-from datafusion_streams_spark.sources.kafka import kafka_like_stream
+from datafusion_streams_spark.sources.kafka import events_stream, kafka_like_stream
+from datafusion_streams_spark.streaming import microbatch as mb
 from datafusion_streams_spark.streaming.microbatch import drain
 from tests.conftest import SF_DIR_SMALL
+
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "perfbench"))
+
+from eventlog import LISTING_PREFIX  # noqa: E402
 
 
 def _events_sample(spark):
@@ -66,6 +79,76 @@ def test_streaming_parquet_sink(spark, tmp_path):
     written = spark.read.parquet(out)
     assert written.count() == spark.read.parquet(f"{SF_DIR_SMALL}/events.parquet").count()
     assert set(written.columns) == {"key", "len_value"}
+
+
+def _land_events(directory: Path, n_files: int, rows: int, first_id: int = 0) -> set[int]:
+    """``n_files`` events files of ``rows`` fixture rows each, with fresh
+    event ids from ``first_id``; returns the ids landed."""
+    src = pq.read_table(f"{SF_DIR_SMALL}/events.parquet").slice(0, rows)
+    directory.mkdir(parents=True, exist_ok=True)
+    ids: set[int] = set()
+    for i in range(n_files):
+        col = list(range(first_id + i * rows, first_id + (i + 1) * rows))
+        t = src.set_column(0, "event_id", pa.array(col, pa.int64()))
+        pq.write_table(t, str(directory / f"events-{i:05d}.parquet"))
+        ids.update(col)
+    return ids
+
+
+def test_events_stream_runs_no_listing_job_per_trigger(spark, tmp_path, monkeypatch):
+    """The events stream lists its one directory root on the driver:
+    over 40 landed files (above the 32-root parallel-discovery
+    threshold) no job of the query is a parallel leaf-file listing. A
+    glob path would make every file a root and run such a job on every
+    trigger. A batch of more than 32 new files is still listed once by
+    its own file index, so a cap of 8 files per trigger keeps that
+    batch-sized listing out of this check."""
+    ids = _land_events(tmp_path, 40, 5)
+    monkeypatch.setattr(ksrc, "EVENTS_MAX_FILES_PER_TRIGGER", 8)
+    monkeypatch.setattr(mb, "PROGRESS_LOG", [])
+    name = drain(
+        events_stream(spark, str(tmp_path)).select("event_id"),
+        until=lambda s, n: s.table(n).count() >= len(ids),
+    )
+    got = {r.event_id for r in spark.table(name).collect()}
+    spark.catalog.dropTempView(name)
+    assert got == ids
+
+    run_ids = {p["runId"] for p in mb.PROGRESS_LOG}
+    assert len(run_ids) == 1
+    job_ids = spark.sparkContext.statusTracker().getJobIdsForGroup(run_ids.pop())
+    assert job_ids  # the query's jobs are in its run-id group
+    store = spark.sparkContext._jsc.sc().statusStore()
+    descriptions = [store.job(j).description() for j in job_ids]
+    descriptions = [d.get() for d in descriptions if d.isDefined()]
+    assert [d for d in descriptions if d.startswith(LISTING_PREFIX)] == []
+
+
+def test_events_stream_reads_only_events_files(spark, tmp_path):
+    """The directory root is listed recursively, so the name filter is
+    what keeps a landing file, another table and a batch copy of the
+    events under ``batch/events.parquet/`` out of the stream."""
+    ids = _land_events(tmp_path, 1, 20)
+    (tmp_path / "_landing-events-00001.parquet").write_bytes(
+        (tmp_path / "events-00000.parquet").read_bytes()
+    )
+    shutil.copy(f"{SF_DIR_SMALL}/customer.parquet", tmp_path / "customer.parquet")
+    part = tmp_path / "batch" / "events.parquet"
+    _land_events(part, 1, 20, first_id=10**6)
+    (part / "events-00000.parquet").rename(part / "part-00.parquet")
+
+    name = drain(events_stream(spark, str(tmp_path)).select("event_id"))
+    got = [r.event_id for r in spark.table(name).collect()]
+    spark.catalog.dropTempView(name)
+    assert sorted(got) == sorted(ids)
+
+
+def test_events_stream_rejects_directory_shaped_events(spark, tmp_path):
+    """A directory named ``events.parquet`` fails at plan build instead
+    of streaming nothing: its part files do not match the name filter."""
+    _land_events(tmp_path / "events.parquet", 1, 5)
+    with pytest.raises(OSError):
+        events_stream(spark, str(tmp_path))
 
 
 def test_pydatasource_batch_matches_builtin_path(spark):

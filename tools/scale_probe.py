@@ -679,9 +679,9 @@ def probe_skew_hotkey(spark, sf_dir: str, reps: int) -> dict:
     def build(land: str, variant: str) -> str:
         """land/events_NN.parquet files (10 streaming triggers) and
         land/batch/events.parquet/ (the 50-copy batch-join table). The
-        batch copy lives under batch/ so the streaming source's
-        events*.parquet glob can't match it and double-read the
-        rows."""
+        streaming source lists land/ recursively; its events*.parquet
+        pathGlobFilter matches file names, so the part-NN.parquet
+        files under batch/ are not double-read."""
         batch_sf = os.path.join(land, "batch")
         batch_dir = os.path.join(batch_sf, "events.parquet")
         os.makedirs(batch_dir)
