@@ -88,20 +88,13 @@ def release_shared_caches(spark: SparkSession) -> None:
     dedupes the plan-keyed ones, so a single session's storage stays
     bounded — but a long-lived session running repeated registry
     sweeps should call this between queries (``perfbench/run.py`` and
-    ``tools/attribute.py`` do, right after ``release_model_memos``) so
-    executor storage returns to zero.
+    ``tools/attribute.py`` do) so executor storage returns to zero.
 
-    Three layers, in order: drop the label memo handles (so consumers
-    rebuild rather than probe dead handles), clear the CacheManager
-    (plan-keyed .cache() relations), then unpersist every still-
-    persisted RDD through the JVM — that last step is what actually
-    frees localCheckpoint blocks, which the catalog API never touches.
+    Two layers, in order: clear the CacheManager (plan-keyed .cache()
+    relations), then unpersist every still-persisted RDD through the
+    JVM — that last step is what actually frees localCheckpoint blocks,
+    which the catalog API never touches.
     """
-    from datafusion_streams_spark.operators import dedup
-
-    for key, (sess, _df) in list(dedup._MINHASH_LABELS_MEMO.items()):
-        if sess is spark:
-            dedup._MINHASH_LABELS_MEMO.pop(key, None)
     spark.catalog.clearCache()
     try:
         for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
@@ -111,31 +104,11 @@ def release_shared_caches(spark: SparkSession) -> None:
 
 
 def release_model_memos(spark: SparkSession | None = None) -> None:
-    """Drop the driver-side fitted-model memos — the k-means model
-    (``clustering._KMEANS_MODEL_MEMO``), the PQ codebooks
-    (``clustering._PQ_MODEL_MEMO``) and the minhash component-label
-    handles (``dedup._MINHASH_LABELS_MEMO``) — so the next invocation
-    re-pays the model fit.
-
-    The memos are a legitimate session-reuse pattern (a long-lived
-    service fits once and serves many lookups), but a timing taken over
-    a warm memo excludes the fit. ``perfbench/run.py`` and
-    ``tools/attribute.py`` call this before every timed query so every
-    number includes the model fit; ordinary sessions keep the reuse.
-
-    With ``spark`` given, only that session's minhash label handles are
-    evicted (the model dicts hold plain floats, not session state, and
-    are always cleared). Evicted label handles are NOT unpersisted here:
-    every caller runs ``release_shared_caches`` right after this, and
-    its JVM sweep frees their localCheckpoint blocks.
-    """
-    from datafusion_streams_spark.operators import clustering, dedup
-
-    clustering._KMEANS_MODEL_MEMO.clear()
-    clustering._PQ_MODEL_MEMO.clear()
-    for key, (sess, _df) in list(dedup._MINHASH_LABELS_MEMO.items()):
-        if spark is None or sess is spark:
-            dedup._MINHASH_LABELS_MEMO.pop(key, None)
+    """No-op. ``perfbench/run.py`` still imports and calls it before
+    every timed query. The engine holds no cross-query driver memo:
+    every query fits its models from its inputs, and
+    ``release_shared_caches`` frees what queries share through Spark's
+    CacheManager."""
 
 
 def _populate() -> None:

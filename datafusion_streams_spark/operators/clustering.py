@@ -272,35 +272,6 @@ FROM m3 JOIN sizes ON m3.cid = sizes.cid
 """
 
 
-def _corpus_fingerprint(sf_dir: str) -> tuple:
-    """Cheap data fingerprint for the model memo keys (r15 ADVICE): a
-    rewrite of the parquet at the same path with the same row count —
-    e.g. a test tmp fixture regenerated within one process — must not
-    be served a stale model. (File name, size, mtime_ns) per part file;
-    driver-side stat calls only."""
-    import os as _os
-
-    p = _os.path.join(sf_dir, "embeddings.parquet")
-    if _os.path.isdir(p):
-        files = sorted(
-            _os.path.join(p, f)
-            for f in _os.listdir(p)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-    else:
-        files = [p]
-    stats = [(f, _os.stat(f)) for f in files]
-    return tuple((f, st.st_size, st.st_mtime_ns) for f, st in stats)
-
-
-# Fitted-model memo: the Lloyd fit is deterministic in (corpus, n), so
-# consumers that compose the same clustering (cluster_kmeans_embeddings,
-# dedup_semantic_clusters, pipeline_curation_v2) share one fit per
-# session instead of re-running ITERS full corpus passes each. The memo
-# holds only the model (k×dim floats + k ids) — never a DataFrame.
-_KMEANS_MODEL_MEMO: dict[tuple, tuple[list[int], list[list[float]]]] = {}
-
-
 def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the Lloyd iterations; return ``(vec_id, cluster, vq)`` —
     the Spark mirror of the oracle's ``m3``. k grows with the corpus
@@ -308,27 +279,19 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond the fixture base; the cached quantized relation is
     unpersisted once the model is fitted (the final assignment
     recomputes one map-only scan instead of pinning executor storage
-    for the session). Fits are memoized per (sf_dir, n)."""
-    qdf = _quantized(spark, sf_dir)
-    # memo-key/k row count from the RAW parquet (metadata-only under
-    # aggregate pushdown): counting the quantized relation instead paid
-    # its repartition exchange for a number the scan footer already
-    # holds (r16; trivially equal — _quantized is row-preserving)
-    n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
-    memo_key = (sf_dir, n, _corpus_fingerprint(sf_dir))
-    model = _KMEANS_MODEL_MEMO.get(memo_key)
-    if model is None:
-        qdf = qdf.cache()
-        k = kmeans_k(n)
-        init_rows = qdf.orderBy("vec_id").limit(k).collect()
-        cids = list(range(k))
-        cents = [[v / float(QSCALE) for v in r["vq"]] for r in init_rows]
-        for _ in range(KMEANS_ITERS):
-            cids, cents = _assign_update(qdf, cids, cents)
-        _KMEANS_MODEL_MEMO[memo_key] = (cids, cents)
-        qdf.unpersist()
-    else:
-        cids, cents = model
+    for the session)."""
+    qdf = _quantized(spark, sf_dir).cache()
+    # k's row count from the RAW parquet (metadata-only under aggregate
+    # pushdown): counting the quantized relation instead paid its
+    # repartition exchange for a number the scan footer already holds
+    # (_quantized is row-preserving)
+    k = kmeans_k(spark.read.parquet(f"{sf_dir}/embeddings.parquet").count())
+    init_rows = qdf.orderBy("vec_id").limit(k).collect()
+    cids = list(range(k))
+    cents = [[v / float(QSCALE) for v in r["vq"]] for r in init_rows]
+    for _ in range(KMEANS_ITERS):
+        cids, cents = _assign_update(qdf, cids, cents)
+    qdf.unpersist()
     return _assign(qdf, cids, cents)
 
 
@@ -450,34 +413,14 @@ IVFPQ_COARSE = 8  # coarse cells (deterministic init: lowest vec_ids)
 IVFPQ_PROBE = 2  # cells scanned per query (the recall/cost dial)
 
 
-# PQ codebook memo — the _KMEANS_MODEL_MEMO discipline applied to the
-# PQ fit (r15 opt): repeated ADC queries in one session reuse the
-# fitted codebooks instead of re-running the subspace Lloyd update
-# (init collect + mapInPandas assign + m×k reduce + collect) each.
-# Holds only the model (m×k×subdim floats + code ids) — never a
-# DataFrame; the ADC scan itself recomputes from parquet every call.
-_PQ_MODEL_MEMO: dict[
-    tuple, tuple[dict[int, list[int]], dict[int, list[list[float]]]]
-] = {}
-
-
-def _pq_train(
-    qdf: DataFrame,
-    memo_key: tuple | None = None,
-) -> tuple[dict[int, list[int]], dict[int, list[list[float]]]]:
+def _pq_train(qdf: DataFrame) -> tuple[dict[int, list[int]], dict[int, list[list[float]]]]:
     """One Lloyd update per subspace codebook (init: the PQ_K lowest
     vec_ids' subvectors).
 
     Returns (per-subspace code ids, per-subspace centroids). All model
     state is m×k×subdim floats — driver/closure-sized at any corpus
     scale; the only exchange is the codebook update reduce (m×k rows).
-    With ``memo_key`` (sf_dir, n, data fingerprint) the fit is memoized per corpus, the
-    same contract as ``_KMEANS_MODEL_MEMO``.
     """
-    if memo_key is not None:
-        hit = _PQ_MODEL_MEMO.get(memo_key)
-        if hit is not None:
-            return hit
     init = qdf.orderBy("vec_id").limit(PQ_K).collect()
     cids = {s: list(range(PQ_K)) for s in range(PQ_M)}
     cents = {
@@ -570,8 +513,6 @@ def _pq_train(
         cents[sub].append(
             [agg_s[key][d] / (agg_n[key] * float(QSCALE)) for d in range(PQ_SUBDIM)]
         )
-    if memo_key is not None:
-        _PQ_MODEL_MEMO[memo_key] = (cids, cents)
     return cids, cents
 
 
@@ -841,10 +782,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (elementwise numpy adds, s=0..m-1) — the same left fold as
     the oracle's nested (((d0+d1)+d2)+...)."""
     qdf = _quantized(spark, sf_dir).cache()
-    # memo-key count from the raw parquet footer (metadata-only), not
-    # the cached quantized relation — same number, no repartition job
-    n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
-    cids, cents = _pq_train(qdf, memo_key=(sf_dir, n, _corpus_fingerprint(sf_dir)))
+    cids, cents = _pq_train(qdf)
 
     # query subvectors (tiny by construction) -> exact ADC lookup table,
     # computed with the same per-dimension fold as the oracle
@@ -882,10 +820,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cell assignment); ADC inherits ann_pq_adc's left-fold discipline.
     """
     qdf = _quantized(spark, sf_dir).cache()
-    # memo-key count from the raw parquet footer (metadata-only), not
-    # the cached quantized relation — same number, no repartition job
-    n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
-    cids, cents = _pq_train(qdf, memo_key=(sf_dir, n, _corpus_fingerprint(sf_dir)))
+    cids, cents = _pq_train(qdf)
     coarse_rows = qdf.orderBy("vec_id").limit(IVFPQ_COARSE).collect()
     coarse = [[v / float(QSCALE) for v in r["vq"]] for r in coarse_rows]
     q_rows = qdf.filter(F.col("vec_id") < PQ_QUERY_MAX_ID).collect()

@@ -494,46 +494,16 @@ FROM reach GROUP BY src
 """
 
 
-# Converged-labels memo: the min-label fixpoint over the MinHash pair
-# graph is deterministic in the corpus, and THREE registered queries
-# (components, component_stats, rewrite_map) consume it. The memo holds
-# a localCheckpointed DataFrame HANDLE, never driver-side rows: on a
-# real web corpus 30-50% of documents sit in near-dup clusters, so the
-# label relation is corpus-fraction-sized — collecting it to the driver
-# would OOM at 100 TB. The blocks live in executor storage; the driver
-# keeps only the handle. Session-keyed so a stale handle from a stopped
-# SparkSession is never served.
-_MINHASH_LABELS_MEMO: dict[str, tuple[SparkSession, DataFrame]] = {}
-
-
 def minhash_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, canonical_id) — the converged component labels for the
-    MinHash near-dup graph, memoized per (session, sf_dir) as a
-    localCheckpointed DataFrame (distributed state, not driver rows)."""
-    memo = _MINHASH_LABELS_MEMO.get(sf_dir)
-    if memo is not None and memo[0] is spark:
-        # localCheckpoint blocks are NOT fault-tolerant: a lost
-        # executor leaves a handle whose lineage is truncated, so any
-        # consumer action raises instead of recomputing. Probe EVERY
-        # block before serving the handle (count() touches all
-        # partitions — take(1) would miss loss in the untouched ones)
-        # and rebuild from the pair graph on any fetch failure. The
-        # probe is one extra scan of the labels relation, which is
-        # cluster-member-sized (corpus fraction), and every consumer
-        # scans it in full anyway.
-        try:
-            memo[1].count()
-            return memo[1]
-        except Exception:
-            _MINHASH_LABELS_MEMO.pop(sf_dir, None)
+    MinHash near-dup graph, recomputed from the pair graph on every
+    call. The frame reads the fixpoint's final-round localCheckpoint,
+    which ``release_shared_caches`` frees."""
     p = minhash_pairs(spark, sf_dir).select("a_id", "b_id")
-    labels = min_label_components(p, id_col="doc_id").select(
+    return min_label_components(p, id_col="doc_id").select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("canonical_id").cast("long").alias("canonical_id"),
     )
-    df = labels.localCheckpoint(eager=True)
-    _MINHASH_LABELS_MEMO[sf_dir] = (spark, df)
-    return df
 
 
 @query("dedup_components", oracle=_components_oracle(), tags=("dedup", "graph", "iterative"))
@@ -549,8 +519,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     — near-dup clusters are tiny (pairs/triples), so 2-3 shuffles
     total on the (candidate-pair-sized, not corpus-sized) edge list.
     The DuckDB oracle computes the same fixpoint via a recursive
-    transitive-closure CTE. Converged labels are memoized per session
-    (cluster-member-sized driver state) for the downstream consumers.
+    transitive-closure CTE.
     """
     return minhash_labels(spark, sf_dir)
 

@@ -1,6 +1,8 @@
-"""The host calibrations in ``bench.py`` and the model-memo release that
-every timing harness runs before a timed query. No Spark needed."""
+"""The host calibrations in ``bench.py`` and the engine names the frozen
+benchmark under ``perfbench/`` relies on. No Spark needed."""
 
+import ast
+import importlib
 import sys
 from pathlib import Path
 
@@ -9,37 +11,72 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import bench  # noqa: E402
 
 
-def test_release_model_memos_clears_fit_state():
-    """The driver-side fitted-model memos must be clearable so a timed
-    query pays its model fit. No Spark needed — the memos are plain
-    driver dicts."""
-    from datafusion_streams_spark.operators import (
-        clustering,
-        dedup,
-        release_model_memos,
-    )
+PERFBENCH = Path(__file__).resolve().parents[1] / "perfbench"
+ENGINE_MODULES = ("bench", "datafusion_streams_spark")
 
-    clustering._KMEANS_MODEL_MEMO[("t", 1)] = ([0], [[0.0]])
-    clustering._PQ_MODEL_MEMO[("t", 1)] = ({0: [0]}, {0: [[0.0]]})
-    mine, other = object(), object()
-    dedup._MINHASH_LABELS_MEMO["t1"] = (mine, "df1")
-    dedup._MINHASH_LABELS_MEMO["t2"] = (other, "df2")
-    try:
-        # session-scoped: only the matching session's label handles drop;
-        # the model dicts (plain floats, no session state) always clear
-        release_model_memos(mine)
-        assert clustering._KMEANS_MODEL_MEMO == {}
-        assert clustering._PQ_MODEL_MEMO == {}
-        assert "t1" not in dedup._MINHASH_LABELS_MEMO
-        assert "t2" in dedup._MINHASH_LABELS_MEMO
-        # None = clear everything (the harnesses pass the live session;
-        # None is the defensive default)
-        release_model_memos(None)
-        assert dedup._MINHASH_LABELS_MEMO == {}
-    finally:
-        clustering._KMEANS_MODEL_MEMO.clear()
-        clustering._PQ_MODEL_MEMO.clear()
-        dedup._MINHASH_LABELS_MEMO.clear()
+
+def _perfbench_engine_imports() -> list[tuple[str, str, str]]:
+    """(file, module, name) for every name a perfbench module imports
+    from ``bench`` or ``datafusion_streams_spark``, at any depth of the
+    file (the benchmark imports the engine inside its functions)."""
+    found = []
+    for path in sorted(PERFBENCH.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.ImportFrom) and node.module:
+                if node.module.split(".")[0] in ENGINE_MODULES:
+                    found += [(path.name, node.module, a.name) for a in node.names]
+            elif isinstance(node, ast.Import):
+                found += [
+                    (path.name, a.name, "")
+                    for a in node.names
+                    if a.name.split(".")[0] in ENGINE_MODULES
+                ]
+    return found
+
+
+def test_perfbench_engine_imports_resolve():
+    """The benchmark's files are frozen, so a rename or deletion in the
+    engine that breaks one of its imports must fail here rather than in
+    the benchmark run."""
+    imports = _perfbench_engine_imports()
+    modules = {m for _f, m, _n in imports}
+    # the scan must see the engine imports run.py is known to make
+    assert {"bench", "datafusion_streams_spark", "datafusion_streams_spark.operators"} <= modules
+    missing = []
+    for path, module, name in imports:
+        mod = importlib.import_module(module)
+        if name and not hasattr(mod, name):
+            try:
+                importlib.import_module(f"{module}.{name}")
+            except ImportError:
+                missing.append(f"{path}: from {module} import {name}")
+    assert missing == []
+
+
+def test_perfbench_mix_queries_are_registered():
+    """Every query the benchmark's registry_mix runs is registered."""
+    from datafusion_streams_spark import REGISTRY
+
+    tree = ast.parse((PERFBENCH / "run.py").read_text())
+    mix = {}
+    for node in tree.body:
+        if isinstance(node, ast.Assign) and len(node.targets) == 1:
+            target = node.targets[0]
+            if isinstance(target, ast.Name) and target.id in ("BATCH_QUERIES", "DRAIN_QUERIES"):
+                mix[target.id] = ast.literal_eval(node.value)
+    assert set(mix) == {"BATCH_QUERIES", "DRAIN_QUERIES"}
+    names = mix["BATCH_QUERIES"] + mix["DRAIN_QUERIES"]
+    assert [n for n in names if n not in REGISTRY] == []
+
+
+def test_release_model_memos_is_a_noop():
+    """The benchmark calls ``release_model_memos(spark)`` before every
+    timed query; with no driver memo left it must still accept the
+    session and return."""
+    from datafusion_streams_spark.operators import release_model_memos
+
+    assert release_model_memos(object()) is None
+    assert release_model_memos() is None
 
 
 def test_calibrations_run_and_are_plausible():

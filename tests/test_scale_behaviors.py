@@ -363,59 +363,29 @@ def test_pattern_match_bounds_per_user_history(spark, tmp_path):
     assert row["n_patterns"] == expected
 
 
-def test_minhash_label_memo_rebuilds_on_dead_handle(spark):
-    """r5/r6 ADVICE: localCheckpoint blocks are not fault-tolerant — if
-    an executor died, the memoized labels handle fails on fetch. The
-    memo must detect a dead handle (full-block count() probe — take(1)
-    would miss loss in untouched partitions) and rebuild instead of
-    serving it to the three consumer queries."""
-    from datafusion_streams_spark.operators import dedup
-    from tests.conftest import SF_DIR
-
-    good = dedup.minhash_labels(spark, SF_DIR)
-    n = good.count()
-
-    class DeadHandle:
-        def count(self):
-            raise RuntimeError("block fetch failed (simulated lost executor)")
-
-    dedup._MINHASH_LABELS_MEMO[SF_DIR] = (spark, DeadHandle())
-    rebuilt = dedup.minhash_labels(spark, SF_DIR)
-    assert not isinstance(rebuilt, DeadHandle)
-    assert rebuilt.count() == n
-    # and the memo now holds the live handle again
-    assert dedup._MINHASH_LABELS_MEMO[SF_DIR][1] is rebuilt
-
-
 def test_minhash_consumers_survive_real_checkpoint_block_loss(spark):
-    """r6 verdict item #3: kill the ACTUAL localCheckpoint blocks (the
-    faithful lost-executor simulation — lineage is truncated, so a
-    stale handle raises rather than recomputing) and show a consumer
-    query rebuilds the labels and returns the same result."""
-    from datafusion_streams_spark.operators import dedup
+    """Kill the ACTUAL localCheckpoint blocks (the faithful lost-executor
+    simulation: a checkpoint's lineage is truncated, so a frame over
+    lost blocks raises instead of recomputing) and show that the label
+    consumers rebuild from the pair graph and return the same rows."""
     from datafusion_streams_spark.operators import REGISTRY
     from tests.conftest import SF_DIR
 
-    labels = dedup.minhash_labels(spark, SF_DIR)
-    before = sorted((r.doc_id, r.canonical_id) for r in labels.collect())
-    assert dedup._MINHASH_LABELS_MEMO[SF_DIR][1] is labels
+    def rows(name):
+        return sorted(tuple(r) for r in REGISTRY[name].fn(spark, SF_DIR).collect())
+
+    stats = rows("dedup_component_stats")
+    components = rows("dedup_components")
+    assert stats and components
 
     # Drop every persisted RDD's blocks through the JVM — this includes
-    # the LocalCheckpointRDD backing the memo handle. Plain .cache()ed
-    # relations recompute from lineage; only the checkpoint handle is
-    # left dead, exactly like losing the executor that held it.
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for jrdd in jmap.values():
+    # the LocalCheckpointRDDs behind the labels just computed, exactly
+    # like losing the executor that held them.
+    for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
         jrdd.unpersist(True)
 
-    # The stale handle must now be detected by the probe (not served),
-    # and the consumer must come back with identical labels.
-    stats = REGISTRY["dedup_component_stats"].fn(spark, SF_DIR)
-    assert stats.count() > 0
-    rebuilt = dedup._MINHASH_LABELS_MEMO[SF_DIR][1]
-    assert rebuilt is not labels
-    after = sorted((r.doc_id, r.canonical_id) for r in rebuilt.collect())
-    assert after == before
+    assert rows("dedup_component_stats") == stats
+    assert rows("dedup_components") == components
 
 
 def test_release_shared_caches_keeps_storage_flat(spark):
@@ -440,7 +410,7 @@ def test_release_shared_caches_keeps_storage_flat(spark):
         assert persisted() > 0  # the sweep really did persist state
         release_shared_caches(spark)
         assert persisted() == 0
-    # and consumers still work after a release (memo rebuilds)
+    # and consumers still work after a release
     assert REGISTRY["dedup_component_stats"].fn(spark, SF_DIR_SMALL).count() > 0
 
 

@@ -7,10 +7,10 @@ event log.
 
 ``--sf-dir`` defaults to ``$SPARK_GRAFT_SF_DIR``; without ``--only``
 every registered query runs. Each query is timed once, the way
-``perfbench/run.py`` times its registry_mix: the fitted-model memos and
-shared caches are released and the heap is collected, then ``fn``
-builds the DataFrame (eager model fits and streaming drains run here)
-and the ``noop`` sink forces every row and column. After the session
+``perfbench/run.py`` times its registry_mix: the shared caches are
+released and the heap is collected, then ``fn`` builds the DataFrame
+(eager model fits and streaming drains run here) and the ``noop`` sink
+forces every row and column. After the session
 stops, the event log is folded per query window with
 ``perfbench/eventlog.py`` and one JSON record per query is printed.
 
@@ -87,12 +87,11 @@ def record(name: str, w: eventlog.Window, fn_s: float, noop_s: float, cores: int
 
 
 def time_query(spark, name: str, sf_dir: str) -> tuple[eventlog.Window, float, float]:
-    """Run one query from released memos and a collected heap; return
+    """Run one query from released caches and a collected heap; return
     its window and the ``fn`` and ``noop`` seconds."""
     from datafusion_streams_spark import REGISTRY
-    from datafusion_streams_spark.operators import release_model_memos, release_shared_caches
+    from datafusion_streams_spark.operators import release_shared_caches
 
-    release_model_memos(spark)
     release_shared_caches(spark)
     gc.collect()
     spark._jvm.java.lang.System.gc()
