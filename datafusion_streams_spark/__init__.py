@@ -12,9 +12,9 @@ for 100 TB scale.
 """
 
 from datafusion_streams_spark.session import get_session
-from datafusion_streams_spark.catalog import load_tables, register_views
+from datafusion_streams_spark.catalog import register_views, table
 from datafusion_streams_spark.operators import REGISTRY
 
 __version__ = "0.1.0"
 
-__all__ = ["get_session", "load_tables", "register_views", "REGISTRY", "__version__"]
+__all__ = ["get_session", "table", "register_views", "REGISTRY", "__version__"]

@@ -1,14 +1,15 @@
-"""Fixture-table loading and SQL catalog registration.
+"""The engine's one fixture reader, and SQL catalog registration.
 
-The reference never finished its SQL/catalog layer — ``src/kafka/
-context.rs`` is an empty placeholder (see SURVEY.md §3 entry point 3).
-In Spark this layer is one line per table: ``createOrReplaceTempView``.
-We ship it.
+``table`` is the only place that knows where a fixture table lives
+(``{sf_dir}/{name}.parquet``) and how ``events.ts`` is narrowed from
+nanoseconds to microseconds; every query reads exactly the tables it
+uses through it. The reference never finished its SQL/catalog layer —
+``src/kafka/context.rs`` is an empty placeholder (see SURVEY.md §3
+entry point 3). In Spark this layer is one line per table:
+``createOrReplaceTempView``. We ship it.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,36 +27,50 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-
-def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events table with its TIMESTAMP(NANOS) column normalized.
+def normalize_event_ts(ev: DataFrame) -> DataFrame:
+    """events, batch or streaming, with ``ts`` as microsecond
+    TIMESTAMP_NTZ.
 
     Spark has no nanosecond timestamp type (parquet NANOS is read as
     long via spark.sql.legacy.parquet.nanosAsLong); convert with an
     integer ns->us floor division — exactly what DuckDB does when it
     narrows nanos to its microsecond timestamps, so both engines see
-    identical values.
+    identical values. MICROS fixtures arrive as TIMESTAMP_NTZ and pass
+    through: dividing an already-micros column is the 1000x-off bug
+    class, hence the dtype guard.
     """
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn(
+    if dict(ev.dtypes).get("ts") == "bigint":
+        ev = ev.withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
         )
-    return raw.select("event_id", "ts", "user_id", "event_type", "value", "props")
+    return ev.select("event_id", "ts", "user_id", "event_type", "value", "props")
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Fixture table ``name`` under ``sf_dir``; ``events`` comes through
+    ``normalize_event_ts``.
+
+    Plain ``spark.read.parquet`` so Catalyst sees a native parquet
+    relation: predicate pushdown, column pruning and partition-level
+    parallelism all apply (a 100 TB table just means more row groups —
+    the plan shape is identical). Each call infers the schema with one
+    small Spark job, so read a table once per query and reuse the frame.
+    """
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return normalize_event_ts(df) if name == "events" else df
 
 
 def load_events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events with ``ts_us``: event time as INTEGER microseconds.
 
-    Derived from ``load_events``'s normalized timestamp (single source
-    of truth for the ns->us narrowing) — for operators that need an
+    Derived from ``table``'s normalized timestamp (single source of
+    truth for the ns->us narrowing) — for operators that need an
     integer ordering key (RANGE window frames, as-of arithmetic) with
     exact cross-engine parity (DuckDB mirror: ``epoch_ns(ts) // 1000``;
     the UTC session makes the NTZ->instant cast exact).
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     return ev.select(
         "event_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
@@ -85,30 +100,13 @@ def spread(spark: SparkSession, df: DataFrame, *cols: str) -> DataFrame:
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents spread across the cluster for compute-heavy map
     pipelines (shingling, tokenization, quality scoring)."""
-    return spread(spark, spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every fixture parquet under ``sf_dir`` as a DataFrame.
-
-    Plain ``spark.read.parquet`` so Catalyst sees a native parquet
-    relation: predicate pushdown, column pruning and partition-level
-    parallelism all apply (a 100 TB table just means more row groups —
-    the plan shape is identical).
-    """
-    out = {
-        name: spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        for name in TABLES
-        if name != "events"
-    }
-    out["events"] = load_events(spark, sf_dir)
-    return out
+    return spread(spark, table(spark, sf_dir, "documents"), "doc_id")
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register every fixture table as a temp view (the SQL entry point
     the reference stubbed out and never built)."""
-    dfs = load_tables(spark, sf_dir)
+    dfs = {name: table(spark, sf_dir, name) for name in TABLES}
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs

@@ -29,7 +29,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 # are safe to set per-session at runtime. Applied before every query:
 #   - timeZone UTC: timestamp semantics must match the DuckDB oracle
 #   - nanosAsLong: events.parquet stores TIMESTAMP(NANOS), unreadable
-#     by Spark otherwise (converted in catalog.load_events)
+#     by Spark otherwise (converted in catalog.normalize_event_ts)
 #   - AQE/arrow/broadcast: the execution posture the plans assume
 RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_streams_spark.catalog import table
 from datafusion_streams_spark.operators import query
 
 _AUDIT_ORACLE = """
@@ -79,10 +80,10 @@ def audit_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums. Nothing collects; the result is eight rows however large
     the input.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    orders = table(spark, sf_dir, "orders")
+    lineitem = table(spark, sf_dir, "lineitem")
+    customer = table(spark, sf_dir, "customer")
+    nation = table(spark, sf_dir, "nation")
 
     def check(name: str, df: DataFrame, violation: F.Column) -> DataFrame:
         return df.agg(

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datafusion_streams_spark.catalog import table
 from datafusion_streams_spark.functions import as_double_array
 from datafusion_streams_spark.operators import query
 
@@ -64,7 +65,7 @@ def kmeans_k(n_rows: int, base_rows: int = BASE_KMEANS_ROWS) -> int:
 
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """vec_id + integer-quantized embedding (exact-sum domain)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = table(spark, sf_dir, "embeddings")
     vq = F.transform(
         as_double_array("embedding"),
         lambda x: F.floor(x * F.lit(float(QSCALE)) + F.lit(0.5)).cast("long"),
@@ -285,7 +286,7 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pushdown): counting the quantized relation instead paid its
     # repartition exchange for a number the scan footer already holds
     # (_quantized is row-preserving)
-    k = kmeans_k(spark.read.parquet(f"{sf_dir}/embeddings.parquet").count())
+    k = kmeans_k(table(spark, sf_dir, "embeddings").count())
     init_rows = qdf.orderBy("vec_id").limit(k).collect()
     cids = list(range(k))
     cents = [[v / float(QSCALE) for v in r["vq"]] for r in init_rows]

@@ -35,7 +35,7 @@ from datafusion_streams_spark.functions import (
     sql_round6_ratio,
     word_shingles,
 )
-from datafusion_streams_spark.catalog import load_documents
+from datafusion_streams_spark.catalog import load_documents, table
 from datafusion_streams_spark.operators import query
 
 N_MINHASH = 16
@@ -64,7 +64,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     balanced regardless of document skew; map-side partial aggregation
     collapses copies early.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     return docs.groupBy(F.md5("text").alias("fingerprint")).agg(
         F.min("doc_id").alias("keeper_doc_id"),
         F.count(F.lit(1)).alias("n_copies"),
@@ -920,7 +920,7 @@ def dedup_rewrite_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     size is small and falls back to sort-merge when it isn't. No
     forced broadcast, no driver-side rows anywhere in the chain.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = table(spark, sf_dir, "documents").select("doc_id")
     labels = minhash_labels(spark, sf_dir).withColumnRenamed(
         "canonical_id", "keeper_id"
     )
@@ -1142,7 +1142,7 @@ def dedup_bloom_prescreen(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bloom_probe,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     fp = docs.select(
         "doc_id", F.md5(F.substring("text", 1, 128)).alias("f")
     )
@@ -1229,7 +1229,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
         F.lower(F.substring("text", 1, _SNM_KEY_LEN)).alias("sortkey"),

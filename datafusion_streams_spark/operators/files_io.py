@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_streams_spark.catalog import table
 from datafusion_streams_spark.functions import dec, dsum
 from datafusion_streams_spark.operators import query
 from datafusion_streams_spark.scratch import scratch_dir
@@ -65,7 +66,7 @@ def _orders_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fixture stores o_orderdate as TIMESTAMP; the roundtrip contract
     # under test is the DATE type (ORC additionally has no NTZ-timestamp
     # physical type to round-trip through), so cast at the source
-    return spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    return table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderdate").cast("date").alias("o_orderdate"),
         "o_orderpriority",
@@ -145,7 +146,7 @@ def files_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_streams_spark.layouts import memoized_layout
 
     def _build(path: str) -> None:
-        spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
         ).write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
 
@@ -189,7 +190,7 @@ def files_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstructs exactly the union-by-name semantics. Schema merge is
     footer-only work at planning time; the scan itself stays map-only.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     out = scratch_dir("evo_")
     docs.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", "source", "n_chars"
@@ -246,7 +247,7 @@ def files_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the small-files mess is the FIXTURE a streaming job left behind;
     # the operation under test (and under time) is the compaction
     def _build(path: str) -> None:
-        spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
         ).repartition(64).write.mode("overwrite").parquet(path)
 
@@ -299,7 +300,7 @@ def files_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: text write + permissive parse are both map-only; the
     quarantined rows keep their raw text for replay/debugging.
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     line = F.when(
         F.col("o_orderkey") % 50 == 0, F.lit("###corrupt###")
     ).otherwise(
@@ -367,7 +368,7 @@ def files_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip the double exactly — both hash-proven against the
     oracle computed from the original flat table. Map-only both ways.
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     doc = F.to_json(
         F.struct(
             F.col("o_orderkey"),
@@ -454,9 +455,7 @@ def layout_zorder_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     .write...`` — the audit here proves the envelope math that makes
     that rewrite worth the IO.
     """
-    from datafusion_streams_spark.catalog import load_events
-
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     dims = ev.select(
         (F.col("user_id") % 256).alias("ux"),
         (F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")) % 256)

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datafusion_streams_spark.catalog import load_events, load_events_us
+from datafusion_streams_spark.catalog import load_events_us, table
 from datafusion_streams_spark.functions import (
     dsum,
     round6_micro,
@@ -203,7 +203,7 @@ def events_cumulative_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation small enough that the unpartitioned running-sum window is
     a single-task no-op. Day keys are formatted strings.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("first_day"))
     daily = firsts.groupBy(
         F.date_format("first_day", "yyyy-MM-dd").alias("day")
@@ -267,7 +267,7 @@ def timeseries_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning. Totals are exact decimal sums; forward fill is
     last(ignorenulls) over the same sort both engines apply.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     daily = ev.groupBy("user_id", F.to_date("ts").alias("day")).agg(
         dsum("value").alias("day_total")
     )
@@ -338,7 +338,7 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Monetary is an exact decimal sum so the ORDER BY monetary ties are
     resolved identically in both engines (user_id tiebreak regardless).
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     stats = ev.groupBy("user_id").agg(
         F.max(F.to_date("ts")).alias("last_day"),
         F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -972,7 +972,7 @@ def events_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials reduce the event log to at most 168 rows per partition
     before the exchange; shares divide two exact bigints.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     c = ev.groupBy(
         (F.dayofweek("ts") - 1).cast("long").alias("day_of_week"),
         F.hour("ts").cast("long").alias("hour_of_day"),
@@ -1026,7 +1026,7 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the event log (the same shape as events_retention); the
     final rollup is weeks^2-bounded. Revenue is an exact decimal sum.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("first_day"))
     j = ev.join(F.broadcast(firsts), "user_id").select(
         F.floor(F.datediff("first_day", F.lit("2024-01-01")) / 7)
@@ -1178,7 +1178,7 @@ def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast against the event log; the rollup key space is
     2 x days.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("first_day"))
     j = ev.join(F.broadcast(firsts), "user_id").select(
         F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
@@ -1439,7 +1439,7 @@ def events_error_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     it swaps for approx_count_distinct with the same query shape.
     Rates divide exact bigints.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     d = ev.groupBy(F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day")).agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
@@ -1500,7 +1500,7 @@ def events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. Jaccard divides three exactly-counted integers, so the
     doubles are bit-identical across engines.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     du = ev.select("event_type", "user_id").distinct()
     sizes = du.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     a = du.select(F.col("event_type").alias("type_a"), "user_id")
@@ -1591,7 +1591,7 @@ def events_hysteresis_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     differently-keyed reorder of equal rows is where engines silently
     disagree.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     crossing = F.when(F.col("value") >= _HYST_HIGH, F.lit("on")).when(
         F.col("value") <= _HYST_LOW, F.lit("off")
     )
@@ -1678,7 +1678,7 @@ def timeseries_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the lifecycle day keys); open/close doubles pass through
     untouched — no arithmetic, so no float-parity surface at all.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     bar = F.date_trunc("hour", F.col("ts"))
     w_open = Window.partitionBy("event_type", bar).orderBy("ts", "event_id")
     w_close = Window.partitionBy("event_type", bar).orderBy(
@@ -1888,7 +1888,7 @@ def events_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     order never reaches the engines — `text_unigram_logprob`
     discipline), then one final division + round.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(

@@ -31,7 +31,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from datafusion_streams_spark.catalog import load_documents
+from datafusion_streams_spark.catalog import load_documents, table
 from datafusion_streams_spark.codecs.bmp import decode_bmp, encode_bmp
 from datafusion_streams_spark.codecs.jpeg import decode_jpeg_gray, encode_jpeg_gray
 from datafusion_streams_spark.codecs.png import decode_png, encode_png
@@ -131,7 +131,7 @@ def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture texts are ASCII (verified), so the oracle's char-substr
     equals the byte-substr the pandas side performs.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     payloads = docs.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
     return payloads.mapInPandas(_extract_meta, META_SCHEMA)
 
@@ -179,7 +179,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     32-byte frames, every 4th sampled, digest over the sampled bytes.
     ASCII fixture text means the oracle can reconstruct the identical
     byte slices with substr."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     payloads = docs.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
     schema = StructType(
         [
@@ -274,7 +274,7 @@ def multimodal_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte==char alignment is required; both sides make that explicit by
     keeping only ASCII payloads (octet_length == char length) instead
     of silently assuming the fixture is pure ASCII."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     payloads = docs.where(F.octet_length("text") == F.length("text")).select(
         "doc_id", F.encode("text", "UTF-8").alias("payload")
     )
@@ -343,7 +343,7 @@ def multimodal_image_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     input row are O(1) for any sane resolution ceiling. All rectangle
     arithmetic is integer, trivially engine-identical.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = table(spark, sf_dir, "documents").select("doc_id")
     img = docs.select(
         "doc_id",
         (256 + (F.col("doc_id") % 7) * 128).alias("w"),
@@ -423,7 +423,7 @@ def multimodal_dedup_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical uppercase-hex rendering of the bytes (DuckDB's md5 is
     VARCHAR-only, so the hex transcoding is pinned on both sides).
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     payloads = docs.select(
         "doc_id",
         F.encode(F.substring("text", 1, _PREVIEW_BYTES), "UTF-8").alias("payload"),
@@ -728,7 +728,7 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     every mapInPandas pipeline here does. At 100 TB the encode stage
     is the object-store read and the decode stage is identical.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = table(spark, sf_dir, "documents").select("doc_id")
     encoded = docs.repartition(32, "doc_id").mapInPandas(
         _bmp_encode_batch, "doc_id long, payload binary"
     )
@@ -838,7 +838,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical two-stage map-only Arrow pipeline as
     multimodal_bmp_decode — no shuffle, no state.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = table(spark, sf_dir, "documents").select("doc_id")
     encoded = docs.repartition(32, "doc_id").mapInPandas(
         _png_encode_batch, "doc_id long, payload binary"
     )
@@ -958,7 +958,7 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical two-stage map-only Arrow pipeline as
     multimodal_bmp_decode — no shuffle, no state.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = table(spark, sf_dir, "documents").select("doc_id")
     encoded = docs.repartition(32, "doc_id").mapInPandas(
         _jpeg_encode_batch, "doc_id long, payload binary"
     )
@@ -1060,7 +1060,7 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical two-stage map-only Arrow pipeline as the BMP/PNG
     decodes — no shuffle, no state.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = table(spark, sf_dir, "documents").select("doc_id")
     encoded = docs.repartition(32, "doc_id").mapInPandas(
         _wav_encode_batch, "doc_id long, payload binary"
     )

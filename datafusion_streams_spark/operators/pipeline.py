@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_streams_spark.catalog import table
 from datafusion_streams_spark.functions import round6_ratio, sql_round6_ratio, tokens
 from datafusion_streams_spark.operators import query
 from datafusion_streams_spark.operators.dedup import minhash_ctes, minhash_pairs
@@ -30,7 +31,7 @@ def sample_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     TABLESAMPLE/rand(), which cannot be oracle-checked at all. At scale
     this is also restartable: membership is a pure function of the key.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     nibble = F.instr(
         F.lit("0123456789abcdef"), F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
     ) - 1
@@ -58,7 +59,7 @@ def sample_uniform_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     heaps, then one N-row merge on the driver side of the exchange; no
     global sort, no full shuffle, deterministic at any cluster size.
     """
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = table(spark, sf_dir, "orders")
     return (
         orders.select(
             "o_orderkey",
@@ -103,7 +104,7 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratically with corpus size; the oracle replays the identical
     LSH bucketing so the check is exact for what the operator claims.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     dupes = minhash_pairs(spark, sf_dir).select(F.col("b_id").alias("doc_id")).distinct()
     quality = docs.select(
         "doc_id", "lang", F.size(tokens("text")).cast("long").alias("n_tokens")
@@ -147,7 +148,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     compile-time CASE (at 100 strata it would broadcast-join a tiny
     rates dim instead — same plan shape).
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     nibble = F.instr(
         F.lit("0123456789abcdef"), F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
     ) - 1
@@ -217,7 +218,7 @@ def pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         text_repetition_filter,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     keep = (
         text_repetition_filter(spark, sf_dir)
         .filter(F.col("keep") == 1)
@@ -282,7 +283,7 @@ def sample_topk_per_stratum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     key = F.md5(F.col("doc_id").cast("string"))
     w = Window.partitionBy("lang").orderBy(key, "doc_id")
     return (
@@ -329,7 +330,7 @@ def sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: compiles to TakeOrderedAndProject — per-partition k-heaps,
     one k-row merge, no global sort.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(F.col("n_chars") > 0)
+    docs = table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
     u = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12), 16, 10).cast("long")
         + 1
@@ -396,7 +397,7 @@ def pipeline_token_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     per_doc = docs.select(
         "lang", "doc_id", F.size(tokens("text")).cast("long").alias("n_tok")
     )
@@ -463,7 +464,7 @@ def sample_quality_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     tiered = docs.select(
         "doc_id",
         "lang",
@@ -549,7 +550,7 @@ def pipeline_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from datafusion_streams_spark.operators.text import text_gopher_rules, text_seq_dedup
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     g = text_gopher_rules(spark, sf_dir).filter(F.col("gopher_pass") == 1).select("doc_id")
     s = text_seq_dedup(spark, sf_dir).filter(
         F.col("tokens_removed") * 2 <= F.col("tokens_kept") + F.col("tokens_removed")
@@ -620,7 +621,7 @@ def sample_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     source) audit emitted here is the dataset-card row a training job
     logs before writing shards.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     gk = F.md5("text")
     bucket = F.substring(F.md5(gk), 1, 2)
     split = (
@@ -728,7 +729,7 @@ def pipeline_curation_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
         text_readability,
     )
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     prose = text_code_detect(spark, sf_dir).filter(
         F.col("looks_like_code") == 0
     ).select("doc_id")
@@ -812,7 +813,7 @@ def sample_temperature_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyspace-sized report aggregate. The share window runs over
     |langs| rows.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     rate = F.least(
         F.lit(1.0), F.round(F.lit(TEMP_K) / F.sqrt(F.col("n_docs").cast("double")), 6)
@@ -881,7 +882,7 @@ def pipeline_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     h = F.md5(F.col("doc_id").cast("string"))
     keyed = docs.select(
         "doc_id",
@@ -945,7 +946,7 @@ def pipeline_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the standard snapshot-reconciliation shape (storage-level
     change data feeds replace the join when available).
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     v1 = docs.filter(F.col("doc_id") % 11 != 0).select(
         "doc_id", F.md5("text").alias("h")
     )
@@ -1039,7 +1040,7 @@ def sample_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums are exact integers (map-side combinable), and the quantiles
     run over R values per source, never over the corpus.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
     reps = docs.select(
@@ -1148,7 +1149,7 @@ def pipeline_incremental_curation(spark: SparkSession, sf_dir: str) -> DataFrame
     dropping definite-miss probes before this exact join. Verdicts are
     BIGINT 0/1 (engine-neutral hashing).
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     v1 = docs.filter(F.col("doc_id") % 11 != 0).select(
         "doc_id", F.md5("text").alias("h")
     )
@@ -1335,7 +1336,7 @@ def pipeline_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     alone, joined against the standing reference histogram (itself 60
     rows).
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     bucketed = docs.select(
         "lang",
         F.when(F.col("doc_id") % 2 == 0, "ref").otherwise("cur").alias("cohort"),
@@ -1457,7 +1458,7 @@ def sample_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-feed selected-share is the mixture-shift report DSIR papers
     print.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     hexv = "0123456789abcdef"
     tok = docs.select(
         "doc_id", "source", F.explode(tokens("text")).alias("t")

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datafusion_streams_spark.catalog import load_events, load_tables
+from datafusion_streams_spark.catalog import table
 from datafusion_streams_spark.functions import (
     davg,
     dec,
@@ -72,7 +72,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups so partial aggregation reduces ~everything map-side — the
     shuffle moves 6 rows per task regardless of input size.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= "1998-09-02")
         .groupBy("l_returnflag", "l_linestatus")
@@ -118,10 +118,9 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     side — never shuffles for the join; the final ORDER BY + LIMIT is
     TakeOrderedAndProject (per-partition heap, driver merge of 10 rows).
     """
-    t = load_tables(spark, sf_dir)
-    cust = t["customer"].filter(F.col("c_mktsegment") == "BUILDING")
-    orders = t["orders"].filter(F.col("o_orderdate") < "1997-01-01")
-    li = t["lineitem"].filter(F.col("l_shipdate") > "1997-01-01")
+    cust = table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    orders = table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1997-01-01")
+    li = table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1997-01-01")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -164,21 +163,21 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     only big-big join is lineitem⋈orders on the orderkey — co-shuffled
     once, reused through the aggregation.
     """
-    t = load_tables(spark, sf_dir)
-    orders = t["orders"].filter(
+    orders = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
     )
+    asia = table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
-        t["lineitem"]
+        table(spark, sf_dir, "lineitem")
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(t["customer"]), F.col("o_custkey") == F.col("c_custkey"))
+        .join(F.broadcast(table(spark, sf_dir, "customer")), F.col("o_custkey") == F.col("c_custkey"))
         .join(
-            F.broadcast(t["supplier"]),
+            F.broadcast(table(spark, sf_dir, "supplier")),
             (F.col("l_suppkey") == F.col("s_suppkey"))
             & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
-        .join(F.broadcast(t["nation"]), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(t["region"].filter(F.col("r_name") == "ASIA")), F.col("n_regionkey") == F.col("r_regionkey"))
+        .join(F.broadcast(table(spark, sf_dir, "nation")), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(F.broadcast(asia), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
         .agg(F.sum(disc_price()).cast("double").alias("revenue"))
     )
@@ -207,7 +206,7 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: all four predicates push down to the parquet scan (min/max
     row-group pruning on shipdate); only two columns are read.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= "1996-01-01")
@@ -249,15 +248,14 @@ LIMIT 20
 @query("q10_returned_items", oracle=_Q10_ORACLE, tags=("join", "agg", "topk"))
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Returned-item revenue per customer, top 20, deterministic tiebreak."""
-    t = load_tables(spark, sf_dir)
-    orders = t["orders"].filter(
+    orders = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
     )
-    li = t["lineitem"].filter(F.col("l_returnflag") == "R")
+    li = table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(t["customer"]), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
+        .join(F.broadcast(table(spark, sf_dir, "customer")), F.col("o_custkey") == F.col("c_custkey"))
+        .join(F.broadcast(table(spark, sf_dir, "nation")), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(F.sum(disc_price()).cast("double").alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
@@ -286,7 +284,7 @@ def filter_project_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filter + narrow projection; the plan must show PushedFilters and a
     6-column ReadSchema (asserted in tests/test_plans.py). Map-only at
     any scale — no shuffle."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.filter((F.col("l_quantity") >= 48) & (F.col("l_shipdate") >= "2000-01-01"))
         .select(
@@ -322,7 +320,7 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_count_distinct (HLL) — exposed in tests, kept out of the
     oracle because it is approximate by design.
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -344,7 +342,7 @@ GROUP BY ROLLUP(l_returnflag, l_linestatus)
 @query("agg_rollup", oracle=_ROLLUP_ORACLE, tags=("agg", "rollup"))
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy totals; NULL grouping keys normalized to 'ALL'."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(F.count(F.lit(1)).alias("n_items"), dsum("l_quantity").alias("sum_qty"))
@@ -371,7 +369,7 @@ GROUP BY CUBE(o_orderstatus, o_orderpriority)
 @query("agg_cube", oracle=_CUBE_ORACLE, tags=("agg", "cube"))
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over two dimensions — all 2^2 grouping sets in one pass."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     return (
         o.cube("o_orderstatus", "o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n_orders"), dsum("o_totalprice").alias("total_spend"))
@@ -404,10 +402,9 @@ GROUP BY p_type
 def join_broadcast_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact⋈dim with an explicit broadcast hint: the lineitem side never
     shuffles (asserted BroadcastHashJoin in tests/test_plans.py)."""
-    t = load_tables(spark, sf_dir)
-    part = t["part"].filter(F.col("p_size") <= 10)
+    part = table(spark, sf_dir, "part").filter(F.col("p_size") <= 10)
     return (
-        t["lineitem"]
+        table(spark, sf_dir, "lineitem")
         .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_type")
         .agg(F.count(F.lit(1)).alias("n_items"), dsum("l_quantity").alias("sum_qty"))
@@ -428,10 +425,9 @@ WHERE EXISTS (
 def join_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT SEMI join (EXISTS): emits each customer at most once, and the
     probe side only ships join keys — the cheapest join shape at scale."""
-    t = load_tables(spark, sf_dir)
-    big = t["orders"].filter(F.col("o_totalprice") > 300000)
+    big = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 300000)
     return (
-        t["customer"]
+        table(spark, sf_dir, "customer")
         .join(big, F.col("c_custkey") == F.col("o_custkey"), "left_semi")
         .select("c_custkey", "c_name", "c_acctbal")
     )
@@ -449,10 +445,9 @@ WHERE NOT EXISTS (
 @query("join_left_anti", oracle=_ANTI_ORACLE, tags=("join", "anti"))
 def join_left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT ANTI join (NOT EXISTS): customers with no orders."""
-    t = load_tables(spark, sf_dir)
     return (
-        t["customer"]
-        .join(t["orders"], F.col("c_custkey") == F.col("o_custkey"), "left_anti")
+        table(spark, sf_dir, "customer")
+        .join(table(spark, sf_dir, "orders"), F.col("c_custkey") == F.col("o_custkey"), "left_anti")
         .select("c_custkey", "c_name")
     )
 
@@ -471,10 +466,9 @@ GROUP BY c_custkey
 @query("join_left_outer_agg", oracle=_OUTER_ORACLE, tags=("join", "outer", "agg"))
 def join_left_outer_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEFT OUTER join preserving order-less customers, then aggregate."""
-    t = load_tables(spark, sf_dir)
     return (
-        t["customer"]
-        .join(t["orders"], F.col("c_custkey") == F.col("o_custkey"), "left")
+        table(spark, sf_dir, "customer")
+        .join(table(spark, sf_dir, "orders"), F.col("c_custkey") == F.col("o_custkey"), "left")
         .groupBy("c_custkey")
         .agg(
             F.count("o_orderkey").alias("n_orders"),
@@ -499,7 +493,7 @@ LIMIT 100
 def sort_topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-100: compiles to TakeOrderedAndProject — per-partition
     heaps + a 100-row driver merge, no global sort even at 100 TB."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.select("l_orderkey", "l_linenumber", "l_extendedprice")
         .orderBy(F.desc("l_extendedprice"), "l_orderkey", "l_linenumber")
@@ -517,7 +511,7 @@ _SET_B = "SELECT c_custkey FROM customer WHERE c_acctbal > 5000"
 
 @query("set_union", oracle=f"{_SET_A} UNION {_SET_B}", tags=("setop",))
 def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    c = table(spark, sf_dir, "customer")
     a = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     b = c.filter(F.col("c_acctbal") > 5000).select("c_custkey")
     return a.union(b).distinct()
@@ -525,7 +519,7 @@ def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("set_intersect", oracle=f"{_SET_A} INTERSECT {_SET_B}", tags=("setop",))
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    c = table(spark, sf_dir, "customer")
     a = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     b = c.filter(F.col("c_acctbal") > 5000).select("c_custkey")
     return a.intersect(b)
@@ -533,7 +527,7 @@ def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("set_except", oracle=f"{_SET_A} EXCEPT {_SET_B}", tags=("setop",))
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    c = table(spark, sf_dir, "customer")
     a = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     b = c.filter(F.col("c_acctbal") > 5000).select("c_custkey")
     return a.subtract(b)
@@ -563,7 +557,7 @@ FROM part
 def scalar_string_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String function battery (extends the reference's single exercised
     scalar, ``length`` — `/root/reference/tests/basic_tests.rs:60`)."""
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
+    p = table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.upper("p_name").alias("up_name"),
@@ -594,7 +588,7 @@ FROM orders
 
 @query("scalar_date_pack", oracle=_DATE_PACK_ORACLE, tags=("scalar", "date"))
 def scalar_date_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     d = F.col("o_orderdate").cast("date")
     return o.select(
         "o_orderkey",
@@ -637,7 +631,7 @@ def scalar_math_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     positive values."""
     from pyspark.sql.types import DecimalType
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -666,7 +660,7 @@ FROM events
 @query("scalar_json_extract", oracle=_JSON_ORACLE, tags=("scalar", "json"))
 def scalar_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON path extraction from the events.props payload column."""
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     return ev.select(
         "event_id",
         "event_type",
@@ -706,7 +700,7 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the flag) before hunting a code regression — and bump the bound
     to 3σ/6% only with the measured |est−exact| in the commit
     message."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.count_distinct("o_custkey").cast("long").alias("exact_customers"),
         F.approx_count_distinct("o_custkey", rsd=0.02).alias("_est"),
@@ -743,7 +737,7 @@ def agg_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit salting is the pattern for when it can't — e.g. exact
     distinct or collect-style aggregates per hot key.)
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     salted = ev.withColumn("salt", F.pmod(F.col("event_id"), F.lit(16)))
     phase1 = salted.groupBy("event_type", "salt").agg(
         F.count(F.lit(1)).alias("pc"),
@@ -773,7 +767,7 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT (wide conditional aggregation). The value list is explicit —
     at scale an implicit pivot first runs a distinct scan to discover
     columns, which is a whole extra pass over the fact table."""
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id")
         .pivot("event_type", ["click", "error", "purchase", "signup", "view"])
@@ -803,7 +797,7 @@ FROM lineitem
 @query("scalar_conditional_pack", oracle=_CONDITIONAL_ORACLE, tags=("scalar", "conditional"))
 def scalar_conditional_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE / NULLIF / GREATEST / LEAST / COALESCE battery."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -843,11 +837,10 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the HAVING filter runs post-aggregation on the (small)
     grouped result; the heavy lineitem->order rollup is one shuffle on
     the orderkey, reused by the customer broadcast join."""
-    t = load_tables(spark, sf_dir)
     return (
-        t["lineitem"]
-        .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(t["customer"]), F.col("o_custkey") == F.col("c_custkey"))
+        table(spark, sf_dir, "lineitem")
+        .join(table(spark, sf_dir, "orders"), F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(F.broadcast(table(spark, sf_dir, "customer")), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("c_custkey", "c_name", "o_orderkey", "o_totalprice")
         .agg(dsum("l_quantity").alias("total_qty"))
         .filter(F.col("total_qty") > 250)
@@ -873,14 +866,13 @@ def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Promotion revenue share (TPC-H Q14 shape): conditional aggregation
     ratio. Both sums are exact decimal; the ratio is one double division
     — identical in both engines."""
-    t = load_tables(spark, sf_dir)
-    li = t["lineitem"].filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-02-01")
     )
     promo = F.sum(F.when(F.col("p_type") == "PROMO", disc_price())).cast("double")
     total = F.sum(disc_price()).cast("double")
     return (
-        li.join(F.broadcast(t["part"]), F.col("l_partkey") == F.col("p_partkey"))
+        li.join(F.broadcast(table(spark, sf_dir, "part")), F.col("l_partkey") == F.col("p_partkey"))
         .agg(
             (F.lit(100.00) * promo / total).cast("double").alias("promo_revenue_pct"),
             F.count(F.lit(1)).alias("n_items"),
@@ -906,8 +898,8 @@ def q19_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape) — exercises CNF conversion / partial pushdown: the per-table
     conjuncts implied by the OR (e.g. p_brand IN (...)) are pushed below
     the join by Catalyst."""
-    t = load_tables(spark, sf_dir)
-    j = t["lineitem"].join(F.broadcast(t["part"]), F.col("p_partkey") == F.col("l_partkey"))
+    part = F.broadcast(table(spark, sf_dir, "part"))
+    j = table(spark, sf_dir, "lineitem").join(part, F.col("p_partkey") == F.col("l_partkey"))
     cond = (
         ((F.col("p_brand") == "Brand#1") & F.col("p_size").between(1, 15) & F.col("l_quantity").between(1, 20))
         | ((F.col("p_brand") == "Brand#2") & F.col("p_size").between(10, 30) & F.col("l_quantity").between(10, 30))
@@ -934,11 +926,10 @@ GROUP BY year(l_shipdate)
 def q12_priority_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Priority-class line counts per ship year (TPC-H Q12 shape):
     conditional counting over a fact-fact join."""
-    t = load_tables(spark, sf_dir)
     hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
-        t["lineitem"]
-        .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
+        table(spark, sf_dir, "lineitem")
+        .join(table(spark, sf_dir, "orders"), F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy(F.year("l_shipdate").cast("long").alias("ship_year"))
         .agg(
             F.count(F.when(hi, 1)).alias("high_priority"),
@@ -975,13 +966,12 @@ def q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics (pinned at sf0.001 by
     ``test_scalar_threshold_queries_survive_empty_inputs``). The anti
     join ships only keys."""
-    t = load_tables(spark, sf_dir)
-    c = t["customer"]
+    c = table(spark, sf_dir, "customer")
     pos = c.filter(F.col("c_acctbal") > 0)
     avg_bal = pos.agg(
         (F.sum(dec("c_acctbal")).cast("double") / F.count(F.lit(1))).alias("avg_bal")
     )
-    big_orders = t["orders"].filter(F.col("o_totalprice") > 250000)
+    big_orders = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 250000)
     return (
         c.crossJoin(F.broadcast(avg_bal))
         .filter(F.col("c_acctbal") > F.col("avg_bal"))
@@ -1016,7 +1006,7 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     — same query shape, bounded error, exposed via agg_approx_distinct's
     pattern.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.percentile("l_extendedprice", F.lit(0.5)).alias("p50_price"),
         F.percentile("l_extendedprice", F.lit(0.9)).alias("p90_price"),
@@ -1048,7 +1038,7 @@ def scalar_array_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns; scalar outputs keep the oracle hash stable."""
     from datafusion_streams_spark.functions import as_double_array
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double_array("embedding").alias("v")
     )
     v = F.col("v")
@@ -1102,11 +1092,11 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     inputs, not event-sized; the presence rollup is a 4-group reduce.
     """
     ev = (
-        load_events(spark, sf_dir)
+        table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet").select("c_custkey", "c_acctbal")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     j = ev.join(c, ev["user_id"] == c["c_custkey"], "full_outer")
     return (
         j.groupBy(
@@ -1155,7 +1145,7 @@ def agg_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     Measures are decimal-exact sums cast to double once, so the melted
     doubles hash identically to the oracle's UNION ALL formulation.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     wide = li.groupBy("l_returnflag").agg(
         dsum("l_quantity").alias("sum_qty"),
         dsum("l_extendedprice").alias("sum_price"),
@@ -1206,7 +1196,7 @@ def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays in tests/test_oracle_parity.py's accuracy test."""
     from pyspark.sql import Window
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     w = Window.partitionBy("l_returnflag").orderBy("l_extendedprice")
     wn = Window.partitionBy("l_returnflag")
     ranked = li.select(
@@ -1279,7 +1269,7 @@ def join_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs the same pair scan as this fixture; corpus rows rejoin by
     exact key afterwards if row-level output is needed.
     """
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
+    p = table(spark, sf_dir, "part")
     names = p.groupBy("p_name").agg(F.count(F.lit(1)).cast("long").alias("n_parts"))
     a = names.select(F.col("p_name").alias("name_a"), F.col("n_parts").alias("n_parts_a"))
     b = names.select(F.col("p_name").alias("name_b"), F.col("n_parts").alias("n_parts_b"))
@@ -1318,7 +1308,7 @@ def scalar_bitwise_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitwise-operator battery (and/or/xor/shifts/not/popcount) —
     exact integer semantics on both engines, the toolkit behind flag
     columns, bitmap indexes, and hash bucketing."""
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
+    p = table(spark, sf_dir, "part")
     size = F.col("p_size")
     return p.select(
         "p_partkey",
@@ -1366,11 +1356,11 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is forced (broadcast disabled via hint-free sort-merge on
     the salted key) to exercise the pattern the idiom exists for.
     """
-    ev = load_events(spark, sf_dir).withColumn(
+    ev = table(spark, sf_dir, "events").withColumn(
         "salt", F.pmod(F.col("event_id"), F.lit(_SALT_JOIN_N)).cast("int")
     )
     dim = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        table(spark, sf_dir, "customer")
         .select("c_custkey")
         .withColumn("salt", F.explode(F.array(*[F.lit(i) for i in range(_SALT_JOIN_N)])))
     )
@@ -1420,7 +1410,7 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE expression — width_bucket()'s edge-case conventions differ
     across engines, the arithmetic form does not.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     width = (_HIST_HI - _HIST_LO) / _HIST_BUCKETS
     bucket = (
         F.when(F.col("value") < _HIST_LO, F.lit(0))
@@ -1477,8 +1467,8 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_").replace("-", "_")
     ot, lt = f"dfs_orders_b_{tag}", f"dfs_lineitem_b_{tag}"
 
-    def ensure(table: str, src: str, cols: list[str], key: str) -> None:
-        if spark.catalog.tableExists(table):
+    def ensure(name: str, src: str, cols: list[str], key: str) -> None:
+        if spark.catalog.tableExists(name):
             return
         # a PRIOR session's managed-table directory may survive in the
         # warehouse while this session's catalog has no entry — clear it
@@ -1486,10 +1476,10 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         warehouse = spark.conf.get(
             "spark.sql.warehouse.dir", "spark-warehouse"
         ).removeprefix("file:")
-        shutil.rmtree(f"{warehouse}/{table}", ignore_errors=True)
-        spark.read.parquet(f"{sf_dir}/{src}.parquet").select(*cols).write.mode(
+        shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
+        table(spark, sf_dir, src).select(*cols).write.mode(
             "overwrite"
-        ).bucketBy(8, key).sortBy(key).saveAsTable(table)
+        ).bucketBy(8, key).sortBy(key).saveAsTable(name)
 
     ensure(ot, "orders", ["o_orderkey", "o_orderpriority"], "o_orderkey")
     ensure(lt, "lineitem", ["l_orderkey", "l_extendedprice"], "l_orderkey")
@@ -1527,7 +1517,7 @@ def agg_mode_tiebreak(spark: SparkSession, sf_dir: str) -> DataFrame:
     also the scalable shape: the heavy relation is (user, type) counts
     (keyspace-bounded), and the window ranks only that.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     c = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).cast("long").alias("n"))
     from pyspark.sql import Window
 
@@ -1580,7 +1570,7 @@ def agg_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on the group key with map-side partials, the
     same distributed-moments shape as events_value_trend.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     x = F.round("l_quantity", 0).cast("long")
     y = F.round(F.col("l_extendedprice") * 100, 0).cast("long")
     p = li.select("l_returnflag", x.alias("x"), y.alias("y"))
@@ -1631,8 +1621,8 @@ def agg_string_concat_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice(array_sort(...), 1, k) and emit the count alongside (the
     count column here shows the pattern).
     """
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation")
     return (
         s.join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
         .groupBy("n_name")
@@ -1689,7 +1679,7 @@ def join_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition heaps.
     """
     items = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
@@ -1763,7 +1753,7 @@ def scalar_map_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: pure per-row projection, whole-stage codegen, no shuffle.
     """
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
+    p = table(spark, sf_dir, "part")
     attrs = F.create_map(
         F.lit("brand"), F.col("p_brand"), F.lit("type"), F.col("p_type")
     )
@@ -1808,7 +1798,7 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     key — same single shuffle as the plain join; the NULL group is one
     key and skews like any hot key (salt it if NULLs dominate).
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     k = o.select(
         "o_orderkey",
         F.when(F.col("o_orderkey") % 10 == 0, F.lit(None))
@@ -1860,7 +1850,7 @@ def set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged unions — one shuffle each on the full row key; the counting
     projection here adds a tiny distinct-key rollup.
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderkey") % 3 == 0).select(
         F.col("o_orderstatus").alias("s"), F.col("o_orderpriority").alias("p")
     )
@@ -1944,7 +1934,7 @@ def agg_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle with map-side partial power sums — the
     classic distributed-moments sketch (constant state per group).
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     y = F.round(F.col("l_extendedprice") * 100, 0).cast("long")
     p = li.select("l_returnflag", y.alias("y"))
     d38 = "decimal(38,0)"
@@ -2002,7 +1992,7 @@ def agg_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     contributes to 4 grouping sets map-side); gid is computed from the
     grouping bit vector — no extra pass.
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     return (
         o.cube("o_orderstatus", "o_orderpriority")
         .agg(
@@ -2058,7 +2048,7 @@ def agg_min_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: single shuffle with map-side partial arg-extrema (constant
     state per group) — strictly cheaper than the window formulation.
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     cents_hi = F.round(F.col("o_totalprice") * 100, 0).cast("long") * 100000000
     ordkey = cents_hi + (F.lit(99999999) - F.col("o_orderkey"))
     ordkey_min = cents_hi + F.col("o_orderkey")
@@ -2123,7 +2113,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     base = li.select(
         "l_returnflag",
         "l_linestatus",
@@ -2179,7 +2169,7 @@ def scalar_regexp_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashing); counts via regexp_extract_all length on the oracle side
     mirror regexp_count exactly.
     """
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
+    p = table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.regexp_extract("p_name", r"^(\w+)\s+(\w+)", 2).alias("second_word"),
@@ -2214,7 +2204,7 @@ def agg_boolean_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-neutral hashing, and the ratio divides two exactly-counted
     integers (one deterministic float op, identical in both engines).
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     high = F.count_if(F.col("l_quantity") > 25)
     return li.groupBy("l_returnflag").agg(
         high.cast("long").alias("n_high_qty"),
@@ -2274,7 +2264,7 @@ def agg_linear_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     written as the same two-factor product in both engines, not a
     pow(), to keep the operation sequence literal).
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     p = li.select(
         "l_returnflag",
         F.round("l_quantity", 0).cast("long").alias("x"),

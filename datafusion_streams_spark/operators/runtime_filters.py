@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datafusion_streams_spark.catalog import load_events
+from datafusion_streams_spark.catalog import table
 from datafusion_streams_spark.functions import dsum, round6_ratio, sql_round6_ratio
 from datafusion_streams_spark.operators import query
 
@@ -118,16 +118,16 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mirrors the semi-join reduction the reference would inherit from
     DataFusion's dynamic filter pushdown (SURVEY.md §4.2).
     """
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet").filter(
+    nation = table(spark, sf_dir, "nation").filter(
         F.col("n_name").isin("NATION_7", "NATION_19")
     )
     customer = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        table(spark, sf_dir, "customer")
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .select("c_custkey", "n_name")
     )
     bloom = _bloom_build(customer, "c_custkey")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = table(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice"
     )
     prefiltered = orders.join(F.broadcast(bloom)).filter(_bloom_probe("o_custkey"))
@@ -184,7 +184,7 @@ def join_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from datafusion_streams_spark.layouts import memoized_layout
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").withColumn(
+    orders = table(spark, sf_dir, "orders").withColumn(
         "o_month", F.date_format("o_orderdate", "yyyy-MM")
     )
 
@@ -262,7 +262,7 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality) plus one broadcast of the candidate set. The final
     recount is exact — no sketch error bars to explain downstream.
     """
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("user_id")
+    ev = table(spark, sf_dir, "events").select("user_id")
     # single-file fixture arrives as one input partition; a real table
     # is pre-split — model that so phase 1 actually runs in parallel
     ev32 = ev.repartition(32)
@@ -302,7 +302,7 @@ def hll_merged_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches union-merged per event type. Shared by `agg_hll_mergeable`
     (which hash-checks the bound as data) and the accuracy/partition-
     invariance property tests (which inspect the raw estimate)."""
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     daily = (
         ev.select(
             "event_type",
@@ -366,7 +366,7 @@ def agg_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture before suspecting a code regression; widen only with the
     measured error recorded in the commit message.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     merged = hll_merged_estimates(spark, sf_dir)
     exact = ev.select("event_type", "user_id").distinct().groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("exact_users")
@@ -442,7 +442,7 @@ def agg_approx_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     sk = (
         ev.agg(F.expr("approx_top_k(user_id, 10, 1000000)").alias("top"))
         .select(F.explode("top").alias("e"))

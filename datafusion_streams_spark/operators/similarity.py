@@ -25,6 +25,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datafusion_streams_spark.catalog import table
 from datafusion_streams_spark.functions import (
     as_double_array,
     cosine,
@@ -113,7 +114,7 @@ def _normalized_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     _NORMALIZED_SQL (same division, same element order)."""
     from datafusion_streams_spark.functions import l2_norm
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double_array("embedding").alias("v")
     )
     # repartition: the single-file fixture scan is one split; spread the
@@ -203,7 +204,7 @@ def _fence_quadratic(spark: SparkSession, sf_dir: str, op: str) -> None:
     The count is a parquet metadata scan (no column IO), so the guard
     costs one cheap job and prevents a silent O(n^2) blow-up when
     someone points the baseline at a production-sized table."""
-    n_rows = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
+    n_rows = table(spark, sf_dir, "embeddings").count()
     if n_rows > MAX_QUADRATIC_ROWS:
         raise ValueError(
             f"{op}: corpus has {n_rows} vectors > {MAX_QUADRATIC_ROWS}; "
@@ -452,7 +453,7 @@ def _lsh_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified sign-LSH cosine pairs (>= PAIR_THRESHOLD) — the Spark
     mirror of ``lsh_ctes``'s ``lsh_pairs``, shared by
     ``ann_lsh_bucketed`` and ``dedup_embedding_cosine``."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = table(spark, sf_dir, "embeddings")
     bits = lsh_bits_per_band(emb.count())  # metadata-cheap count
     sig = _lsh_signature_df(emb.repartition(spark.sparkContext.defaultParallelism, "vec_id"), N_SIGN_BANDS, bits)
     return _lsh_bucket_scored_pairs(sig, N_SIGN_BANDS, bits)
@@ -551,7 +552,7 @@ def ann_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = table(spark, sf_dir, "embeddings")
     q_rows = (
         e.filter(F.col("vec_id") < 10).select("vec_id", "embedding").collect()
     )  # tiny by construction: the query set, not the corpus
@@ -646,7 +647,7 @@ def similarity_pairs_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    raw = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    raw = table(spark, sf_dir, "embeddings")
     # metadata-cheap row count -> number of blocks; B grows with the
     # corpus so tile memory stays constant at any scale. The parallelism
     # floor (~2 tiles per core, tiles = B*(B+1)/2) applies only once the
@@ -794,7 +795,7 @@ def ann_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-query candidate set shrinks by the label selectivity before
     any distance math runs.
     """
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = table(spark, sf_dir, "embeddings")
     lab = e.select("vec_id", "label")
     n = _normalized_df(spark, sf_dir).join(lab, "vec_id")
     q = n.filter(F.col("vec_id") < 10).select(
@@ -1024,7 +1025,7 @@ def embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from datafusion_streams_spark.functions import as_double_array
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double_array("embedding").alias("v")
     )
     m = e.select(
@@ -1090,7 +1091,7 @@ def embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from datafusion_streams_spark.functions import dot
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double_array("embedding").alias("v")
     )
     nrm = e.select(
@@ -1181,7 +1182,7 @@ def embedding_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit runs over a deterministic hash sample of queries, same
     contract.
     """
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double_array("embedding").alias("v")
     )
     e = e.repartition(spark.sparkContext.defaultParallelism, "vec_id")
@@ -1293,7 +1294,7 @@ def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     64 groups, perfectly combinable map-side; no joins, no windows,
     nothing driver-sized but the 64-row report.
     """
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = table(spark, sf_dir, "embeddings").select(
         as_double_array("embedding").alias("v")
     )
     el = e.select(F.posexplode("v").alias("pos", "val")).select(

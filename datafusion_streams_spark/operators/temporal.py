@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datafusion_streams_spark.catalog import load_events
+from datafusion_streams_spark.catalog import table
 from datafusion_streams_spark.functions import dec
 from datafusion_streams_spark.operators import query
 
@@ -55,7 +55,7 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-ts purchases are pre-aggregated (MAX value) to mirror a
     deterministic ASOF pick.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts", F.lit(1).alias("kind"),
         F.lit(None).cast("timestamp_ntz").alias("purchase_ts"),
@@ -121,7 +121,7 @@ def join_range_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     to its covering buckets, equi-join on bucket, re-check the
     predicate.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     bands = spark.createDataFrame(
         [("low", 0.0, 50.0), ("mid", 50.0, 150.0), ("high", 150.0, 100000.0)],
         "band string, lo double, hi double",
@@ -172,7 +172,7 @@ def rollup_multiresolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     below, so refreshing the hierarchy costs ~one scan of raw plus
     geometric small change.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     minute = ev.groupBy(
         F.date_trunc("minute", "ts").alias("minute_start"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n"), F.sum(dec("value")).alias("v"))
@@ -215,7 +215,7 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (kind 0 before 1), making it visible to the same-instant
     click — exactly DuckDB's ASOF <= tie rule, hash-verified.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts", F.lit(1).alias("kind"),
         F.lit(None).cast("timestamp_ntz").alias("purchase_ts"),
@@ -308,7 +308,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side CASE over epoch-microsecond deltas (exact integers, no
     float parity risk).
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts", F.lit(1).alias("kind"),
         F.lit(None).cast("timestamp_ntz").alias("p_ts"),
@@ -406,7 +406,7 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Completes the as-of family: backward (join_asof), forward
     (join_asof_forward), nearest (join_asof_nearest), tolerance (here).
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts", F.lit(1).alias("kind"),
         F.lit(None).cast("timestamp_ntz").alias("purchase_ts"),

@@ -18,7 +18,7 @@ from datafusion_streams_spark.functions import (
     sql_round6_ratio,
     tokens,
 )
-from datafusion_streams_spark.catalog import load_documents
+from datafusion_streams_spark.catalog import load_documents, table
 from datafusion_streams_spark.operators import query
 
 # Marker stopwords per language (tiny, deterministic; a real system
@@ -79,7 +79,7 @@ FROM scored
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language ID with a deterministic argmax (priority
     order breaks ties, 'und' when nothing matches)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     toks = tokens("text")
     d = docs.select(
         "doc_id",
@@ -136,7 +136,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite document quality: length saturation + stopword ratio +
     punctuation penalty. Every term is a single-op float expression
     mirrored verbatim in the oracle (identical FP results)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     toks = tokens("text")
     base = docs.select(
         "doc_id",
@@ -190,7 +190,7 @@ FROM documents
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace + BPE-ish-regex token counts (the cheap proxy every
     training-data pipeline needs before the real tokenizer runs)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     toks = tokens("text")
     return docs.select(
         "doc_id",
@@ -221,7 +221,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-insensitive bag-of-words fingerprint: md5 over the sorted
     distinct token set. Catches re-ordered copies that exact hashing
     misses and costs one map + one digest-keyed shuffle."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     fp = F.md5(F.array_join(F.array_sort(F.array_distinct(tokens("text"))), " "))
     return (
         docs.select("doc_id", fp.alias("fingerprint"))
@@ -251,7 +251,7 @@ def lateral_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash keys; final top-20 is TakeOrderedAndProject. This is the
     vocabulary/document-frequency primitive under TF-IDF and stopword
     mining."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     return (
         docs.select("doc_id", F.explode(F.array_distinct(tokens("text"))).alias("token"))
         .groupBy("token")
@@ -284,7 +284,7 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     the redaction pass every training-data pipeline runs. Pure
     regexp_replace (codegen, map-only); the digest proves byte-exact
     scrubbing against the oracle."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     email_re = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
     phone_re = r"\b\d{3}[-. ]?\d{3}[-. ]?\d{4}\b"
     clean = F.regexp_replace(
@@ -336,7 +336,7 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     6dp before ranking (libm last-ulp differences), with a term-name
     tiebreak, so the top-k set is engine-stable.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     n_docs = docs.count()
     tok = docs.select("doc_id", F.explode(tokens("text")).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
@@ -895,7 +895,7 @@ def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: map-only projection; the filter fuses into any downstream
     scan (predicate pushdown applies to gopher_pass = true consumers).
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     tk = tokens("text")
     n_hash = F.length("text") - F.length(F.replace(F.col("text"), F.lit("#"), F.lit("")))
     n_ellipsis = (
@@ -981,7 +981,7 @@ def text_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     halves); token totals are exact integers. Scale: one shuffle on the
     (lang, source) keyspace; the corpus-total is a broadcast scalar.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     per_doc = docs.select(
         "lang",
         "source",
@@ -1398,7 +1398,7 @@ def text_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     trivially small at any corpus size; the heavy input scan reads two
     columns (pruned projection).
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     sl = docs.groupBy("source", "lang").agg(
         F.count(F.lit(1)).cast("long").alias("c"),
         F.sum("n_chars").cast("long").alias("chars"),
@@ -1497,7 +1497,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. The rank window runs AFTER the limit — never a global sort
     of the vocabulary.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     tf = (
         docs.select(F.explode(tokens("text")).alias("term"))
         .groupBy("term")
@@ -1576,7 +1576,7 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: map-only projection over the text column — no shuffle.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     n_words = F.size(tokens("text")).cast("long")
     n_sentences = F.greatest(
         F.size(F.split(F.col("text"), r"[.!?]+")) - 1, F.lit(1)
@@ -1648,7 +1648,7 @@ def text_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: map-only regex projection — no shuffle; at 100 TB this is
     the cheapest router in the curation DAG.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     n_chars_t = F.length("text").cast("long")
     n_symbols = (
         F.length("text")
@@ -1737,7 +1737,7 @@ def text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT(DISTINCT doc_id) over the line key); the per-doc rollup
     reuses the doc_id key. Fraction divides exact bigints.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     lines = (
         docs.select(
             "doc_id",
@@ -1819,7 +1819,7 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     when a consumer wants it; the stats columns keep the oracle
     portable.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     tk = (
         docs.select("doc_id", F.explode(tokens("text")).alias("t"))
         .filter(F.length("t") > 0)
@@ -1886,7 +1886,7 @@ def text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoffs (the registered agg_approx_percentile pattern) — the
     3-way split only needs two cut points per language.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "lang")
+    docs = table(spark, sf_dir, "documents").select("doc_id", "lang")
     lp = text_unigram_logprob(spark, sf_dir)
     w = Window.partitionBy("lang").orderBy("avg_neg_logprob", "doc_id")
     scored = lp.join(docs, "doc_id").select(
@@ -2257,7 +2257,7 @@ def text_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the doc_id rollup. Model-based filtering of 100 TB is exactly this
     shape — inference cost linear in tokens, zero driver state.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     tok = docs.select("doc_id", F.explode(tokens("text")).alias("t")).filter(
         F.length("t") > 0
     )

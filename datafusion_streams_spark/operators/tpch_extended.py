@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datafusion_streams_spark.catalog import load_tables
+from datafusion_streams_spark.catalog import table
 from datafusion_streams_spark.functions import dec, disc_price, dsum
 from datafusion_streams_spark.operators import query
 
@@ -34,14 +34,14 @@ _DISC_PRICE_SQL = (
 )
 
 
-def _derived_partsupp(t: dict[str, DataFrame]) -> DataFrame:
+def _derived_partsupp(lineitem: DataFrame) -> DataFrame:
     """partsupp surrogate: min observed price per (part, supplier).
 
     MIN over double is a comparison (no float arithmetic), so it is
     bit-exact under any partitioning / combine order.
     """
     return (
-        t["lineitem"]
+        lineitem
         .groupBy(F.col("l_partkey").alias("ps_partkey"), F.col("l_suppkey").alias("ps_suppkey"))
         .agg(F.min("l_extendedprice").alias("ps_supplycost"))
     )
@@ -81,22 +81,21 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     partsupp instead of a per-row rescan; supplier/nation/region are
     broadcast so the only shuffle is the partsupp group-by.
     """
-    t = load_tables(spark, sf_dir)
     euro_sup = (
-        t["supplier"]
-        .join(F.broadcast(t["nation"]), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(t["region"]), F.col("n_regionkey") == F.col("r_regionkey"))
+        table(spark, sf_dir, "supplier")
+        .join(F.broadcast(table(spark, sf_dir, "nation")), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(F.broadcast(table(spark, sf_dir, "region")), F.col("n_regionkey") == F.col("r_regionkey"))
         .filter(F.col("r_name") == "EUROPE")
         .select("s_suppkey", "s_acctbal", "s_name", "n_name")
     )
-    euro_ps = _derived_partsupp(t).join(
+    euro_ps = _derived_partsupp(table(spark, sf_dir, "lineitem")).join(
         F.broadcast(euro_sup), F.col("ps_suppkey") == F.col("s_suppkey")
     )
     w = Window.partitionBy("ps_partkey")
     best = euro_ps.withColumn("min_cost", F.min("ps_supplycost").over(w)).filter(
         F.col("ps_supplycost") == F.col("min_cost")
     )
-    parts = t["part"].filter(
+    parts = table(spark, sf_dir, "part").filter(
         F.col("p_size").between(10, 30) & (F.col("p_type") == "STANDARD")
     )
     return best.join(F.broadcast(parts), F.col("ps_partkey") == F.col("p_partkey")).select(
@@ -132,11 +131,10 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the date filter pushes to the orders scan; the semi join
     ships only orderkeys and short-circuits per key.
     """
-    t = load_tables(spark, sf_dir)
-    o = t["orders"].filter(
+    o = table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-07-01") & (F.col("o_orderdate") < "1996-10-01")
     )
-    returned = t["lineitem"].filter(F.col("l_returnflag") == "R").select("l_orderkey")
+    returned = table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R").select("l_orderkey")
     return (
         o.join(returned, F.col("o_orderkey") == F.col("l_orderkey"), "left_semi")
         .groupBy("o_orderpriority")
@@ -175,14 +173,14 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the two fact shuffles (lineitem↔orders on orderkey, then
     ↔customer on custkey) are the only data movement.
     """
-    t = load_tables(spark, sf_dir)
-    n1 = t["nation"].select(
+    nation = table(spark, sf_dir, "nation")
+    n1 = nation.select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
     )
-    n2 = t["nation"].select(
+    n2 = nation.select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
     )
-    li = t["lineitem"].filter(
+    li = table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
     pair = (
@@ -190,9 +188,9 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         | ((F.col("supp_nation") == "NATION_7") & (F.col("cust_nation") == "NATION_3"))
     )
     return (
-        li.join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
+        li.join(table(spark, sf_dir, "orders"), F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(table(spark, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
+        .join(F.broadcast(table(spark, sf_dir, "supplier")), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
         .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
         .filter(pair)
@@ -229,26 +227,26 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     per order year. Numerator and denominator are exact decimal sums;
     the share is a single double division, identical in both engines.
     """
-    t = load_tables(spark, sf_dir)
-    n1 = t["nation"].select(
+    nation = table(spark, sf_dir, "nation")
+    n1 = nation.select(
         F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation")
     )
-    n2 = t["nation"].select(
+    n2 = nation.select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_regionkey").alias("n2_regionkey")
     )
-    promo_parts = t["part"].filter(F.col("p_type") == "PROMO").select("p_partkey")
+    promo_parts = table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select("p_partkey")
     nat_vol = F.when(F.col("supp_nation") == "NATION_3", disc_price()).otherwise(
         F.lit(0).cast("decimal(18,2)")
     )
     return (
-        t["lineitem"]
+        table(spark, sf_dir, "lineitem")
         .join(F.broadcast(promo_parts), F.col("l_partkey") == F.col("p_partkey"))
-        .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(t["customer"], F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(table(spark, sf_dir, "orders"), F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(table(spark, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
+        .join(F.broadcast(table(spark, sf_dir, "supplier")), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
         .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
-        .join(F.broadcast(t["region"]), F.col("n2_regionkey") == F.col("r_regionkey"))
+        .join(F.broadcast(table(spark, sf_dir, "region")), F.col("n2_regionkey") == F.col("r_regionkey"))
         .filter(F.col("r_name") == "EUROPE")
         .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
         .agg(
@@ -283,17 +281,16 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fixtures lack ps_supplycost, so cost = retail price × quantity).
     All arithmetic stays in DECIMAL until the final cast.
     """
-    t = load_tables(spark, sf_dir)
-    red_parts = t["part"].filter(F.col("p_name").like("%red%")).select(
+    red_parts = table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%")).select(
         "p_partkey", "p_retailprice"
     )
     profit = disc_price() - dec("p_retailprice") * dec("l_quantity", 9, 2)
     return (
-        t["lineitem"]
+        table(spark, sf_dir, "lineitem")
         .join(F.broadcast(red_parts), F.col("l_partkey") == F.col("p_partkey"))
-        .join(t["orders"], F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(t["nation"]), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(table(spark, sf_dir, "orders"), F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(F.broadcast(table(spark, sf_dir, "supplier")), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(F.broadcast(table(spark, sf_dir, "nation")), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("long").alias("o_year"),
@@ -333,15 +330,14 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     where the oracle correctly returns 0 rows — and cost an extra
     job at plan time).
     """
-    t = load_tables(spark, sf_dir)
     nat_sup = (
-        t["supplier"]
-        .join(F.broadcast(t["nation"]), F.col("s_nationkey") == F.col("n_nationkey"))
+        table(spark, sf_dir, "supplier")
+        .join(F.broadcast(table(spark, sf_dir, "nation")), F.col("s_nationkey") == F.col("n_nationkey"))
         .filter(F.col("n_name") == "NATION_5")
         .select("s_suppkey")
     )
     per_part = (
-        t["lineitem"]
+        table(spark, sf_dir, "lineitem")
         .join(F.broadcast(nat_sup), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy(F.col("l_partkey").alias("p_key"))
         .agg(dsum("l_extendedprice").alias("part_value"))
@@ -383,10 +379,9 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per distinct count — negligible. Customers with no qualifying
     orders survive via the left join and count 0.
     """
-    t = load_tables(spark, sf_dir)
-    o = t["orders"].filter(F.col("o_orderpriority") != "5-LOW")
+    o = table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "5-LOW")
     per_cust = (
-        t["customer"]
+        table(spark, sf_dir, "customer")
         .join(o, F.col("c_custkey") == F.col("o_custkey"), "left")
         .groupBy("c_custkey")
         .agg(F.count("o_orderkey").alias("c_count"))
@@ -424,9 +419,8 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson at sf0.001, pinned by
     ``test_scalar_threshold_queries_survive_empty_inputs``).
     """
-    t = load_tables(spark, sf_dir)
     revenue = (
-        t["lineitem"]
+        table(spark, sf_dir, "lineitem")
         # the explicit isNotNull matches the null filter the supplier
         # equi-join pushes below the agg on the SELECT branch, so both
         # branches' exchange subtrees canonicalize identically and AQE
@@ -444,7 +438,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     max_rev = revenue.agg(F.max("total_revenue").alias("max_rev"))
     return (
-        F.broadcast(t["supplier"])
+        F.broadcast(table(spark, sf_dir, "supplier"))
         .join(
             revenue.crossJoin(F.broadcast(max_rev)).filter(
                 F.col("total_revenue") == F.col("max_rev")
@@ -479,15 +473,14 @@ def q16_parts_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase agg (dedup shuffle then count) — Spark handles the
     expansion, and the anti join ships only the tiny denylist.
     """
-    t = load_tables(spark, sf_dir)
-    parts = t["part"].filter(
+    parts = table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & (F.col("p_type") != "PROMO")
         & F.col("p_size").isin(1, 4, 9, 16, 25, 36, 49)
     )
-    bad_sup = t["supplier"].filter(F.col("s_acctbal") < 0).select("s_suppkey")
+    bad_sup = table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
     return (
-        t["lineitem"]
+        table(spark, sf_dir, "lineitem")
         .join(bad_sup, F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
         .join(F.broadcast(parts), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
@@ -524,9 +517,8 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (semi-join first), then re-joined — at 100 TB this avoids
     aggregating the 99% of lineitem that can never match.
     """
-    t = load_tables(spark, sf_dir)
-    brand_parts = t["part"].filter(F.col("p_brand") == "Brand#3").select("p_partkey")
-    li = t["lineitem"].join(
+    brand_parts = table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3").select("p_partkey")
+    li = table(spark, sf_dir, "lineitem").join(
         F.broadcast(brand_parts), F.col("l_partkey") == F.col("p_partkey"), "left_semi"
     )
     pavg = li.groupBy(F.col("l_partkey").alias("avg_partkey")).agg(
@@ -575,10 +567,9 @@ def q20_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume check shuffles only (suppkey, partkey) pairs; the final
     semi join is against ≤|supplier| keys.
     """
-    t = load_tables(spark, sf_dir)
-    red_parts = t["part"].filter(F.col("p_name").like("red%")).select("p_partkey")
+    red_parts = table(spark, sf_dir, "part").filter(F.col("p_name").like("red%")).select("p_partkey")
     movers = (
-        t["lineitem"]
+        table(spark, sf_dir, "lineitem")
         .filter((F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01"))
         .join(F.broadcast(red_parts), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_suppkey", "l_partkey")
@@ -587,9 +578,9 @@ def q20_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
     )
     return (
-        t["supplier"]
+        table(spark, sf_dir, "supplier")
         .join(movers, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
-        .join(F.broadcast(t["nation"]), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(F.broadcast(table(spark, sf_dir, "nation")), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_name", "n_name")
     )
 
@@ -631,21 +622,21 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     any scale. This is the scale rewrite: TPC-H's double correlated
     rescan of lineitem becomes one shuffle on (orderkey, suppkey).
     """
-    t = load_tables(spark, sf_dir)
-    per_os = t["lineitem"].groupBy(
+    lineitem = table(spark, sf_dir, "lineitem")
+    per_os = lineitem.groupBy(
         F.col("l_orderkey").alias("os_orderkey"), "l_suppkey"
     ).agg(F.max(F.when(F.col("l_returnflag") == "R", 1).otherwise(0)).alias("has_r"))
     ord_stats = per_os.groupBy("os_orderkey").agg(
         F.count(F.lit(1)).alias("n_supp"),
         F.sum("has_r").alias("n_ret_supp"),
     )
-    fin_orders = t["orders"].filter(F.col("o_orderstatus") == "F").select("o_orderkey")
-    l1 = t["lineitem"].filter(F.col("l_returnflag") == "R")
+    fin_orders = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select("o_orderkey")
+    l1 = lineitem.filter(F.col("l_returnflag") == "R")
     return (
         l1.join(fin_orders, F.col("l_orderkey") == F.col("o_orderkey"), "left_semi")
         .join(ord_stats, F.col("l_orderkey") == F.col("os_orderkey"))
         .filter((F.col("n_supp") >= 2) & (F.col("n_ret_supp") == 1))
-        .join(F.broadcast(t["supplier"]), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(F.broadcast(table(spark, sf_dir, "supplier")), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
     )

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datafusion_streams_spark.catalog import load_events
+from datafusion_streams_spark.catalog import table
 from datafusion_streams_spark.functions import (
     dec,
     dsum,
@@ -53,7 +53,7 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE skew-split. For extreme skew, pre-aggregate with a salted
     partial top-k before the window (same pattern as salted joins).
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), "o_orderkey")
     return (
         o.select(
@@ -87,7 +87,7 @@ FROM orders
 def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running per-customer spend; decimal accumulation keeps the running
     values exact regardless of partition/merge order."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -118,7 +118,7 @@ FROM events
 @query("window_lag_delta", oracle=_LAG_ORACLE, tags=("window", "analytic", "events"))
 def window_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user consecutive-event value delta (lag)."""
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("value").over(w)
     return ev.select(
@@ -206,7 +206,7 @@ WINDOW w AS (PARTITION BY s_nationkey ORDER BY s_acctbal DESC, s_suppkey)
 
 @query("window_rank_battery", oracle=_RANK_ORACLE, tags=("window", "rank"))
 def window_rank_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    s = table(spark, sf_dir, "supplier")
     w = Window.partitionBy("s_nationkey").orderBy(F.desc("s_acctbal"), "s_suppkey")
     wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return s.select(
@@ -242,7 +242,7 @@ def events_tumbling_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time window (batch form; the streaming form
     in streaming/queries.py must produce the identical result — the
     prefix-consistency property from the Structured Streaming paper)."""
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("total_value"))
@@ -279,7 +279,7 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding window: 1-hour width, 30-minute slide — each event lands in
     exactly two windows. The oracle reconstructs the assignment by
     bucketing + self-union."""
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("total_value"))
@@ -325,7 +325,7 @@ def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     F.session_window). Oracle reconstructs sessions via gaps-and-islands:
     a session merges an event iff its ts is strictly before the current
     session end (last event + gap) — Spark's [start, end) convention."""
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("total_value"))
@@ -372,7 +372,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     gates (a missing earlier stage nulls the comparison) identically
     in both engines.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(
         F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view"),
         F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("t_click"),
@@ -425,7 +425,7 @@ def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cohort day is emitted as a formatted string (engine-portable; DATE
     stringification differs between Spark and DuckDB drivers).
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     firsts = ev.groupBy("user_id").agg(F.min("ts").alias("t0"))
     activity = (
         ev.join(F.broadcast(firsts), "user_id")
@@ -469,7 +469,7 @@ def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     w = W.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    c = table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
         "c_mktsegment",
@@ -587,7 +587,7 @@ def events_path_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle to sessionize per user, one to count paths;
     session arrays are bounded by session length, never corpus-sized.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev_ts = F.lag("ts").over(w)
     gap = F.expr("INTERVAL 30 MINUTES")
@@ -655,7 +655,7 @@ def events_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     the day-range join replicates that small relation at most 7x; days
     themselves broadcast. Output day is a string (DATE outputs diverge
     between engines' hashers — repo discipline)."""
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     daily = ev.select(
         F.col("ts").cast("date").alias("day"), "user_id"
     ).distinct()
@@ -720,7 +720,7 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans a single exchange + sort); deterministic under any
     parallelism via the (ts, event_id) total tiebreak.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
     is_start = F.when(
@@ -787,7 +787,7 @@ def events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (v.ts, v.event_id) DESC tiebreak makes the winner unique, so the
     result is deterministic at any parallelism.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
         "user_id",
@@ -859,7 +859,7 @@ def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame count. Scale: one shuffle on o_custkey; the two-sided frame
     is a single sliding pass per partition (no re-scan per row).
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -922,7 +922,7 @@ def window_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     then per-partition sorts; island rows never exceed event rows and
     the final per-type rollup is a 5-row result.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     w_all = Window.partitionBy("user_id").orderBy("ts", "event_id")
     w_type = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     islands = (
@@ -983,7 +983,7 @@ def window_equidepth_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only) or a range-partitioned two-pass assignment, trading the
     single-point sort for bounded error or one extra exchange.
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     w = Window.orderBy("o_totalprice", "o_orderkey")
     return (
         o.select("o_totalprice", F.ntile(10).over(w).cast("long").alias("bucket"))
@@ -1047,7 +1047,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     control limits tolerate sketch error by design (they are 3σ bands,
     not exact order statistics).
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     med = ev.groupBy("event_type").agg(
         F.percentile("value", F.lit(0.5)).alias("med")
     )
@@ -1120,7 +1120,7 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     below ~4096 occupants) removes the cliff but needs a custom UDAF —
     not worth leaving codegen'd built-ins for the fixture's regime.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     bits = ev.select(
         F.col("ts").cast("date").alias("day"),
         F.shiftright("user_id", 6).alias("container"),
@@ -1173,7 +1173,7 @@ def agg_bitmap_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     retention / audience-overlap question from it. Zero-overlap days
     filter out to mirror the user-level inner join exactly.
     """
-    ev = load_events(spark, sf_dir)
+    ev = table(spark, sf_dir, "events")
     containers = (
         ev.select(
             F.col("ts").cast("date").alias("day"),

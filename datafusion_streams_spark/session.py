@@ -49,7 +49,7 @@ def get_session(app_name: str = "datafusion-streams-spark", cpus: str | None = N
         .config("spark.sql.parquet.filterPushdown", "true")
         # fixture events.parquet carries TIMESTAMP(NANOS); Spark has no
         # nanosecond timestamp type, so read as long and convert (see
-        # catalog.load_events) — DuckDB applies the same ns->us floor.
+        # catalog.normalize_event_ts) — DuckDB applies the same ns->us floor.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")

@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from datafusion_streams_spark.catalog import normalize_event_ts, table
+
 # The events files' names; a stream reads them from their directory.
 EVENTS_GLOB = "events*.parquet"
 
@@ -81,19 +83,6 @@ def events_raw_schema(sf_dir: str) -> StructType:
     )
 
 
-def normalize_event_ts(df: DataFrame) -> DataFrame:
-    """Normalize ``ts`` to microsecond TIMESTAMP_NTZ whatever shape it
-    arrived in: ns-long -> integer floor division (matching DuckDB's
-    nanos->micros narrowing); native timestamp -> cast only. The dtype
-    guard mirrors catalog.load_events — dividing an already-micros
-    column is the 1000x-off bug class."""
-    if dict(df.dtypes).get("ts") == "bigint":
-        return df.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
-        )
-    return df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-
-
 # Opt-in micro-batch split for scale probes. None (the default) keeps
 # the source's own behavior: Trigger.AvailableNow with no file cap
 # drains every available file in ONE trigger. tools/scale_probe.py
@@ -107,10 +96,9 @@ EVENTS_MAX_FILES_PER_TRIGGER: int | None = None
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming read of the events fixture with ``ts`` normalized to
-    microsecond TIMESTAMP_NTZ — the streaming twin of
-    ``catalog.load_events``, sharing its dtype-guard semantics. Every
-    event-time streaming query goes through here so the micros/nanos
-    decision lives in exactly one place.
+    microsecond TIMESTAMP_NTZ by ``catalog.normalize_event_ts``, the
+    guard ``catalog.table`` applies to the batch read, so the
+    micros/nanos decision lives in exactly one place.
 
     One root, ``sf_dir``, filtered by name: the driver lists it inline
     on every trigger, where a glob makes each file a root and above 32
@@ -201,7 +189,7 @@ def _kafka_shape(ev: DataFrame) -> DataFrame:
 
 def kafka_like_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic Kafka-shaped batch table from the events fixture."""
-    return _kafka_shape(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return _kafka_shape(table(spark, sf_dir, "events"))
 
 
 def kafka_like_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_streams_spark.catalog import table
 from datafusion_streams_spark.functions import dsum
 from datafusion_streams_spark.operators import query
 from datafusion_streams_spark.operators.reference import _REF_PIPELINE_ORACLE
@@ -326,7 +327,7 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = events_stream(spark, sf_dir)
     dim = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        table(spark, sf_dir, "customer")
         .select("c_custkey", "c_mktsegment")
     )
     joined = ev.join(F.broadcast(dim), ev["user_id"] == dim["c_custkey"])
@@ -461,9 +462,7 @@ def streaming_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame
     out = scratch_dir("ckpt_out_")
     ckpt = scratch_dir("ckpt_log_")
     # split the fixture into 4 files -> 4 micro-batches at 1 file/trigger
-    from datafusion_streams_spark.catalog import load_events
-
-    load_events(spark, sf_dir).select("event_type", "value").repartition(4).write.mode(
+    table(spark, sf_dir, "events").select("event_type", "value").repartition(4).write.mode(
         "overwrite"
     ).parquet(src)
 
@@ -1045,7 +1044,7 @@ def streaming_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     land = scratch_dir("csv_land_")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
     ev.repartition(4).write.mode("overwrite").option("header", "true").csv(land)
@@ -1101,7 +1100,7 @@ def streaming_avro_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_avro_py(spark)
     land = scratch_dir("avro_land_")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
     orders.repartition(4).write.format("avro_py").option("path", land).mode(
@@ -1236,7 +1235,7 @@ def streaming_multi_source_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     land = scratch_dir("union_land_")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
     ev.filter(F.col("event_id") % 2 == 0).repartition(2).write.mode(
@@ -1328,10 +1327,8 @@ def streaming_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cur = spark.table(drain(cur_agg, output_mode="complete"))
 
-    from datafusion_streams_spark.catalog import load_events
-
     ref = (
-        load_events(spark, sf_dir)
+        table(spark, sf_dir, "events")
         .filter(F.col("event_id") % 2 == 0)
         .select("event_type", band)
         .groupBy("event_type", "band")

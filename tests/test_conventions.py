@@ -13,6 +13,8 @@ cannot silently regress:
   only through Arrow (pandas_udf / mapInPandas / applyInPandas).
 - Streaming queries start only through ``streaming.microbatch.drain``,
   and every directory the engine writes comes from ``scratch.py``.
+- Fixture tables are read only through ``catalog.table``, which holds
+  the one ns->us guard for ``events.ts``.
 """
 
 import io
@@ -99,6 +101,26 @@ def test_mkdtemp_only_in_the_scratch_helper():
     assert _name_counts("mkdtemp") == {"scratch.py": 2}, (
         "take engine dirs from scratch.scratch_dir: one root per process, "
         "removed at exit"
+    )
+
+
+def test_fixture_reads_only_through_catalog_table():
+    """A query that spells a fixture path itself can skip the events
+    ns->us guard or read tables it never uses; ``catalog.table`` owns
+    the layout, and the guard has exactly one copy."""
+    inline, guards = [], []
+    for f in _source_files():
+        text, rel = f.read_text(), str(f.relative_to(PKG))
+        if 'parquet(f"{sf_dir}/' in text and rel != "catalog.py":
+            inline.append(rel)
+        if "ts div 1000" in text:
+            guards.append(rel)
+    assert inline == [], (
+        f"inline fixture reads in {inline}: read through catalog.table"
+    )
+    assert guards == ["catalog.py"], (
+        f"ns->us events guard in {guards}: keep one copy, "
+        "catalog.normalize_event_ts"
     )
 
 

@@ -82,7 +82,7 @@ def test_streaming_and_batch_events_ts_agree(spark):
     the round-3 regression broke."""
     from pyspark.sql import functions as F
 
-    from datafusion_streams_spark.catalog import load_events
+    from datafusion_streams_spark.catalog import table
     from datafusion_streams_spark.sources.kafka import events_stream
     from datafusion_streams_spark.streaming.microbatch import drain
 
@@ -98,7 +98,7 @@ def test_streaming_and_batch_events_ts_agree(spark):
             .collect()[0]
         )
 
-    batch = fingerprint(load_events(spark, SF_DIR))
+    batch = fingerprint(table(spark, SF_DIR, "events"))
     stream = fingerprint(spark.table(drain(events_stream(spark, SF_DIR).select("ts"))))
     assert (batch.mn, batch.mx, batch.s) == (stream.mn, stream.mx, stream.s), (
         f"streaming ts diverges from batch: batch=({batch.mn}, {batch.mx}) "
@@ -118,12 +118,12 @@ def test_sketch_full_tracking_margin(spark):
     future fixture generation breaks the cardinality contract."""
     from pyspark.sql import functions as F
 
-    from datafusion_streams_spark.catalog import load_events
+    from datafusion_streams_spark.catalog import table
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01",
                    "/root/testdata/sf0.1"):
         n = (
-            load_events(spark, sf_dir)
+            table(spark, sf_dir, "events")
             .agg(F.countDistinct("user_id").alias("n"))
             .first()["n"]
         )

@@ -35,6 +35,10 @@ JOB_PINS = {
     "dedup_components": 30,
     "dedup_component_stats": 32,
     "dedup_rewrite_map": 34,
+    # The registry_mix TPC-H members: one schema-inference job per table
+    # they read (3 and 5) and none for the tables they do not.
+    "q3_shipping_priority": 7,
+    "q9_product_profit": 11,
 }
 
 

@@ -466,7 +466,7 @@ def test_hll_mergeable_accuracy_and_partition_invariance(spark):
     r9: the registered query hash-checks the bound AS DATA (the oracle
     pins within_bound to 1), so the raw estimate comes from the shared
     hll_merged_estimates helper here."""
-    from datafusion_streams_spark.catalog import load_events
+    from datafusion_streams_spark.catalog import table
     from datafusion_streams_spark.operators import REGISTRY
     from datafusion_streams_spark.operators.runtime_filters import (
         hll_merged_estimates,
@@ -480,7 +480,7 @@ def test_hll_mergeable_accuracy_and_partition_invariance(spark):
     est = hll_merged_estimates(spark, SF_DIR).toPandas()
     exact = {
         r.event_type: r.n
-        for r in load_events(spark, SF_DIR)
+        for r in table(spark, SF_DIR, "events")
         .groupBy("event_type")
         .agg(F.countDistinct("user_id").alias("n"))
         .collect()
@@ -549,12 +549,12 @@ def test_bitmap_distinct_equals_count_distinct_any_partitioning(spark):
     equal COUNT(DISTINCT) under any partitioning, and container
     occupancy must never exceed the distinct count (that gap is the
     compression the pattern buys on the shuffle)."""
-    from datafusion_streams_spark.catalog import load_events
+    from datafusion_streams_spark.catalog import table
     from datafusion_streams_spark.operators import REGISTRY
 
     exact = {
         r.day: r.n
-        for r in load_events(spark, SF_DIR_SMALL)
+        for r in table(spark, SF_DIR_SMALL, "events")
         .groupBy(F.col("ts").cast("date").cast("string").alias("day"))
         .agg(F.countDistinct("user_id").alias("n"))
         .collect()
@@ -836,10 +836,10 @@ def test_peak_concurrency_and_pattern_match_partition_invariance(spark, tmp_path
     broadcast offsets) and the month-chunked pattern encode both carry
     total tiebreak orders, so re-splitting the events input into 1 or
     13 files must reproduce identical rows."""
-    from datafusion_streams_spark.catalog import load_events
+    from datafusion_streams_spark.catalog import table
     from datafusion_streams_spark.operators import REGISTRY
 
-    ev = load_events(spark, SF_DIR_SMALL)
+    ev = table(spark, SF_DIR_SMALL, "events")
     for name in ("events_peak_concurrency", "events_pattern_match"):
         fn = REGISTRY[name].fn
         base = sorted(map(tuple, fn(spark, SF_DIR_SMALL).collect()))

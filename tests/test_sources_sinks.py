@@ -25,9 +25,9 @@ from eventlog import LISTING_PREFIX  # noqa: E402
 
 
 def _events_sample(spark):
-    from datafusion_streams_spark.catalog import load_events
+    from datafusion_streams_spark.catalog import table
 
-    return load_events(spark, SF_DIR_SMALL).select(
+    return table(spark, SF_DIR_SMALL, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
 

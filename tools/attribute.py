@@ -22,10 +22,10 @@ overlap. ``dominant`` names the largest layer in wall-equivalent time:
 ``driver`` (no job running: plan build, driver-side fits, drain
 polling), or a task-time sum divided by the cores: ``python`` (worker
 run time), ``shuffle`` (write + fetch wait), ``gc``, or ``compute``
-(the rest of executor run time). Worker boot time stays out of it:
+(the rest of executor run time). Worker boot time is not reported:
 Spark 4.1 times a reused worker's initialisation from that worker's
 first boot, so on a warm session it measures the worker's age (6.7 s
-of it was recorded in a 0.28 s task).
+of it was recorded in a 0.28 s task), not a cost.
 """
 
 from __future__ import annotations
@@ -78,7 +78,6 @@ def record(name: str, w: eventlog.Window, fn_s: float, noop_s: float, cores: int
         "shuffle_write_ms": round(w.shuffle_write_ns / 1e6, 1),
         "shuffle_fetch_wait_ms": w.fetch_wait_ms,
         "spill_bytes": w.spill_bytes,
-        "py_boot_ms": w.py_boot_ms,
         "py_run_ms": w.py_run_ms,
         "py_bytes_to_worker": w.py_bytes_sent,
         "py_bytes_from_worker": w.py_bytes_recv,

@@ -360,7 +360,7 @@ def probe_stateful_streaming(spark, sf_dir: str, reps: int) -> dict:
     base_keys = int(np.unique(uid).size)
     # The fixture ts unit DRIFTS between rounds (NANOS in r1/r2, MICROS
     # since r3 — CLAUDE.md): read the unit from the arrow schema, as
-    # catalog.load_events does from the footer, so the 30-min session
+    # catalog.table does from the footer, so the 30-min session
     # gap and the copy time-shift stay 30 minutes in EVERY unit. A raw
     # micros constant against a nanos fixture would shrink the gap to
     # 1.8 ms and silently merge sessions across copies.
@@ -370,7 +370,7 @@ def probe_stateful_streaming(spark, sf_dir: str, reps: int) -> dict:
     if ticks_per_sec is None:
         raise RuntimeError(
             f"events.parquet ts has unexpected type {ts_field!r}; expected "
-            "a parquet timestamp (see catalog.load_events)"
+            "a parquet timestamp (see catalog.normalize_event_ts)"
         )
     gap_ticks = 30 * 60 * ticks_per_sec
     shift_ticks = int(ts.max() - ts.min()) + 2 * gap_ticks
@@ -654,7 +654,7 @@ def probe_skew_hotkey(spark, sf_dir: str, reps: int) -> dict:
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from datafusion_streams_spark.catalog import load_events
+    from datafusion_streams_spark.catalog import table
     from datafusion_streams_spark.functions import dsum
     from datafusion_streams_spark.operators import REGISTRY
     from datafusion_streams_spark.sources import kafka as ksrc
@@ -698,8 +698,8 @@ def probe_skew_hotkey(spark, sf_dir: str, reps: int) -> dict:
         return batch_sf
 
     def unsalted_twin(land: str) -> None:
-        ev = load_events(spark, land)
-        dim = spark.read.parquet(f"{land}/customer.parquet").select("c_custkey")
+        ev = table(spark, land, "events")
+        dim = table(spark, land, "customer").select("c_custkey")
         joined = ev.hint("shuffle_merge").join(
             dim, ev["user_id"] == dim["c_custkey"]
         )
