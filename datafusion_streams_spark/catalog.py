@@ -103,10 +103,12 @@ def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spread(spark, table(spark, sf_dir, "documents"), "doc_id")
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every fixture table as a temp view (the SQL entry point
-    the reference stubbed out and never built)."""
-    dfs = {name: table(spark, sf_dir, name) for name in TABLES}
+def register_views(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
+    """Register fixture tables as temp views (the SQL entry point the
+    reference stubbed out and never built): the ``names`` given, or
+    all ten. Each read costs a schema-inference job, so a query
+    registers only the tables its SQL text names."""
+    dfs = {name: table(spark, sf_dir, name) for name in names or TABLES}
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs

@@ -524,16 +524,6 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_labels(spark, sf_dir)
 
 
-# rounds the last min_label_components call took to converge —
-# read-only observability for tools/scale_probe.py's chain-convergence
-# probe; never consulted by engine code. Single-caller-at-a-time by
-# contract (r12 ADVICE): concurrent invocations in one process would
-# race on it — acceptable for a probe-only diagnostic; promote to a
-# thread-local (or return rounds alongside the DataFrame) if
-# concurrent use ever appears.
-LAST_CONVERGENCE_ROUNDS: int = 0
-
-
 def min_label_components(pairs: DataFrame, id_col: str) -> DataFrame:
     """(id_col, canonical_id) — connected components over an undirected
     pair graph via iterative min-label propagation with POINTER
@@ -554,9 +544,11 @@ def min_label_components(pairs: DataFrame, id_col: str) -> DataFrame:
     plan stacks join->union->groupBy per iteration and a long-diameter
     component re-plans (and re-executes on any retry) an ever-deeper
     DAG. The superseded round's blocks are unpersisted eagerly so
-    cached state stays O(|V|), not O(|V| * rounds).
+    cached state stays O(|V|), not O(|V| * rounds). That checkpoint is
+    one root execution per round in the SQL status store, so the
+    rounds a call took are the ``localCheckpoint`` executions it left
+    there (``tools/reuse_audit.local_checkpoints`` counts them).
     """
-    global LAST_CONVERGENCE_ROUNDS
     edges = (
         pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
         .union(pairs.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst")))
@@ -567,7 +559,7 @@ def min_label_components(pairs: DataFrame, id_col: str) -> DataFrame:
     max_rounds = 64
     cur = None
     prev_sum = None
-    for rounds in range(1, max_rounds + 1):
+    for _ in range(max_rounds):
         if cur is None:
             # Round 1 fused with initialization (r16): labels start at
             # identity (label(x) = x), so the first propagation's
@@ -627,7 +619,6 @@ def min_label_components(pairs: DataFrame, id_col: str) -> DataFrame:
             cur.unpersist()
         cur = nxt
         if label_sum == prev_sum:
-            LAST_CONVERGENCE_ROUNDS = rounds
             break
         prev_sum = label_sum
     else:

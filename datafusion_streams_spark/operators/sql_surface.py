@@ -32,7 +32,7 @@ def sql_entry_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Register topic/table views, run SQL — the catalog layer the
     reference left as an empty file. The SQL text is shared verbatim
     with the oracle."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "supplier", "nation")
     return spark.sql(_SQL_ENTRY)
 
 
@@ -52,7 +52,7 @@ def sql_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery (above-per-group-average). Catalyst
     decorrelates this into an aggregate + join — no per-row re-execution
     at any scale."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "supplier")
     return spark.sql(_SQL_CORRELATED)
 
 
@@ -66,7 +66,7 @@ WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal < 0)
 @query("sql_in_subquery", oracle=_SQL_IN, tags=("sql", "subquery", "semi"))
 def sql_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-subquery — planned as a (broadcastable) left-semi join."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders", "customer")
     return spark.sql(_SQL_IN)
 
 
@@ -85,7 +85,7 @@ GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linesta
 def sql_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (the general form under cube/rollup) —
     one pass, all requested grouping combinations."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "lineitem")
     return spark.sql(_SQL_GROUPING_SETS)
 
 
@@ -107,7 +107,7 @@ def sql_window_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a decimal-exact running frame in one statement the ANSI oracle
     replays verbatim (int-returning functions cast to BIGINT on both
     sides; the frame sum is decimal so partition order cannot drift)."""
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_SQL_WINDOW)
 
 
@@ -164,7 +164,7 @@ def sql_recursive_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine is spine-length rows (60) — generation cost is nil at any
     corpus scale; the join broadcasts the spine.
     """
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_RECURSIVE_SPINE_SPARK)
 
 
@@ -194,5 +194,5 @@ def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Customers with no orders drop out (inner lateral semantics),
     identically in both engines.
     """
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(_SQL_LATERAL)

@@ -88,9 +88,8 @@ def events_raw_schema(sf_dir: str) -> StructType:
 # drains every available file in ONE trigger. tools/scale_probe.py
 # sets 1 so the stateful pipelines really carry state across one
 # trigger per landed file at 10x volume — the state-store growth axis
-# a single-trigger drain cannot exercise. Same opt-in contract as
-# streaming.microbatch.PLAN_LOG: registered-query code paths are
-# byte-identical when unset.
+# a single-trigger drain cannot exercise. Registered-query code paths
+# are byte-identical when unset.
 EVENTS_MAX_FILES_PER_TRIGGER: int | None = None
 
 

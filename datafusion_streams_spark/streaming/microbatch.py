@@ -29,21 +29,6 @@ from pyspark.sql.streaming import StreamingQuery
 
 from datafusion_streams_spark.scratch import scratch_dir
 
-# Opt-in executed-plan capture for the duplicated-shuffle audit
-# (tools/reuse_audit.py). Batch queries expose their executed plan via
-# queryExecution(); a streaming query's per-trigger physical plan is
-# only reachable from the StreamingQuery handle, which the registered
-# query functions do not return — so drain() logs it here when a
-# caller installs a list. None (the default) keeps the hot path free:
-# no JVM round trip per run.
-PLAN_LOG: list[str] | None = None
-
-# Opt-in per-trigger progress capture (the stateful-streaming scale
-# probe needs batchDuration / numInputRows per micro-batch). Same
-# contract as PLAN_LOG: None keeps the hot path free; a probe installs
-# a list and reads StreamingQueryProgress dicts.
-PROGRESS_LOG: list[dict] | None = None
-
 # Stateful operators' shuffle width (= state store instance count,
 # fixed for the query's lifetime at first start). State volume scales
 # with distinct groups, not input rows, and each state store instance
@@ -53,32 +38,6 @@ STATE_PARTITIONS = "8"
 
 # Trigger cadence when a caller predicate decides completion.
 UNTIL_TRIGGER = "100 milliseconds"
-
-
-def log_executed_plan(q: StreamingQuery) -> None:
-    """Append the last micro-batch's physical plan to PLAN_LOG and the
-    query's recent per-trigger progress to PROGRESS_LOG (each a no-op
-    unless an audit/probe installed a list). The plan survives stop()
-    — StreamExecution retains its lastExecution — and is batch-shape
-    invariant under a fixed config, so the last batch stands for all;
-    recentProgress retains the last ~100 triggers, far above any
-    drain-then-stop run here."""
-    if PLAN_LOG is not None:
-        try:
-            PLAN_LOG.append(q._jsq.explainInternal(False))
-        except Exception as e:
-            # "No physical plan. Waiting for data." paths raise on some
-            # accessors. Log a SENTINEL instead of silently passing so
-            # the reuse audit can count capture gaps per query rather
-            # than under-covering while reporting clean.
-            PLAN_LOG.append(f"PLAN_UNAVAILABLE: {type(e).__name__}: {e}")
-    if PROGRESS_LOG is not None:
-        try:
-            PROGRESS_LOG.extend(q.recentProgress)
-        except Exception as e:
-            PROGRESS_LOG.append(
-                {"PROGRESS_UNAVAILABLE": f"{type(e).__name__}: {e}"}
-            )
 
 
 def _finished(
@@ -130,6 +89,11 @@ def drain(
     table. On every exit path the query is stopped and its checkpoint
     deleted; a memory table outlives a successful drain until the
     caller drops it, because the lazy result reads it.
+
+    The drain records nothing itself. Spark describes each trigger's
+    write with the query name, ``runId`` and batch id and keeps its
+    plan in the session's SQL status store, and every trigger's
+    progress reaches the session's StreamingQueryListeners.
     """
     spark = df.sparkSession
     name = f"mb_{uuid.uuid4().hex[:12]}"
@@ -171,5 +135,4 @@ def drain(
         if q is not None:
             q.stop()
         shutil.rmtree(ckpt, ignore_errors=True)
-    log_executed_plan(q)
     return name

@@ -134,6 +134,34 @@ def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(drain(agg, output_mode="complete"))
 
 
+def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """View events joined (``how``) to the same user's purchase events
+    within the following hour. Both sides are event streams under a
+    1 s watermark; their columns are ``v_``/``p_`` + ``user_id``, ``id``
+    and ``ts``."""
+
+    def side(event_type: str, prefix: str) -> DataFrame:
+        ev = (
+            events_stream(spark, sf_dir)
+            .withColumn("ts", F.col("ts").cast("timestamp"))
+            .filter(F.col("event_type") == event_type)
+            .select(
+                F.col("user_id").alias(f"{prefix}_user_id"),
+                F.col("event_id").alias(f"{prefix}_id"),
+                F.col("ts").alias(f"{prefix}_ts"),
+            )
+        )
+        return ev.withWatermark(f"{prefix}_ts", "1 second")
+
+    return side("view", "v").join(
+        side("purchase", "p"),
+        F.expr(
+            "v_user_id = p_user_id AND p_ts >= v_ts AND p_ts <= v_ts + INTERVAL 1 HOUR"
+        ),
+        how,
+    )
+
+
 _STREAM_JOIN_ORACLE = """
 SELECT
     v.user_id,
@@ -164,28 +192,7 @@ def streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join buffers forever. State shuffles on user_id (the equi-part of
     the predicate).
     """
-
-    def side(alias_type: str, prefix: str) -> DataFrame:
-        ev = (
-            events_stream(spark, sf_dir)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .filter(F.col("event_type") == alias_type)
-            .select(
-                F.col("user_id").alias(f"{prefix}_user_id"),
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-            )
-        )
-        return ev.withWatermark(f"{prefix}_ts", "1 second")
-
-    views = side("view", "v")
-    purchases = side("purchase", "p")
-    joined = views.join(
-        purchases,
-        F.expr(
-            "v_user_id = p_user_id AND p_ts >= v_ts AND p_ts <= v_ts + INTERVAL 1 HOUR"
-        ),
-    ).select(
+    joined = _view_purchase_join(spark, sf_dir, "inner").select(
         F.col("v_user_id").alias("user_id"),
         F.col("v_id").alias("view_id"),
         F.col("p_id").alias("purchase_id"),
@@ -848,29 +855,7 @@ def streaming_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     one hour of rows per user; without them a stream-stream outer join
     buffers both streams forever. State shuffles once on user_id.
     """
-
-    def side(alias_type: str, prefix: str) -> DataFrame:
-        ev = (
-            events_stream(spark, sf_dir)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .filter(F.col("event_type") == alias_type)
-            .select(
-                F.col("user_id").alias(f"{prefix}_user_id"),
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-            )
-        )
-        return ev.withWatermark(f"{prefix}_ts", "1 second")
-
-    views = side("view", "v")
-    purchases = side("purchase", "p")
-    joined = views.join(
-        purchases,
-        F.expr(
-            "v_user_id = p_user_id AND p_ts >= v_ts AND p_ts <= v_ts + INTERVAL 1 HOUR"
-        ),
-        "left_outer",
-    ).select(
+    joined = _view_purchase_join(spark, sf_dir, "left_outer").select(
         F.col("v_user_id").alias("user_id"),
         F.col("v_id").alias("view_id"),
         F.col("p_id").alias("purchase_id"),
@@ -939,29 +924,7 @@ def streaming_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     state shuffles once on user_id, and eviction is incremental per
     micro-batch — no unbounded outer-join buffer.
     """
-
-    def side(alias_type: str, prefix: str) -> DataFrame:
-        ev = (
-            events_stream(spark, sf_dir)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .filter(F.col("event_type") == alias_type)
-            .select(
-                F.col("user_id").alias(f"{prefix}_user_id"),
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-            )
-        )
-        return ev.withWatermark(f"{prefix}_ts", "1 second")
-
-    views = side("view", "v")
-    purchases = side("purchase", "p")
-    joined = views.join(
-        purchases,
-        F.expr(
-            "v_user_id = p_user_id AND p_ts >= v_ts AND p_ts <= v_ts + INTERVAL 1 HOUR"
-        ),
-        "full_outer",
-    ).select(
+    joined = _view_purchase_join(spark, sf_dir, "full_outer").select(
         F.coalesce(F.col("v_user_id"), F.col("p_user_id")).alias("user_id"),
         F.col("v_id").alias("view_id"),
         F.col("p_id").alias("purchase_id"),

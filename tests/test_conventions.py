@@ -15,8 +15,11 @@ cannot silently regress:
   and every directory the engine writes comes from ``scratch.py``.
 - Fixture tables are read only through ``catalog.table``, which holds
   the one ns->us guard for ``events.ts``.
+- The engine keeps no probe hooks: plans, triggers and convergence
+  rounds are read from Spark's own SQL status store and listeners.
 """
 
+import ast
 import io
 import tokenize
 from pathlib import Path
@@ -121,6 +124,40 @@ def test_fixture_reads_only_through_catalog_table():
     assert guards == ["catalog.py"], (
         f"ns->us events guard in {guards}: keep one copy, "
         "catalog.normalize_event_ts"
+    )
+
+
+# module globals the engine once filled only so that tools and tests
+# could look inside a run
+PROBE_HOOKS = ("PLAN_LOG", "PROGRESS_LOG", "LAST_CONVERGENCE_ROUNDS", "log_executed_plan")
+
+
+def test_no_probe_hooks_in_the_engine():
+    """Tools and tests read a run's plans, triggers and convergence
+    rounds from Spark's SQL status store and a StreamingQueryListener
+    (tools/reuse_audit.py, tools/scale_probe.py), so no hook name may
+    come back in the engine, the tools or the tests. No engine module
+    but scratch.py, which owns the one process root, rebinds a module
+    global."""
+    root = PKG.parent
+    here = Path(__file__).resolve()
+    hooks = [
+        f"{f.relative_to(root)}: {h}"
+        for d in ("datafusion_streams_spark", "tools", "tests")
+        for f in sorted((root / d).rglob("*.py"))
+        if f != here
+        for h in PROBE_HOOKS
+        if h in f.read_text()
+    ]
+    assert hooks == [], f"probe hooks {hooks}: read Spark's status store"
+    rebinders = [
+        str(f.relative_to(PKG))
+        for f in _source_files()
+        if any(isinstance(n, ast.Global) for n in ast.walk(ast.parse(f.read_text())))
+    ]
+    assert rebinders == ["scratch.py"], (
+        f"`global` statements in {rebinders}: return the value or read "
+        "it from Spark instead"
     )
 
 

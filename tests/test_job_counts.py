@@ -39,6 +39,11 @@ JOB_PINS = {
     # they read (3 and 5) and none for the tables they do not.
     "q3_shipping_priority": 7,
     "q9_product_profit": 11,
+    # SQL-surface queries: each registers only the views its text names
+    # (supplier+nation, orders+customer, orders).
+    "sql_entry_point": 5,
+    "sql_in_subquery": 4,
+    "sql_window_functions": 3,
 }
 
 

@@ -1132,7 +1132,7 @@ def test_events_stream_trigger_knob_preserves_registered_results(spark, tmp_path
 
     from datafusion_streams_spark.operators import REGISTRY
     from datafusion_streams_spark.sources import kafka as ksrc
-    from datafusion_streams_spark.streaming import microbatch as mb
+    from tools.reuse_audit import execution_mark, stream_batches
 
     assert ksrc.EVENTS_MAX_FILES_PER_TRIGGER is None  # module default
 
@@ -1147,14 +1147,13 @@ def test_events_stream_trigger_knob_preserves_registered_results(spark, tmp_path
 
     def run(knob):
         ksrc.EVENTS_MAX_FILES_PER_TRIGGER = knob
-        mb.PROGRESS_LOG = []
         try:
+            mark = execution_mark(spark)
             rows = REGISTRY["streaming_stateful_totals"].fn(spark, str(land)).collect()
-            triggers = [p for p in mb.PROGRESS_LOG if "batchDuration" in p]
+            (batches,) = stream_batches(spark, mark).values()
         finally:
             ksrc.EVENTS_MAX_FILES_PER_TRIGGER = None
-            mb.PROGRESS_LOG = None
-        return {r.user_id: (r.n_events, r.total_cents) for r in rows}, len(triggers)
+        return {r.user_id: (r.n_events, r.total_cents) for r in rows}, len(batches)
 
     whole, t_whole = run(None)
     split, t_split = run(1)

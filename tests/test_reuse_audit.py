@@ -21,7 +21,11 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.reuse_audit import exchange_fingerprints  # noqa: E402
+from tools.reuse_audit import (  # noqa: E402
+    drain_plans,
+    exchange_fingerprints,
+    execution_mark,
+)
 
 SF_SMALL = "/root/testdata/sf0.001"
 
@@ -46,18 +50,15 @@ REPRESENTATIVE = [
 @pytest.mark.parametrize("name", REPRESENTATIVE)
 def test_no_duplicated_exchange_subtrees(spark, name):
     from datafusion_streams_spark.operators import REGISTRY
-    from datafusion_streams_spark.streaming import microbatch as mb
 
-    mb.PLAN_LOG = []
-    try:
-        df = REGISTRY[name].fn(spark, SF_SMALL)
-        df.collect()
-        plans = [df._jdf.queryExecution().executedPlan().toString()]
-    finally:
-        stream_plans, mb.PLAN_LOG = mb.PLAN_LOG, None
-    gaps = [p for p in stream_plans if p.startswith("PLAN_UNAVAILABLE")]
-    assert not gaps, f"{name}: streaming plan capture gaps: {gaps}"
-    plans += [p for p in stream_plans if not p.startswith("PLAN_UNAVAILABLE")]
+    mark = execution_mark(spark)
+    df = REGISTRY[name].fn(spark, SF_SMALL)
+    df.collect()
+    plans = [df._jdf.queryExecution().executedPlan().toString()]
+    stream_plans = drain_plans(spark, mark)
+    if name.startswith("streaming_"):
+        assert stream_plans, f"{name}: no micro-batch plan in the status store"
+    plans += stream_plans
     for plan in plans:
         final = plan.split("== Initial Plan ==")[0]
         counts = Counter(exchange_fingerprints(final))

@@ -106,16 +106,18 @@ def test_components_chain_converges_in_log_rounds(spark):
     this took ~63 rounds and a 512-node chain blew the 64-round safety
     bound."""
     from datafusion_streams_spark.operators import dedup
+    from tools.reuse_audit import execution_mark, local_checkpoints
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "a_id long, b_id long"
     )
+    mark = execution_mark(spark)
     labels = {
         r.doc_id: r.canonical_id
         for r in dedup.min_label_components(pairs, "doc_id").collect()
     }
     assert labels == {i: 0 for i in range(64)}
-    assert dedup.LAST_CONVERGENCE_ROUNDS <= 8
+    assert 1 <= local_checkpoints(spark, mark) <= 8
 
 
 def test_components_match_union_find_on_random_graphs(spark):

@@ -15,13 +15,13 @@ from pyspark.sql import functions as F
 from datafusion_streams_spark.sources import kafka as ksrc
 from datafusion_streams_spark.sources.files import read_csv, read_json, read_parquet
 from datafusion_streams_spark.sources.kafka import events_stream, kafka_like_stream
-from datafusion_streams_spark.streaming import microbatch as mb
 from datafusion_streams_spark.streaming.microbatch import drain
 from tests.conftest import SF_DIR_SMALL
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "perfbench"))
 
 from eventlog import LISTING_PREFIX  # noqa: E402
+from tools.reuse_audit import execution_mark, stream_batches  # noqa: E402
 
 
 def _events_sample(spark):
@@ -105,7 +105,7 @@ def test_events_stream_runs_no_listing_job_per_trigger(spark, tmp_path, monkeypa
     batch-sized listing out of this check."""
     ids = _land_events(tmp_path, 40, 5)
     monkeypatch.setattr(ksrc, "EVENTS_MAX_FILES_PER_TRIGGER", 8)
-    monkeypatch.setattr(mb, "PROGRESS_LOG", [])
+    mark = execution_mark(spark)
     name = drain(
         events_stream(spark, str(tmp_path)).select("event_id"),
         until=lambda s, n: s.table(n).count() >= len(ids),
@@ -114,7 +114,7 @@ def test_events_stream_runs_no_listing_job_per_trigger(spark, tmp_path, monkeypa
     spark.catalog.dropTempView(name)
     assert got == ids
 
-    run_ids = {p["runId"] for p in mb.PROGRESS_LOG}
+    run_ids = {run_id for n, run_id in stream_batches(spark, mark) if n == name}
     assert len(run_ids) == 1
     job_ids = spark.sparkContext.statusTracker().getJobIdsForGroup(run_ids.pop())
     assert job_ids  # the query's jobs are in its run-id group

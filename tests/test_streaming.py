@@ -267,32 +267,29 @@ def test_kafka_live_broker_round_trip(spark):
     assert all(r.value == "Message " + r.key.split(" ")[1] for r in rows_out)
 
 
-def test_plan_log_captures_streaming_executed_plan(spark):
-    """The duplicated-shuffle audit (tools/reuse_audit.py) reaches
-    streaming queries through microbatch.PLAN_LOG: when an audit
-    installs a list, the drain runner appends each query's last
-    micro-batch physical plan; when it is None (the default), the hot
-    path does nothing. A stateful agg must surface its shuffle in the
-    captured plan — that Exchange line is exactly what the audit
-    fingerprints."""
+def test_status_store_holds_drained_stateful_plan(spark):
+    """The duplicated-shuffle audit (tools/reuse_audit.py) reads each
+    drained query's micro-batch plans from Spark's SQL status store:
+    the run named by drain's return value is there, and a stateful
+    agg's executed plan surfaces its shuffle — that Exchange line is
+    exactly what the audit fingerprints."""
+    from tools.reuse_audit import executed_plan, execution_mark, stream_batches
+
     agg = (
         kafka_like_stream(spark, SF_DIR_SMALL)
         .groupBy(F.length("key").alias("key_len"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    mb.PLAN_LOG = []
-    try:
-        drain(agg, output_mode="complete")
-        captured = list(mb.PLAN_LOG)
-    finally:
-        mb.PLAN_LOG = None
-    assert len(captured) == 1, f"expected one plan, got {len(captured)}"
-    assert "Exchange" in captured[0], captured[0][:400]
-    assert "StateStore" in captured[0], captured[0][:400]
-
-    # default path stays silent: no list installed -> nothing recorded
-    drain(kafka_like_stream(spark, SF_DIR_SMALL))
-    assert mb.PLAN_LOG is None
+    mark = execution_mark(spark)
+    name = drain(agg, output_mode="complete")
+    runs = [b for (n, _), b in stream_batches(spark, mark).items() if n == name]
+    assert len(runs) == 1, f"expected one run of {name}, got {len(runs)}"
+    plan = executed_plan(spark, runs[0][max(runs[0])])
+    assert plan.startswith("WriteToDataSourceV2 MicroBatchWrite"), plan[:400]
+    assert "Exchange" in plan, plan[:400]
+    # the plan that ran, not the append-mode re-plan Spark stores as text
+    assert "Complete" in plan, plan[:400]
+    assert "StateStore" in plan, plan[:400]
 
 
 @pytest.fixture

@@ -13,9 +13,8 @@ That class is invisible to result tests and to pre-execution plans
 This audit runs EVERY registered query at sf0.001 and fingerprints
 each shuffle exchange (normalized argument + normalized subtree) in:
 (a) the final adaptive plan of the returned batch DataFrame, and
-(b) every micro-batch physical plan the query executed along the way
-— the drain runner logs them via
-``streaming.microbatch.PLAN_LOG`` when this audit installs a list, so
+(b) the last micro-batch physical plan of every drain the query ran
+along the way, read back from Spark's SQL status store, so
 streaming-tagged queries and batch queries that drain an internal
 stream are covered too (a duplicated shuffle in a streaming plan
 repeats EVERY trigger — strictly worse than the batch class; and AQE
@@ -105,26 +104,161 @@ def exchange_fingerprints(final_plan: str) -> list[str]:
     return fps
 
 
+def _status_store(spark):
+    """The session's SQL status store (kept with the UI off) after the
+    listener bus has applied every event posted so far."""
+    jss = spark._jsparkSession
+    jss.sparkContext().listenerBus().waitUntilEmpty()
+    return jss.sharedState().statusStore()
+
+
+def execution_mark(spark) -> int:
+    """Id of the newest SQL execution in the status store, -1 when it
+    holds none: the ``since`` of a later ``root_executions`` read."""
+    store = _status_store(spark)
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).head().executionId() if n else -1
+
+
+def root_executions(spark, since: int) -> list:
+    """Root SQL executions (JVM ``SQLExecutionUIData``) after the mark
+    ``since``, in id order. A nested execution, such as a write that a
+    micro-batch or its foreachBatch function runs inside the trigger's
+    own execution, is left out.
+
+    The store evicts the executions that completed first once it holds
+    ``spark.sql.ui.retainedExecutions``. If the mark itself is gone, a
+    later execution may be gone too, so this raises rather than
+    under-report."""
+    store = _status_store(spark)
+    n = store.executionsCount()
+    if since >= 0:
+        evicted = store.execution(since).isEmpty()
+    else:
+        evicted = n >= int(spark.conf.get("spark.sql.ui.retainedExecutions"))
+    if evicted:
+        raise RuntimeError(
+            f"the SQL status store evicted executions after mark {since}; "
+            "raise spark.sql.ui.retainedExecutions or read more often"
+        )
+    k = 16  # the store lists by id: page back from the newest
+    while True:
+        k = min(k, n)
+        page = store.executionsList(n - k, k)
+        execs = [page.apply(i) for i in range(page.size())]
+        if k == n or execs[0].executionId() <= since:
+            break
+        k *= 4
+    return [
+        e for e in execs
+        if e.executionId() > since and e.rootExecutionId() == e.executionId()
+    ]
+
+
+def stream_batches(spark, since: int) -> dict[tuple[str, str], dict[int, int]]:
+    """Micro-batches of every streaming run after the mark ``since``:
+    ``{(query name, runId): {batch id: execution id}}``, one entry per
+    trigger, no-data batches included. Each trigger's write is a root
+    execution whose description Spark sets to the query name, ``id``,
+    ``runId`` and ``batch``."""
+    runs: dict[tuple[str, str], dict[int, int]] = {}
+    for e in root_executions(spark, since):
+        m = re.fullmatch(
+            r"(.*)\nid = \S+\nrunId = (\S+)\nbatch = (\d+)", e.description()
+        )
+        if m:
+            runs.setdefault((m[1], m[2]), {})[int(m[3])] = e.executionId()
+    return runs
+
+
+def local_checkpoints(spark, since: int) -> int:
+    """Eager ``localCheckpoint`` root executions after the mark
+    ``since``. Each round of ``dedup.min_label_components`` ends in
+    one, so for one call this is the rounds it took to converge."""
+    return sum(
+        e.description().startswith("localCheckpoint at")
+        for e in root_executions(spark, since)
+    )
+
+
+def executed_plan(spark, execution_id: int) -> str:
+    """The physical plan an execution ran, drawn as ``explain()`` draws
+    its tree, from the plan graph the SQL status store keeps. The
+    store's plan text will not do for a micro-batch: Spark re-plans a
+    streaming plan in append mode to describe it, so a complete-mode
+    sort would show shuffles that never ran. A node inside a
+    whole-stage-codegen stage gets its ``*(n)`` prefix, and a node met
+    a second time (a reused exchange) is drawn as a ``Reused`` leaf."""
+    graph = _status_store(spark).planGraph(execution_id)
+    text: dict[int, str] = {}
+
+    def collect(nodes, prefix: str) -> None:
+        for i in range(nodes.size()):
+            n = nodes.apply(i)
+            if n.getClass().getSimpleName() == "SparkPlanGraphCluster":
+                stage = re.search(r"\((\d+)\)", n.name())[1]
+                collect(n.nodes(), f"*({stage}) ")
+            else:
+                text[n.id()] = prefix + n.desc()
+
+    collect(graph.nodes(), "")
+    children: dict[int, list[int]] = {}
+    edges = graph.edges()
+    for i in range(edges.size()):
+        e = edges.apply(i)
+        children.setdefault(e.toId(), []).append(e.fromId())
+    has_parent = {c for cs in children.values() for c in cs}
+    lines: list[str] = []
+    seen: set[int] = set()
+
+    def draw(node: int, lead: str, glyph: str) -> None:
+        if node in seen:
+            lines.append(f"{lead}{glyph}Reused{text[node]}")
+            return
+        seen.add(node)
+        lines.append(lead + glyph + text[node])
+        lead += {"": "", "+- ": "   ", ":- ": ":  "}[glyph]
+        kids = children.get(node, [])
+        for i, child in enumerate(kids):
+            draw(child, lead, "+- " if i == len(kids) - 1 else ":- ")
+
+    for root in text:
+        if root not in has_parent:
+            draw(root, "", "")
+    return "\n".join(lines)
+
+
+def drain_plans(spark, since: int) -> list[str]:
+    """The last micro-batch plan of each ``streaming.microbatch.drain``
+    run after the mark ``since`` (drain names its queries ``mb_<hex>``).
+    Under a fixed config a run's plan does not change shape between
+    batches, so its last batch stands for all."""
+    return [
+        executed_plan(spark, batches[max(batches)])
+        for (name, _), batches in stream_batches(spark, since).items()
+        if name.startswith("mb_")
+    ]
+
+
 def main() -> int:
     from datafusion_streams_spark import get_session
     from datafusion_streams_spark.operators import REGISTRY
-    from datafusion_streams_spark.streaming import microbatch as mb
 
     sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
     spark = get_session(app_name="reuse-audit", cpus="8")
     spark.sparkContext.setLogLevel("ERROR")
 
     flagged: dict[str, object] = {}
-    plan_gaps: dict[str, int] = {}
     n_batch = 0
     n_stream_plans = 0
     for name, spec in REGISTRY.items():
-        # capture every micro-batch physical plan the query executes —
-        # streaming-tagged queries AND batch-tagged queries that drain
-        # an internal stream before their read-back aggregate. A
-        # duplicated shuffle inside a streaming plan repeats every
-        # trigger, so it is strictly worse than the batch class.
-        mb.PLAN_LOG = []
+        # every micro-batch plan the query executes is read back from
+        # the status store: streaming-tagged queries AND batch-tagged
+        # queries that drain an internal stream before their read-back
+        # aggregate. A duplicated shuffle inside a streaming plan
+        # repeats every trigger, so it is strictly worse than the batch
+        # class.
+        mark = execution_mark(spark)
         try:
             df = spec.fn(spark, sf_dir)
             df.collect()
@@ -132,16 +266,8 @@ def main() -> int:
         except Exception as e:  # audit tool: record, keep sweeping
             flagged[name] = f"ERR {type(e).__name__}: {e}"
             continue
-        finally:
-            stream_plans, mb.PLAN_LOG = mb.PLAN_LOG, None
         n_batch += 1
-        # drain() logs a PLAN_UNAVAILABLE sentinel when a plan
-        # accessor raises — count those as per-query capture gaps so
-        # under-coverage is reported, never silent (r10 ADVICE)
-        gaps = [p for p in stream_plans if p.startswith("PLAN_UNAVAILABLE")]
-        if gaps:
-            plan_gaps[name] = len(gaps)
-        stream_plans = [p for p in stream_plans if not p.startswith("PLAN_UNAVAILABLE")]
+        stream_plans = drain_plans(spark, mark)
         n_stream_plans += len(stream_plans)
         plans += [("stream", p) for p in stream_plans]
         for kind, plan in plans:
@@ -156,8 +282,7 @@ def main() -> int:
                                for fp, n in counts.items() if n > 1],
                 }
     print(json.dumps({"probe": "exchange_reuse_audit", "queries": n_batch,
-                      "streaming_plans": n_stream_plans,
-                      "plan_capture_gaps": plan_gaps, "flagged": flagged}))
+                      "streaming_plans": n_stream_plans, "flagged": flagged}))
     return 1 if flagged else 0
 
 

@@ -87,6 +87,52 @@ def _min_of(n: int, fn) -> float:
     return min(runs)
 
 
+class TriggerLog:
+    """Every trigger's ``batchDuration`` per streaming run on one
+    session, collected by a StreamingQueryListener."""
+
+    def __init__(self, spark):
+        from pyspark.sql.streaming.listener import StreamingQueryListener
+
+        self.spark = spark
+        self.runs: list[str] = []
+        self.durations: dict[str, list[int]] = {}
+        self.ended: set[str] = set()
+        log = self
+
+        class _Listener(StreamingQueryListener):
+            def onQueryStarted(self, event):
+                log.runs.append(str(event.runId))
+
+            def onQueryProgress(self, event):
+                run = str(event.progress.runId)
+                log.durations.setdefault(run, []).append(event.progress.batchDuration)
+
+            def onQueryTerminated(self, event):
+                log.ended.add(str(event.runId))
+
+        self.listener = _Listener()
+        spark.streams.addListener(self.listener)
+
+    def mark(self) -> int:
+        return len(self.runs)
+
+    def batch_durations(self, since: int) -> list[int]:
+        """Trigger durations (ms) of the runs started after the mark
+        ``since``. Progress and termination events reach the listener
+        through the listener bus, so it is flushed first; a run without
+        its terminated event would be read short, so that raises."""
+        self.spark._jsparkSession.sparkContext().listenerBus().waitUntilEmpty()
+        runs = self.runs[since:]
+        live = [r for r in runs if r not in self.ended]
+        if live:
+            raise RuntimeError(f"streaming runs {live} have not terminated")
+        return [d for r in runs for d in self.durations.get(r, [])]
+
+    def close(self) -> None:
+        self.spark.streams.removeListener(self.listener)
+
+
 def probe_avro_roundtrip(spark, reps: int) -> dict:
     """Write+read+count through format("avro_py") at 1x/10x/100x rows
     (8 write partitions, like files_avro_roundtrip)."""
@@ -302,8 +348,8 @@ def probe_stateful_streaming(spark, sf_dir: str, reps: int) -> dict:
     scaled event landings, one micro-batch per file
     (sources.kafka.EVENTS_MAX_FILES_PER_TRIGGER = 1 — the opt-in knob;
     registered code paths are otherwise byte-identical), and reads
-    per-trigger latency from StreamingQueryProgress via
-    streaming.microbatch.PROGRESS_LOG.
+    per-trigger latency from StreamingQueryProgress through a
+    StreamingQueryListener on the probe's session (``TriggerLog``).
 
     Three landings, all 10 files = 10 triggers so the ratios isolate
     data growth from trigger-count overhead:
@@ -350,7 +396,6 @@ def probe_stateful_streaming(spark, sf_dir: str, reps: int) -> dict:
 
     from datafusion_streams_spark.operators import REGISTRY
     from datafusion_streams_spark.sources import kafka as ksrc
-    from datafusion_streams_spark.streaming import microbatch as mb
 
     src = pq.read_table(os.path.join(sf_dir, "events.parquet"))
     n_base = src.num_rows
@@ -414,6 +459,7 @@ def probe_stateful_streaming(spark, sf_dir: str, reps: int) -> dict:
 
     queries = ("streaming_stateful_totals", "streaming_sessionize_state")
     out: dict = {}
+    triggers = TriggerLog(spark)
     for variant in ("1x", "10x_rows", "10x_keys", "100x_rows"):
         land = tempfile.mkdtemp(prefix=f"scale_probe_state_{variant}_")
         variant_reps = 1 if variant == "100x_rows" else reps
@@ -426,22 +472,13 @@ def probe_stateful_streaming(spark, sf_dir: str, reps: int) -> dict:
                     walls, trigs = [], []
                     out_rows = None
                     for _ in range(variant_reps):
-                        mb.PROGRESS_LOG = []
-                        try:
-                            t0 = time.perf_counter()
-                            out_rows = REGISTRY[qname].fn(spark, land).count()
-                            walls.append(time.perf_counter() - t0)
-                            trigs.append(
-                                [p for p in mb.PROGRESS_LOG
-                                 if "batchDuration" in p]
-                            )
-                        finally:
-                            # an exception mid-rep must not leak a live
-                            # list into the module global (opt-in
-                            # hot-path-free contract)
-                            mb.PROGRESS_LOG = None
+                        mark = triggers.mark()
+                        t0 = time.perf_counter()
+                        out_rows = REGISTRY[qname].fn(spark, land).count()
+                        walls.append(time.perf_counter() - t0)
+                        trigs.append(triggers.batch_durations(mark))
                     b = min(range(len(walls)), key=walls.__getitem__)
-                    durs = [int(p["batchDuration"]) for p in trigs[b]]
+                    durs = trigs[b]
                     per[qname] = {
                         "wall_sec": round(walls[b], 3),
                         "rows_per_sec": round(n_rows / walls[b], 1),
@@ -479,7 +516,7 @@ def probe_stateful_streaming(spark, sf_dir: str, reps: int) -> dict:
                         prefix="scale_probe_sessionize_sink_"
                     )
                     try:
-                        mb.PROGRESS_LOG = []
+                        mark = triggers.mark()
                         t0 = time.perf_counter()
                         drain(
                             sessionize_updates(spark, land),
@@ -489,11 +526,7 @@ def probe_stateful_streaming(spark, sf_dir: str, reps: int) -> dict:
                             timeout_sec=900,
                         )
                         wall = time.perf_counter() - t0
-                        durs = [
-                            int(p["batchDuration"])
-                            for p in mb.PROGRESS_LOG
-                            if "batchDuration" in p
-                        ]
+                        durs = triggers.batch_durations(mark)
                         sunk = spark.read.parquet(sink_dir).count()
                         per["sessionize_parquet_sink"] = {
                             "wall_sec": round(wall, 3),
@@ -506,13 +539,13 @@ def probe_stateful_streaming(spark, sf_dir: str, reps: int) -> dict:
                             "max_trigger_ms": max(durs) if durs else None,
                         }
                     finally:
-                        mb.PROGRESS_LOG = None
                         shutil.rmtree(sink_dir, ignore_errors=True)
             finally:
                 ksrc.EVENTS_MAX_FILES_PER_TRIGGER = None
             out[variant] = per
         finally:
             shutil.rmtree(land, ignore_errors=True)
+    triggers.close()
     out["ratio_10x_rows"] = {
         q: round(out["10x_rows"][q]["wall_sec"] / out["1x"][q]["wall_sec"], 2)
         for q in queries
@@ -783,9 +816,11 @@ def probe_cc_chain(spark, reps: int) -> dict:
 
     Before r12's pointer-doubling step (dedup.min_label_components),
     chain512 needed ~511 rounds and would have blown the 64-round
-    safety bound; with doubling it converges in ~10. Rounds come from
-    dedup.LAST_CONVERGENCE_ROUNDS (observability counter)."""
+    safety bound; with doubling it converges in ~10. Rounds are the
+    call's ``localCheckpoint`` root executions in the SQL status store:
+    each round ends in one."""
     from datafusion_streams_spark.operators import dedup
+    from tools.reuse_audit import execution_mark, local_checkpoints
 
     def chain_pairs(n_docs: int, n_chains: int):
         rows = [
@@ -802,10 +837,11 @@ def probe_cc_chain(spark, reps: int) -> dict:
         pairs = chain_pairs(n_docs, n_chains)
         walls, rounds = [], None
         for _ in range(reps):
+            mark = execution_mark(spark)
             t0 = time.perf_counter()
             got = dedup.min_label_components(pairs, "doc_id").count()
             walls.append(time.perf_counter() - t0)
-            rounds = dedup.LAST_CONVERGENCE_ROUNDS
+            rounds = local_checkpoints(spark, mark)
             assert got == n_docs * n_chains
         out[name] = {
             "docs": n_docs * n_chains,
