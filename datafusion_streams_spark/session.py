@@ -35,6 +35,16 @@ def get_session(app_name: str = "datafusion-streams-spark", cpus: str | None = N
         columnar batches, not pickled rows.
       - parquet filter/aggregate pushdown on: scans read only what the
         query needs (verified in tests/test_plans.py).
+      - streaming checkpoints through the FileSystem-API manager: every
+        offsets, commits and file-source log entry and every HDFS-backed
+        state-store delta file is written to a temp file and renamed.
+        Spark's default manager renames through Hadoop's FileContext,
+        whose link-status checks call ``RawLocalFileSystem
+        .getFileLinkStatus``; without Hadoop's native library that forks
+        ``readlink``, 8 times per file (data and ``.crc``, in both rename
+        layers). The FileSystem API checks with ``getFileStatus`` instead,
+        which forks nothing, and it verifies the ``.crc`` on read (a
+        corrupted offsets file fails the restart, tests/test_checkpoint.py).
     """
     cpus = cpus or _DEFAULT_CPUS
     builder = (
@@ -53,6 +63,11 @@ def get_session(app_name: str = "datafusion-streams-spark", cpus: str | None = N
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing"
+            ".FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -64,3 +64,21 @@ def test_no_duplicated_exchange_subtrees(spark, name):
         counts = Counter(exchange_fingerprints(final))
         dups = {fp.splitlines()[0][:110]: n for fp, n in counts.items() if n > 1}
         assert not dups, f"{name}: duplicated shuffle subtrees: {dups}"
+
+
+@pytest.mark.slow
+def test_every_streaming_query_leaves_one_plan(spark):
+    """The audit fingerprints every streaming query, not only those
+    that drain through ``streaming.microbatch.drain``:
+    ``streaming_checkpoint_recovery`` starts its own query twice on one
+    checkpoint and counts once, by its checkpoint's id."""
+    from datafusion_streams_spark.operators import REGISTRY
+
+    names = [n for n in REGISTRY if n.startswith("streaming_")]
+    plans = {}
+    for name in names:
+        mark = execution_mark(spark)
+        REGISTRY[name].fn(spark, SF_SMALL).collect()
+        plans[name] = len(drain_plans(spark, mark))
+    assert len(names) == 24
+    assert plans == dict.fromkeys(names, 1), plans

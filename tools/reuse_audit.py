@@ -13,7 +13,7 @@ That class is invisible to result tests and to pre-execution plans
 This audit runs EVERY registered query at sf0.001 and fingerprints
 each shuffle exchange (normalized argument + normalized subtree) in:
 (a) the final adaptive plan of the returned batch DataFrame, and
-(b) the last micro-batch physical plan of every drain the query ran
+(b) the last micro-batch physical plan of every streaming query it ran
 along the way, read back from Spark's SQL status store, so
 streaming-tagged queries and batch queries that drain an internal
 stream are covered too (a duplicated shuffle in a streaming plan
@@ -155,19 +155,27 @@ def root_executions(spark, since: int) -> list:
     ]
 
 
+def _batch_writes(spark, since: int):
+    """``(name, id, runId, batch id, execution id)`` of every
+    micro-batch write after the mark ``since``, in execution order. Each
+    trigger's write is a root execution whose description Spark sets to
+    the query name, ``id`` (kept in the checkpoint, so a resumed query
+    keeps it), ``runId`` and ``batch``."""
+    for e in root_executions(spark, since):
+        m = re.fullmatch(
+            r"(.*)\nid = (\S+)\nrunId = (\S+)\nbatch = (\d+)", e.description()
+        )
+        if m:
+            yield m[1], m[2], m[3], int(m[4]), e.executionId()
+
+
 def stream_batches(spark, since: int) -> dict[tuple[str, str], dict[int, int]]:
     """Micro-batches of every streaming run after the mark ``since``:
     ``{(query name, runId): {batch id: execution id}}``, one entry per
-    trigger, no-data batches included. Each trigger's write is a root
-    execution whose description Spark sets to the query name, ``id``,
-    ``runId`` and ``batch``."""
+    trigger, no-data batches included."""
     runs: dict[tuple[str, str], dict[int, int]] = {}
-    for e in root_executions(spark, since):
-        m = re.fullmatch(
-            r"(.*)\nid = \S+\nrunId = (\S+)\nbatch = (\d+)", e.description()
-        )
-        if m:
-            runs.setdefault((m[1], m[2]), {})[int(m[3])] = e.executionId()
+    for name, _, run_id, batch, execution in _batch_writes(spark, since):
+        runs.setdefault((name, run_id), {})[batch] = execution
     return runs
 
 
@@ -229,15 +237,16 @@ def executed_plan(spark, execution_id: int) -> str:
 
 
 def drain_plans(spark, since: int) -> list[str]:
-    """The last micro-batch plan of each ``streaming.microbatch.drain``
-    run after the mark ``since`` (drain names its queries ``mb_<hex>``).
-    Under a fixed config a run's plan does not change shape between
-    batches, so its last batch stands for all."""
-    return [
-        executed_plan(spark, batches[max(batches)])
-        for (name, _), batches in stream_batches(spark, since).items()
-        if name.startswith("mb_")
-    ]
+    """The last micro-batch plan of each streaming query that ran after
+    the mark ``since``: every ``streaming.microbatch.drain`` run, and a
+    query stopped and resumed on one checkpoint
+    (``streaming_checkpoint_recovery``) once, by its checkpoint's
+    ``id``. Under a fixed config a query's plan does not change shape
+    between batches, so its last batch stands for all."""
+    last: dict[str, int] = {}
+    for _, query_id, _, _, execution in _batch_writes(spark, since):
+        last[query_id] = execution
+    return [executed_plan(spark, execution) for execution in last.values()]
 
 
 def main() -> int:
