@@ -1,13 +1,15 @@
 """Embedding clustering — the semantic-dedup / corpus-organization
-primitive (k-means over the ``embeddings`` table).
+primitive (k-means over the ``embeddings`` table) and the PQ / IVF-PQ
+ANN scans built on the same codebooks.
 
-Distributed Lloyd's iterations, Spark-first: assignment is an
-Arrow-batched numpy pass with the (tiny) centroid model broadcast in
-the task closure; the centroid update is a single groupBy whose per-
-dimension sums are EXACT INTEGERS, so the model update is bit-identical
-under any partitioning or combine order. This is the SemDeDup-style
-clustering step (Abbas et al. 2023) a training-data pipeline runs
-before within-cluster near-dedup.
+Distributed Lloyd's iterations, Spark-first: ``_lloyd_step`` is the one
+fit. It assigns in an Arrow-batched numpy pass with the (tiny) model in
+the task closure and folds each task's EXACT INTEGER per-dimension sums
+on the driver, so the model update is bit-identical under any
+partitioning or combine order. k-means is one 64-dim codebook, PQ
+training eight 8-dim ones. This is the SemDeDup-style clustering step
+(Abbas et al. 2023) a training-data pipeline runs before within-cluster
+near-dedup.
 
 Float-parity design (the driver value-hashes against DuckDB):
 
@@ -20,25 +22,37 @@ Float-parity design (the driver value-hashes against DuckDB):
 - Distances accumulate dimension-sequentially (numpy ``acc += d_i`` in
   dim order == DuckDB ``list_reduce`` left fold), never BLAS matmul,
   so squared distances are bit-identical and the argmin (ties broken
-  by lowest centroid id) agrees.
+  by lowest centroid id) agrees. ``_nearest`` is the one numpy
+  spelling of that fold (k-means and PQ fits and assignment, PQ
+  encoding, IVF cells) and ``_sq_dist`` the one driver-side scalar
+  spelling (ADC lookup table, IVF probe).
 
 Scale: the corpus shuffles ZERO times per iteration — assignment is
-map-only against the broadcast model, and the update reduces k×dim
-integers via partial aggregation. Driver traffic is k rows per
-iteration (the standard distributed-k-means model exchange), never the
-corpus. The reference has no clustering operator; capability parity is
-with its aggregate+groupBy surface (/root/reference/src/kafka/
-execution.rs:34 scan feeding arbitrary DataFusion aggregates).
+map-only against the closure-shipped model, and each task returns at
+most (codebooks × k) rows of partial sums. Driver traffic is that
+model exchange, never the corpus. The reference has no clustering
+operator; capability parity is with its aggregate+groupBy surface
+(/root/reference/src/kafka/execution.rs:34 scan feeding arbitrary
+DataFusion aggregates).
 """
 
 from __future__ import annotations
 
+import sys as _sys
+
+from pyspark import cloudpickle as _cloudpickle
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datafusion_streams_spark.catalog import table
 from datafusion_streams_spark.functions import as_double_array
 from datafusion_streams_spark.operators import query
+
+# The executor closures call the module-level kernel below, which
+# cloudpickle would ship by reference: by-value registration keeps the
+# tasks runnable when the driver's cwd is not the repo root (see
+# operators/multimodal.py).
+_cloudpickle.register_pickle_by_value(_sys.modules[__name__])
 
 EMBED_DIM = 64
 K_CLUSTERS = 8
@@ -77,14 +91,41 @@ def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _assign(qdf: DataFrame, cids: list[int], centroids: list[list[float]]) -> DataFrame:
-    """Nearest-centroid assignment: one Arrow pass, model in closure.
+def _nearest(x, cents):
+    """Each row's nearest-centroid INDEX (rows of ``x`` against rows of
+    ``cents``, both float64 arrays): the squared distance accumulates
+    dimension by dimension, matching the SQL left fold bit for bit, and
+    ``argmin`` returns the first minimum, so ties go to the lowest
+    index."""
+    import numpy as np
 
-    Accumulates squared distance dimension-by-dimension (sequential,
-    matching the SQL left fold bit-for-bit); ties go to the lowest
-    centroid id (numpy argmin returns the first minimum and ``cids``
-    is ascending).
-    """
+    acc = np.zeros((x.shape[0], cents.shape[0]), dtype=np.float64)
+    for d in range(cents.shape[1]):
+        diff = x[:, d, None] - cents[None, :, d]
+        acc += diff * diff
+    return np.argmin(acc, axis=1)
+
+
+def _sq_dist(a, b) -> float:
+    """``_nearest``'s fold for one pair of vectors on the driver."""
+    acc = 0.0
+    for u, v in zip(a, b):
+        diff = u - v
+        acc += diff * diff
+    return acc
+
+
+def _book(rows, lo: int, hi: int):
+    """A codebook ``(lo, hi, cids, cents)`` over dims ``[lo, hi)``
+    seeded from ``rows`` (the lowest vec_ids): code i is row i's slice."""
+    cents = [[v / float(QSCALE) for v in r["vq"][lo:hi]] for r in rows]
+    return lo, hi, list(range(len(rows))), cents
+
+
+def _assign(qdf: DataFrame, cids: list[int], centroids: list[list[float]]) -> DataFrame:
+    """Nearest-centroid assignment: one Arrow pass, model in closure;
+    ``cids`` is ascending, so ``_nearest``'s tie-break is the lowest
+    centroid id."""
     cids_local = list(cids)
     cent_local = [list(c) for c in centroids]
 
@@ -98,15 +139,10 @@ def _assign(qdf: DataFrame, cids: list[int], centroids: list[list[float]]) -> Da
             if len(pdf) == 0:
                 continue
             x = np.array(pdf["vq"].tolist(), dtype=np.float64) / float(QSCALE)
-            acc = np.zeros((len(pdf), cn.shape[0]), dtype=np.float64)
-            for d in range(cn.shape[1]):
-                diff = x[:, d, None] - cn[None, :, d]
-                acc += diff * diff
-            lab = np.argmin(acc, axis=1)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
-                    "cluster": cid_arr[lab],
+                    "cluster": cid_arr[_nearest(x, cn)],
                     "vq": pdf["vq"],
                 }
             )
@@ -114,102 +150,68 @@ def _assign(qdf: DataFrame, cids: list[int], centroids: list[list[float]]) -> Da
     return qdf.mapInPandas(fn, "vec_id long, cluster long, vq array<bigint>")
 
 
-def _update(assigned: DataFrame) -> tuple[list[int], list[list[float]]]:
-    """New model from exact integer sums: k rows to the driver."""
-    aggs = [F.count(F.lit(1)).alias("n")] + [
-        F.sum(F.element_at("vq", d + 1)).alias(f"s{d}") for d in range(EMBED_DIM)
-    ]
-    rows = sorted(
-        assigned.groupBy("cluster").agg(*aggs).collect(), key=lambda r: r["cluster"]
-    )
-    cids = [int(r["cluster"]) for r in rows]
-    cents = [
-        [r[f"s{d}"] / (r["n"] * float(QSCALE)) for d in range(EMBED_DIM)] for r in rows
-    ]
-    return cids, cents
-
-
-def _assign_update(
-    qdf: DataFrame, cids: list[int], centroids: list[list[float]]
-) -> tuple[list[int], list[list[float]]]:
-    """One fused Lloyd update: ``_update(_assign(qdf, ...))`` with the
-    per-cluster partial sums folded INSIDE the assignment pass (guide
-    §2.3 aggregate-before-you-shuffle, applied to the Python boundary):
-    each task emits at most k rows of (cluster, count, integer dim
-    sums) instead of shipping every row's quantized vector back across
-    Arrow into a 65-column JVM aggregation. The final fold runs on the
-    driver over (tasks × k) rows in arbitrary-precision Python ints.
-
-    Bit-identity with the unfused path: the assignment math is
-    ``_assign``'s verbatim (same sequential dimension fold, same argmin
-    lowest-id tie-break), and the update is a sum of exact integers —
-    associative under any grouping — divided once, so the model floats
-    are identical. (r16; measured ~0.4 s/iteration locally, and at
-    scale the corpus no longer crosses the Python→JVM boundary twice
-    per iteration.)
-    """
-    cids_local = list(cids)
-    cent_local = [list(c) for c in centroids]
+def _lloyd_step(qdf: DataFrame, books: list) -> list:
+    """One Lloyd update of every codebook ``(lo, hi, cids, cents)`` in
+    ``books`` (each clusters dims ``[lo, hi)``) in ONE map pass: each
+    task assigns its rows with ``_nearest`` and emits, per (book, code),
+    the row count and the exact int64 dim sums — at most books × k rows
+    instead of the corpus. The driver folds them in Python ints and
+    divides once, so the new model is the same under any partitioning
+    or combine order. Codes no row chose drop out, as in the oracle's
+    ``GROUP BY``."""
 
     def fn(batches):
         import numpy as np
         import pandas as pd
 
-        cn = np.array(cent_local, dtype=np.float64)
-        cid_arr = np.array(cids_local, dtype=np.int64)
-        counts: dict[int, int] = {}
-        sums: dict[int, "np.ndarray"] = {}
+        model = [
+            (lo, hi, np.array(cids, dtype=np.int64), np.array(cents, dtype=np.float64))
+            for lo, hi, cids, cents in books
+        ]
+        counts: dict[tuple[int, int], int] = {}
+        sums: dict[tuple[int, int], "np.ndarray"] = {}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             vq = np.array(pdf["vq"].tolist(), dtype=np.int64)
             x = vq.astype(np.float64) / float(QSCALE)
-            acc = np.zeros((len(pdf), cn.shape[0]), dtype=np.float64)
-            for d in range(cn.shape[1]):
-                diff = x[:, d, None] - cn[None, :, d]
-                acc += diff * diff
-            lab = np.argmin(acc, axis=1)
-            cl = cid_arr[lab]
-            for c in np.unique(cl):
-                mask = cl == c
-                key = int(c)
-                s = vq[mask].sum(axis=0)  # exact int64 partial sums
-                if key in counts:
-                    counts[key] += int(mask.sum())
-                    sums[key] += s
-                else:
-                    counts[key] = int(mask.sum())
-                    sums[key] = s
+            for b, (lo, hi, cid_arr, cn) in enumerate(model):
+                codes = cid_arr[_nearest(x[:, lo:hi], cn)]
+                for c in np.unique(codes):
+                    mask = codes == c
+                    key = (b, int(c))
+                    s = vq[mask, lo:hi].sum(axis=0)  # exact int64 partial sums
+                    if key in counts:
+                        counts[key] += int(mask.sum())
+                        sums[key] += s
+                    else:
+                        counts[key] = int(mask.sum())
+                        sums[key] = s
         if not counts:
             return
         keys = sorted(counts)
         yield pd.DataFrame(
             {
-                "cluster": keys,
+                "book": [k[0] for k in keys],
+                "code": [k[1] for k in keys],
                 "n": [counts[k] for k in keys],
                 "s": [sums[k].tolist() for k in keys],
             }
         )
 
-    rows = qdf.mapInPandas(fn, "cluster long, n long, s array<bigint>").collect()
-    agg_n: dict[int, int] = {}
-    agg_s: dict[int, list[int]] = {}
+    rows = qdf.mapInPandas(fn, "book int, code long, n long, s array<bigint>").collect()
+    n: dict[tuple[int, int], int] = {}
+    s: dict[tuple[int, int], list[int]] = {}
     for r in rows:
-        c = int(r["cluster"])
-        if c in agg_n:
-            agg_n[c] += r["n"]
-            s = agg_s[c]
-            for d, v in enumerate(r["s"]):
-                s[d] += v
-        else:
-            agg_n[c] = int(r["n"])
-            agg_s[c] = [int(v) for v in r["s"]]
-    cids_out = sorted(agg_n)
-    cents_out = [
-        [agg_s[c][d] / (agg_n[c] * float(QSCALE)) for d in range(EMBED_DIM)]
-        for c in cids_out
-    ]
-    return cids_out, cents_out
+        key = (r["book"], r["code"])
+        n[key] = n.get(key, 0) + r["n"]
+        s[key] = [a + v for a, v in zip(s.get(key, [0] * len(r["s"])), r["s"])]
+    fitted = []
+    for b, (lo, hi, _, _) in enumerate(books):
+        codes = sorted(c for bk, c in n if bk == b)
+        cents = [[v / (n[b, c] * float(QSCALE)) for v in s[b, c]] for c in codes]
+        fitted.append((lo, hi, codes, cents))
+    return fitted
 
 
 def _dist_sql(vq: str, c: str) -> str:
@@ -287,12 +289,11 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition exchange for a number the scan footer already holds
     # (_quantized is row-preserving)
     k = kmeans_k(table(spark, sf_dir, "embeddings").count())
-    init_rows = qdf.orderBy("vec_id").limit(k).collect()
-    cids = list(range(k))
-    cents = [[v / float(QSCALE) for v in r["vq"]] for r in init_rows]
+    books = [_book(qdf.orderBy("vec_id").limit(k).collect(), 0, EMBED_DIM)]
     for _ in range(KMEANS_ITERS):
-        cids, cents = _assign_update(qdf, cids, cents)
+        books = _lloyd_step(qdf, books)
     qdf.unpersist()
+    _, _, cids, cents = books[0]
     return _assign(qdf, cids, cents)
 
 
@@ -414,125 +415,29 @@ IVFPQ_COARSE = 8  # coarse cells (deterministic init: lowest vec_ids)
 IVFPQ_PROBE = 2  # cells scanned per query (the recall/cost dial)
 
 
-def _pq_train(qdf: DataFrame) -> tuple[dict[int, list[int]], dict[int, list[list[float]]]]:
-    """One Lloyd update per subspace codebook (init: the PQ_K lowest
-    vec_ids' subvectors).
-
-    Returns (per-subspace code ids, per-subspace centroids). All model
-    state is m×k×subdim floats — driver/closure-sized at any corpus
-    scale; the only exchange is the codebook update reduce (m×k rows).
-    """
-    init = qdf.orderBy("vec_id").limit(PQ_K).collect()
-    cids = {s: list(range(PQ_K)) for s in range(PQ_M)}
-    cents = {
-        s: [
-            [v / float(QSCALE) for v in r["vq"][s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM]]
-            for r in init
-        ]
-        for s in range(PQ_M)
-    }
-
-    # One fused codebook-update pass (r16, the _assign_update shape):
-    # the former explode(m subspaces) → mapInPandas assign → m×k-wide
-    # JVM aggregation shipped every subvector across the Python→JVM
-    # boundary twice; here each task slices the subspaces in numpy,
-    # assigns with the identical per-dimension fold + lowest-code
-    # argmin tie-break, and emits at most m×k rows of exact-integer
-    # partial sums, folded on the driver in Python ints. Same model
-    # bit-for-bit (integer sums are grouping-invariant; one final
-    # division), one pass instead of an 8× row explode.
-    cids_local = {s: list(v) for s, v in cids.items()}
-    cents_local = {s: [list(c) for c in v] for s, v in cents.items()}
-
-    def fn(batches):
-        import numpy as np
-        import pandas as pd
-
-        cn_all = {
-            s: np.array(cents_local[s], dtype=np.float64) for s in range(PQ_M)
-        }
-        cid_all = {
-            s: np.array(cids_local[s], dtype=np.int64) for s in range(PQ_M)
-        }
-        counts: dict[tuple[int, int], int] = {}
-        sums: dict[tuple[int, int], "np.ndarray"] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vq = np.array(pdf["vq"].tolist(), dtype=np.int64)
-            x = vq.astype(np.float64) / float(QSCALE)
-            for s in range(PQ_M):
-                xs = x[:, s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM]
-                vs = vq[:, s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM]
-                cn = cn_all[s]
-                acc = np.zeros((xs.shape[0], cn.shape[0]), dtype=np.float64)
-                for d in range(cn.shape[1]):
-                    diff = xs[:, d, None] - cn[None, :, d]
-                    acc += diff * diff
-                lab = np.argmin(acc, axis=1)
-                code_arr = cid_all[s][lab]
-                for c in np.unique(code_arr):
-                    mask = code_arr == c
-                    key = (s, int(c))
-                    sm = vs[mask].sum(axis=0)  # exact int64 partials
-                    if key in counts:
-                        counts[key] += int(mask.sum())
-                        sums[key] += sm
-                    else:
-                        counts[key] = int(mask.sum())
-                        sums[key] = sm
-        if not counts:
-            return
-        keys = sorted(counts)
-        yield pd.DataFrame(
-            {
-                "sub": [k[0] for k in keys],
-                "code": [k[1] for k in keys],
-                "n": [counts[k] for k in keys],
-                "s": [sums[k].tolist() for k in keys],
-            }
-        )
-
-    rows = qdf.mapInPandas(fn, "sub int, code long, n long, s array<bigint>").collect()
-    agg_n: dict[tuple[int, int], int] = {}
-    agg_s: dict[tuple[int, int], list[int]] = {}
-    for r in rows:
-        key = (int(r["sub"]), int(r["code"]))
-        if key in agg_n:
-            agg_n[key] += r["n"]
-            s = agg_s[key]
-            for d, v in enumerate(r["s"]):
-                s[d] += v
-        else:
-            agg_n[key] = int(r["n"])
-            agg_s[key] = [int(v) for v in r["s"]]
-    cids = {s: [] for s in range(PQ_M)}
-    cents = {s: [] for s in range(PQ_M)}
-    for sub, code in sorted(agg_n):
-        key = (sub, code)
-        cids[sub].append(code)
-        cents[sub].append(
-            [agg_s[key][d] / (agg_n[key] * float(QSCALE)) for d in range(PQ_SUBDIM)]
-        )
-    return cids, cents
+def _pq_train(qdf: DataFrame, init) -> list:
+    """One Lloyd update of the PQ_M subspace codebooks, seeded with the
+    PQ_K lowest vec_ids' subvectors (``init``, ordered by vec_id). All
+    model state is m×k×subdim floats — driver/closure-sized at any
+    corpus scale."""
+    seed = [
+        _book(init[:PQ_K], lo, lo + PQ_SUBDIM) for lo in range(0, EMBED_DIM, PQ_SUBDIM)
+    ]
+    return _lloyd_step(qdf, seed)
 
 
-def _pq_dtab(q_rows, cids, cents) -> dict[int, list[list[float]]]:
+def _pq_dtab(q_rows, books) -> dict[int, list[list[float]]]:
     """Driver-side exact ADC lookup table: dense per-(query, sub) arrays
-    indexed by code (codes < PQ_K), each distance computed with the
-    oracle's sequential per-dimension fold."""
+    indexed by code (codes < PQ_K), each distance ``_sq_dist``'s
+    sequential per-dimension fold."""
     dtab: dict[int, list[list[float]]] = {}
     for r in q_rows:
         per_sub = []
-        for s in range(PQ_M):
-            qsv = [v / float(QSCALE) for v in r["vq"][s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM]]
+        for lo, hi, cids, cents in books:
+            qsv = [v / float(QSCALE) for v in r["vq"][lo:hi]]
             dense = [float("inf")] * PQ_K
-            for code, cent in zip(cids[s], cents[s]):
-                acc = 0.0
-                for i in range(PQ_SUBDIM):
-                    diff = qsv[i] - cent[i]
-                    acc += diff * diff
-                dense[code] = acc
+            for code, cent in zip(cids, cents):
+                dense[code] = _sq_dist(qsv, cent)
             per_sub.append(dense)
         dtab[int(r["vec_id"])] = per_sub
     return dtab
@@ -540,8 +445,7 @@ def _pq_dtab(q_rows, cids, cents) -> dict[int, list[list[float]]]:
 
 def _adc_scan(
     qdf: DataFrame,
-    cids,
-    cents,
+    books,
     dtab: dict[int, list[list[float]]],
     coarse: list[list[float]] | None = None,
     probed: dict[int, frozenset[int]] | None = None,
@@ -556,8 +460,6 @@ def _adc_scan(
     scores a query only against vectors in that query's probed cells —
     the IVF shortlist fused into the scan, still zero corpus exchange.
     """
-    cids_local = {s: list(v) for s, v in cids.items()}
-    cents_local = {s: [list(c) for c in v] for s, v in cents.items()}
     coarse_local = [list(c) for c in coarse] if coarse is not None else None
     probed_local = {q: frozenset(v) for q, v in probed.items()} if probed else None
 
@@ -571,6 +473,10 @@ def _adc_scan(
             q: [np.array(dtab[q][s], dtype=np.float64) for s in range(PQ_M)]
             for q in q_ids
         }
+        model = [
+            (lo, hi, np.array(cids, dtype=np.int64), np.array(cents, dtype=np.float64))
+            for lo, hi, cids, cents in books
+        ]
         cn_coarse = (
             np.array(coarse_local, dtype=np.float64) if coarse_local is not None else None
         )
@@ -579,24 +485,11 @@ def _adc_scan(
                 continue
             vq = np.array(pdf["vq"].tolist(), dtype=np.float64) / float(QSCALE)
             vec_ids = pdf["vec_id"].to_numpy()
-            # encode: nearest centroid per subspace (sequential dim fold)
+            # encode: nearest code per subspace
             codes = np.empty((len(pdf), PQ_M), dtype=np.int64)
-            for s in range(PQ_M):
-                x = vq[:, s * PQ_SUBDIM : (s + 1) * PQ_SUBDIM]
-                cn = np.array(cents_local[s], dtype=np.float64)
-                acc = np.zeros((x.shape[0], cn.shape[0]), dtype=np.float64)
-                for d in range(PQ_SUBDIM):
-                    diff = x[:, d, None] - cn[None, :, d]
-                    acc += diff * diff
-                lab = np.argmin(acc, axis=1)
-                codes[:, s] = np.array(cids_local[s], dtype=np.int64)[lab]
-            cells = None
-            if cn_coarse is not None:
-                acc = np.zeros((len(pdf), cn_coarse.shape[0]), dtype=np.float64)
-                for d in range(cn_coarse.shape[1]):
-                    diff = vq[:, d, None] - cn_coarse[None, :, d]
-                    acc += diff * diff
-                cells = np.argmin(acc, axis=1)  # ties -> lowest cell id
+            for s, (lo, hi, cid_arr, cn) in enumerate(model):
+                codes[:, s] = cid_arr[_nearest(vq[:, lo:hi], cn)]
+            cells = _nearest(vq, cn_coarse) if cn_coarse is not None else None
             # ADC: left fold over subspaces, then partial top-k per query
             out = {"q_id": [], "vec_id": [], "adc_dist": []}
             for q in q_ids:
@@ -783,7 +676,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (elementwise numpy adds, s=0..m-1) — the same left fold as
     the oracle's nested (((d0+d1)+d2)+...)."""
     qdf = _quantized(spark, sf_dir).cache()
-    cids, cents = _pq_train(qdf)
+    books = _pq_train(qdf, qdf.orderBy("vec_id").limit(PQ_K).collect())
 
     # query subvectors (tiny by construction) -> exact ADC lookup table,
     # computed with the same per-dimension fold as the oracle
@@ -792,8 +685,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fused scan below recomputes one map-only pass instead of
     # pinning the quantized corpus in executor storage
     qdf.unpersist()
-    dtab = _pq_dtab(q_rows, cids, cents)
-    return _adc_rank(_adc_scan(qdf, cids, cents, dtab))
+    return _adc_rank(_adc_scan(qdf, books, _pq_dtab(q_rows, books)))
 
 
 @query(
@@ -821,25 +713,20 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cell assignment); ADC inherits ann_pq_adc's left-fold discipline.
     """
     qdf = _quantized(spark, sf_dir).cache()
-    cids, cents = _pq_train(qdf)
-    coarse_rows = qdf.orderBy("vec_id").limit(IVFPQ_COARSE).collect()
-    coarse = [[v / float(QSCALE) for v in r["vq"]] for r in coarse_rows]
+    # one init read serves both fits: vec_id is unique, so the first
+    # IVFPQ_COARSE of the lowest max(PQ_K, IVFPQ_COARSE) rows are the
+    # oracle's ORDER BY vec_id LIMIT IVFPQ_COARSE
+    init = qdf.orderBy("vec_id").limit(max(PQ_K, IVFPQ_COARSE)).collect()
+    books = _pq_train(qdf, init)
+    _, _, _, coarse = _book(init[:IVFPQ_COARSE], 0, EMBED_DIM)
     q_rows = qdf.filter(F.col("vec_id") < PQ_QUERY_MAX_ID).collect()
     qdf.unpersist()
-    dtab = _pq_dtab(q_rows, cids, cents)
-    # probe selection on the driver: queries are tiny; the fold order
-    # matches the oracle's list_reduce exactly
+    # probe selection on the driver: queries are tiny; ties in distance
+    # go to the lower cell id, as in the oracle's ORDER BY dist, cell
     probed: dict[int, frozenset[int]] = {}
     for r in q_rows:
         qv = [v / float(QSCALE) for v in r["vq"]]
-        dists = []
-        for cell, c in enumerate(coarse):
-            acc = 0.0
-            for i in range(EMBED_DIM):
-                diff = qv[i] - c[i]
-                acc += diff * diff
-            dists.append((acc, cell))
-        probed[int(r["vec_id"])] = frozenset(
-            cell for _, cell in sorted(dists)[:IVFPQ_PROBE]
-        )
-    return _adc_rank(_adc_scan(qdf, cids, cents, dtab, coarse=coarse, probed=probed))
+        dists = sorted((_sq_dist(qv, c), cell) for cell, c in enumerate(coarse))
+        probed[int(r["vec_id"])] = frozenset(cell for _, cell in dists[:IVFPQ_PROBE])
+    dtab = _pq_dtab(q_rows, books)
+    return _adc_rank(_adc_scan(qdf, books, dtab, coarse=coarse, probed=probed))

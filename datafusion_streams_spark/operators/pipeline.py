@@ -123,8 +123,6 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Per-stratum keep rates in 16ths (md5-nibble thresholds): downsample
 # the dominant language, keep the rest whole — the mixture-balancing
 # step of a training-data pipeline.
-STRATA_NIBBLE = {"en": 4, "de": 12, "fr": 12, "es": 12}  # /16; others: 16 (keep all)
-
 _STRATified_CASE = (
     "CASE lang WHEN 'en' THEN 4 WHEN 'de' THEN 12 WHEN 'fr' THEN 12 "
     "WHEN 'es' THEN 12 ELSE 16 END"

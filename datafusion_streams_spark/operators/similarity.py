@@ -91,10 +91,6 @@ def _dot_sql(a: str, b: str) -> str:
     )
 
 
-def _cosine_sql(a: str, b: str) -> str:
-    return f"{_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
-
-
 # Normalize once per vector, then pair score is a single fold. Both
 # engines perform the identical per-element division then the identical
 # left fold, so scores stay bit-identical — and per-pair cost drops 3x

@@ -22,6 +22,36 @@ from datafusion_streams_spark.operators import query
 # before its timestamp.
 # ---------------------------------------------------------------------------
 
+
+def _asof_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The as-of family's one input: purchases (kind 0, duplicate
+    same-user same-ts rows pre-aggregated to MAX value, mirroring a
+    deterministic ASOF pick) unioned with clicks (kind 1, null
+    purchase columns). Each query carries ``purchase_ts`` /
+    ``purchase_value`` through its own user_id window; kind orders a
+    purchase before a same-instant click."""
+    ev = table(spark, sf_dir, "events")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        "event_id", "user_id", "ts", F.lit(1).alias("kind"),
+        F.lit(None).cast("timestamp_ntz").alias("purchase_ts"),
+        F.lit(None).cast("double").alias("purchase_value"),
+    )
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .groupBy("user_id", "ts")
+        .agg(F.max("value").alias("purchase_value"))
+        .select(
+            F.lit(None).cast("long").alias("event_id"),
+            "user_id",
+            "ts",
+            F.lit(0).alias("kind"),
+            F.col("ts").alias("purchase_ts"),
+            "purchase_value",
+        )
+    )
+    return purchases.unionByName(clicks)
+
+
 _ASOF_ORACLE = """
 WITH clicks AS (
     SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'
@@ -55,26 +85,7 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-ts purchases are pre-aggregated (MAX value) to mirror a
     deterministic ASOF pick.
     """
-    ev = table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts", F.lit(1).alias("kind"),
-        F.lit(None).cast("timestamp_ntz").alias("purchase_ts"),
-        F.lit(None).cast("double").alias("purchase_value"),
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("purchase_value"))
-        .select(
-            F.lit(None).cast("long").alias("event_id"),
-            "user_id",
-            "ts",
-            F.lit(0).alias("kind"),
-            F.col("ts").alias("purchase_ts"),
-            "purchase_value",
-        )
-    )
-    tagged = purchases.unionByName(clicks)
+    tagged = _asof_tagged(spark, sf_dir)
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "kind")
@@ -215,26 +226,7 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     order (kind 0 before 1), making it visible to the same-instant
     click — exactly DuckDB's ASOF <= tie rule, hash-verified.
     """
-    ev = table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts", F.lit(1).alias("kind"),
-        F.lit(None).cast("timestamp_ntz").alias("purchase_ts"),
-        F.lit(None).cast("double").alias("purchase_value"),
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("purchase_value"))
-        .select(
-            F.lit(None).cast("long").alias("event_id"),
-            "user_id",
-            "ts",
-            F.lit(0).alias("kind"),
-            F.col("ts").alias("purchase_ts"),
-            "purchase_value",
-        )
-    )
-    tagged = purchases.unionByName(clicks)
+    tagged = _asof_tagged(spark, sf_dir)
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.desc("ts"), "kind")
@@ -308,26 +300,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side CASE over epoch-microsecond deltas (exact integers, no
     float parity risk).
     """
-    ev = table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts", F.lit(1).alias("kind"),
-        F.lit(None).cast("timestamp_ntz").alias("p_ts"),
-        F.lit(None).cast("double").alias("p_val"),
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("p_val"))
-        .select(
-            F.lit(None).cast("long").alias("event_id"),
-            "user_id",
-            "ts",
-            F.lit(0).alias("kind"),
-            F.col("ts").alias("p_ts"),
-            "p_val",
-        )
-    )
-    tagged = purchases.unionByName(clicks)
+    tagged = _asof_tagged(spark, sf_dir)
     wb = (
         Window.partitionBy("user_id")
         .orderBy("ts", "kind")
@@ -343,10 +316,10 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "ts",
         "kind",
-        F.last("p_ts", ignorenulls=True).over(wb).alias("b_ts"),
-        F.last("p_val", ignorenulls=True).over(wb).alias("b_val"),
-        F.last("p_ts", ignorenulls=True).over(wf).alias("f_ts"),
-        F.last("p_val", ignorenulls=True).over(wf).alias("f_val"),
+        F.last("purchase_ts", ignorenulls=True).over(wb).alias("b_ts"),
+        F.last("purchase_value", ignorenulls=True).over(wb).alias("b_val"),
+        F.last("purchase_ts", ignorenulls=True).over(wf).alias("f_ts"),
+        F.last("purchase_value", ignorenulls=True).over(wf).alias("f_val"),
     ).filter(F.col("kind") == 1)
     us = lambda c: F.unix_micros(F.col(c).cast("timestamp"))  # noqa: E731
     back_wins = F.col("b_ts").isNotNull() & (
@@ -406,26 +379,7 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Completes the as-of family: backward (join_asof), forward
     (join_asof_forward), nearest (join_asof_nearest), tolerance (here).
     """
-    ev = table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts", F.lit(1).alias("kind"),
-        F.lit(None).cast("timestamp_ntz").alias("purchase_ts"),
-        F.lit(None).cast("double").alias("purchase_value"),
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("purchase_value"))
-        .select(
-            F.lit(None).cast("long").alias("event_id"),
-            "user_id",
-            "ts",
-            F.lit(0).alias("kind"),
-            F.col("ts").alias("purchase_ts"),
-            "purchase_value",
-        )
-    )
-    tagged = purchases.unionByName(clicks)
+    tagged = _asof_tagged(spark, sf_dir)
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "kind")

@@ -2179,8 +2179,6 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hashed linear quality classifier inference (round 4)
 # ---------------------------------------------------------------------------
 
-_CLF_DIM = 256  # weight-table size; two md5 hex chars address it exactly
-
 _CLF_ORACLE = rf"""
 WITH tok AS (
     SELECT doc_id, t

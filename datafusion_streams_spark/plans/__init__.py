@@ -40,11 +40,3 @@ def read_schema_columns(df: DataFrame) -> list[str]:
 
 def uses_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
-
-
-def count_shuffles(df: DataFrame) -> int:
-    return formatted_plan(df).count("Exchange")
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return formatted_plan(df).count("WholeStageCodegen")

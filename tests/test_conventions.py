@@ -17,6 +17,8 @@ cannot silently regress:
   the one ns->us guard for ``events.ts``.
 - The engine keeps no probe hooks: plans, triggers and convergence
   rounds are read from Spark's own SQL status store and listeners.
+- The bit-parity nearest-centroid fold has one numpy spelling,
+  ``clustering._nearest``.
 """
 
 import ast
@@ -97,6 +99,14 @@ def test_write_stream_only_in_the_runner():
     assert _name_counts("writeStream") == ALLOWED_WRITESTREAM, (
         "start streaming queries through streaming.microbatch.drain, which "
         "raises on timeout and stops the query and removes its checkpoint"
+    )
+
+
+def test_nearest_centroid_fold_has_one_copy():
+    assert _name_counts("argmin") == {"operators/clustering.py": 1}, (
+        "assign nearest centroids through clustering._nearest (and "
+        "clustering._sq_dist on the driver): one spelling of the "
+        "bit-parity distance fold"
     )
 
 

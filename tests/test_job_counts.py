@@ -31,7 +31,7 @@ JOB_PINS = {
     "dedup_semantic_clusters": 12,
     "pipeline_curation_v2": 28,
     "ann_pq_adc": 9,
-    "ann_ivf_pq": 10,
+    "ann_ivf_pq": 9,
     "dedup_components": 30,
     "dedup_component_stats": 32,
     "dedup_rewrite_map": 34,

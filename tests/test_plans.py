@@ -98,8 +98,10 @@ def test_kmeans_assignment_never_shuffles_corpus(spark):
     """Lloyd iterations must be map-only against the broadcast model:
     the assignment DataFrame's plan may contain only the initial
     parallelism-restoring exchange, never a corpus shuffle per
-    iteration, and the model update must partial-aggregate before its
-    exchange (k rows cross the wire, not the corpus)."""
+    iteration, and the fused model update (``_lloyd_step``) returns
+    per-task partial sums instead of exchanging anything: its stages,
+    read from Spark's status store by job group, write exactly one
+    shuffle, ``_quantized``'s repartition of the corpus."""
     from datafusion_streams_spark.operators import clustering
 
     # the registered kmeans query caches its quantized relation; a cache
@@ -108,15 +110,25 @@ def test_kmeans_assignment_never_shuffles_corpus(spark):
     spark.catalog.clearCache()
     qdf = clustering._quantized(spark, SF_DIR)
     init = qdf.orderBy("vec_id").limit(clustering.K_CLUSTERS).collect()
-    cents = [[v / clustering.QSCALE for v in r["vq"]] for r in init]
-    assigned = clustering._assign(qdf, list(range(clustering.K_CLUSTERS)), cents)
+    book = clustering._book(init, 0, clustering.EMBED_DIM)
+    _, _, cids, cents = book
+    assigned = clustering._assign(qdf, cids, cents)
     plan = formatted_plan(assigned)
     n_exchanges = plan.count("hashpartitioning(") + plan.count("rangepartitioning(")
     assert n_exchanges == 1, f"assignment must not add shuffles:\n{plan}"
-    update_plan = formatted_plan(
-        assigned.groupBy("cluster").count()
-    )
-    assert "partial_count" in update_plan or "HashAggregate" in update_plan
+
+    sc = spark.sparkContext
+    group = "kmeans-fit-shuffles"
+    sc.setJobGroup(group, group)
+    try:
+        clustering._lloyd_step(qdf, [book])
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    stages = {s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds}
+    written = [n for n in (store.lastStageAttempt(s).shuffleWriteRecords() for s in stages) if n]
+    assert written == [qdf.count()], f"the fit must shuffle only the corpus repartition: {written}"
 
 
 def test_contamination_probe_is_broadcast(spark):

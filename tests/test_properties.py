@@ -157,27 +157,26 @@ def test_components_lineage_truncated(spark):
 @given(nparts=st.sampled_from([2, 7, 16]))
 @settings(max_examples=3, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_kmeans_model_partitioning_invariance(spark, nparts):
-    """The k-means model update must be EXACT under any partitioning:
-    integer-quantized per-dimension sums commute, so the fitted model —
-    and therefore every assignment — is identical however the corpus is
-    split. This is the property that makes the clustering reproducible
-    on a 1000-executor cluster."""
-    from datafusion_streams_spark.operators import clustering
+    """The shipped Lloyd update (``_lloyd_step``) must be EXACT under
+    any partitioning: integer-quantized per-dimension sums commute, so
+    the fitted model — and therefore every assignment — is identical
+    however the corpus is split. Checked for the k-means codebook and
+    for the eight PQ subspace codebooks. This is the property that
+    makes the clustering reproducible on a 1000-executor cluster."""
+    from datafusion_streams_spark.operators import clustering as cl
 
     spark.catalog.clearCache()
-    base = clustering._quantized(spark, SF_DIR_SMALL)
-    init = base.orderBy("vec_id").limit(clustering.K_CLUSTERS).collect()
-    cents = [[v / clustering.QSCALE for v in r["vq"]] for r in init]
-    cids = list(range(clustering.K_CLUSTERS))
-    reference = None
-    for parts in (4, nparts):
-        qdf = base.repartition(parts)
-        c2, m2 = clustering._update(clustering._assign(qdf, cids, cents))
-        model = (c2, [[x for x in row] for row in m2])
-        if reference is None:
-            reference = model
-        else:
-            assert model == reference, f"model drifted at {parts} partitions"
+    base = cl._quantized(spark, SF_DIR_SMALL)
+    init = base.orderBy("vec_id").limit(max(cl.K_CLUSTERS, cl.PQ_K)).collect()
+    kmeans = [cl._book(init[: cl.K_CLUSTERS], 0, cl.EMBED_DIM)]
+    pq = [
+        cl._book(init[: cl.PQ_K], lo, lo + cl.PQ_SUBDIM)
+        for lo in range(0, cl.EMBED_DIM, cl.PQ_SUBDIM)
+    ]
+    for books in (kmeans, pq):
+        fitted = [cl._lloyd_step(base.repartition(parts), books) for parts in (4, nparts)]
+        assert fitted[0] == fitted[1], f"model drifted at {nparts} partitions"
+        assert len(fitted[0]) == len(books) and all(b[2] for b in fitted[0])
 
 
 def test_sessionize_partition_invariance(spark):

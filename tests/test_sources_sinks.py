@@ -13,7 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from datafusion_streams_spark.sources import kafka as ksrc
-from datafusion_streams_spark.sources.files import read_csv, read_json, read_parquet
 from datafusion_streams_spark.sources.kafka import events_stream, kafka_like_stream
 from datafusion_streams_spark.streaming.microbatch import drain
 from tests.conftest import SF_DIR_SMALL
@@ -36,8 +35,10 @@ def test_csv_roundtrip(spark, tmp_path):
     src = _events_sample(spark)
     d = str(tmp_path)
     src.write.mode("overwrite").option("header", "true").csv(d)
-    back = read_csv(
-        spark, d, schema="event_id long, user_id long, event_type string, value double"
+    back = (
+        spark.read.option("header", "true")
+        .schema("event_id long, user_id long, event_type string, value double")
+        .csv(d)
     )
     assert back.count() == src.count()
     assert back.agg(F.sum("event_id")).first()[0] == src.agg(F.sum("event_id")).first()[0]
@@ -47,9 +48,9 @@ def test_json_roundtrip(spark, tmp_path):
     src = _events_sample(spark)
     d = str(tmp_path)
     src.write.mode("overwrite").json(d)
-    back = read_json(
-        spark, d, schema="event_id long, user_id long, event_type string, value double"
-    )
+    back = spark.read.schema(
+        "event_id long, user_id long, event_type string, value double"
+    ).json(d)
     assert back.count() == src.count()
     assert back.agg(F.sum("event_id")).first()[0] == src.agg(F.sum("event_id")).first()[0]
 
@@ -60,7 +61,7 @@ def test_parquet_roundtrip_partitioned(spark, tmp_path):
     src = _events_sample(spark)
     d = str(tmp_path)
     src.write.mode("overwrite").partitionBy("event_type").parquet(d)
-    back = read_parquet(spark, d).filter(F.col("event_type") == "purchase")
+    back = spark.read.parquet(d).filter(F.col("event_type") == "purchase")
     expected = src.filter(F.col("event_type") == "purchase").count()
     assert back.count() == expected
     plan = back._sc._jvm.PythonSQLUtils.explainString(back._jdf.queryExecution(), "formatted")
